@@ -11,11 +11,20 @@ resize_aspect_ratio pads every image to a multiple of 256 per side
 (imageops.py resize_aspect_ratio), collapsing the corpus into a handful of
 distinct tensor shapes.
 
-Output parity: phase A is detect_pre + infer_pre, phase C is infer_post +
-detect_post — the exact single-image functions detector.detect composes —
-so (kind, text, media_ref, order) rows are identical to the per-span path;
-tests/test_batched_detect.py asserts row equality AND a strictly lower
-forward-call count.
+Streaming: the span list is one pass. Each span's tensor joins its shape
+group; a group is forwarded and finished (DBNet post, reading order, OCR)
+as soon as it holds max_batch_size tensors, and the leftover groups flush
+at the end. So a task holds at most one partial group per tensor shape,
+whatever the Arrow batch length: over 512x512 synth pages the tracemalloc
+peak is about 23 MB for 8 spans and for 64 alike. The chunks are those of
+grouping the whole list by shape and cutting each group in span order, so
+forward calls and pack ratio do not depend on when a group flushes.
+
+Output parity: staging is detect_pre + infer_pre, finishing is infer_post
++ detect_post — the exact single-image functions detector.detect
+composes — so (kind, text, media_ref, order) rows are identical to the
+per-span path and come out in span order; tests/test_batched_detect.py
+asserts row equality AND a strictly lower forward-call count.
 
 auto_rotate note: common.rs:40-44 makes the rerun fire unconditionally and
 DISCARD the first pass (see detector.detect); the rerun differs only by
@@ -23,7 +32,8 @@ auto_rotate=False, so this path computes the rerun directly — one forward
 where the per-span path spends two, with bit-identical output.
 
 Poison isolation (SURVEY.md §2.10) is preserved at span granularity: a
-failing span in phase A/C errors alone, and a forward that raises on a
+span that raises while staging or finishing (OCR and reading order
+included) errors alone, and a forward that raises on a
 PACKED batch falls back to per-image forwards so only the poisoned image
 errors — one bad payload can never take its batch-mates down with it.
 """
@@ -63,6 +73,29 @@ def effective_pre(pre: PreprocessorOptions) -> PreprocessorOptions:
     )
 
 
+def _error_row(span: tuple, e: Exception) -> list[tuple]:
+    doc_id, ref, off = span
+    return [(doc_id, "error", f"{type(e).__name__}: {e}"[:500], str(ref),
+             int(off) * SPAN_STRIDE)]
+
+
+def _span_rows(span: tuple, img: np.ndarray, quads) -> list[tuple]:
+    """OCR + reading order for one detected span, exactly as
+    oracle.extract_media_span."""
+    doc_id, ref, off = span
+    ref, off = str(ref), int(off)
+    if not quads:
+        return [(doc_id, "media", "", ref, span_order(off, 0))]
+    ranks = reading_order(quads)
+    texts = decode_quads(img, quads)
+    return [
+        (doc_id, "media", text, ref, order)
+        for order, text in sorted(
+            (span_order(off, int(r)), t) for r, t in zip(ranks, texts)
+        )
+    ]
+
+
 def extract_media_spans_batched(
     spans: list[tuple],
     opts: DetectorOptions,
@@ -74,83 +107,68 @@ def extract_media_spans_batched(
     """[(doc_id, media_ref, offset)] -> rows
     (doc_id, kind, text, media_ref, order), packing forwards across spans.
 
-    Three phases over the whole span list:
-      A. per span: render + detect_pre + infer_pre -> (tensor, ctx); spans
-         on the rearrange path (already patch-batched internally) run the
-         single-image detect directly.
-      B. group tensors by shape, stack <= opts.max_batch_size per forward
-         call; on a packed-call exception, retry each image alone so only
-         the poisoned one errors.
-      C. per span: infer_post + detect_post -> quads, then OCR + reading
-         order exactly as oracle.extract_media_span.
+    One streaming pass over the span list:
+      * per span: render + detect_pre + infer_pre -> (tensor, ctx), and the
+        tensor joins its shape group. Spans on the rearrange path (already
+        patch-batched internally) run the single-image detect and finish at
+        once.
+      * a shape group that reaches opts.max_batch_size tensors is flushed:
+        one stacked forward call, then per image infer_post + detect_post +
+        reading order + OCR. On a packed-call exception each image is
+        retried alone, so only the poisoned one errors.
+      * after the last span, the leftover groups flush in sorted-shape
+        order.
+    Each chunk is max_batch_size consecutive spans of one tensor shape
+    (the last per shape may be shorter), so forward calls do not depend on
+    when a group flushes. At most one partial group per shape is held, so
+    memory is bounded by the shape count, not the batch length. Rows come
+    out in span order; every span's finish runs inside its own ``try``, so
+    a raising span is one kind='error' row.
     """
     forward = forward or get_forward("synthetic")
     pre_eff = effective_pre(pre)
+    out: list[list[tuple]] = [[] for _ in spans]
 
-    staged = []  # (idx, img, add_border, img_h, tensor, ctx)
-    quads_by_idx: dict[int, tuple] = {}  # idx -> (img, quads)
-    err_by_idx: dict[int, Exception] = {}
+    def flush(chunk: list) -> None:
+        heads = None
+        if len(chunk) > 1:
+            try:
+                db, mask = forward(np.stack([it[4] for it in chunk]))
+                heads = [(db[j : j + 1], mask[j : j + 1]) for j in range(len(chunk))]
+            except Exception:  # noqa: BLE001 — fall back to per-image
+                heads = None
+        for j, (idx, img, add_border, img_h, tensor, ctx) in enumerate(chunk):
+            try:
+                if heads is None:
+                    db_j, mask_j = forward(tensor[None, ...])
+                else:
+                    db_j, mask_j = heads[j]
+                quads, mask2d = infer_post(db_j, mask_j, ctx, opts)
+                quads, _m = detect_post(quads, mask2d, add_border, pre_eff, img_h)
+                out[idx] = _span_rows(spans[idx], img, quads)
+            except Exception as e:  # noqa: BLE001 — poison isolation
+                out[idx] = _error_row(spans[idx], e)
 
-    for idx, (_doc_id, ref, _off) in enumerate(spans):
+    groups: dict[tuple, list] = defaultdict(list)
+    for idx, span in enumerate(spans):
+        ref = str(span[1])
         try:
-            if str(ref) in fault_refs:
+            if ref in fault_refs:
                 raise RuntimeError("fault injection")
-            img = render_media(str(ref))
+            img = render_media(ref)
             work, add_border, img_h = detect_pre(img, pre_eff)
             if should_rearrange(work, opts.detect_size):
                 quads, _mask = detect(img, forward, opts, pre_eff)
-                quads_by_idx[idx] = (img, quads)
-            else:
-                tensor, ctx = infer_pre(work, opts)
-                staged.append((idx, img, add_border, img_h, tensor, ctx))
+                out[idx] = _span_rows(span, img, quads)
+                continue
+            tensor, ctx = infer_pre(work, opts)
         except Exception as e:  # noqa: BLE001 — poison isolation
-            err_by_idx[idx] = e
-
-    groups: dict[tuple, list] = defaultdict(list)
-    for item in staged:
-        groups[item[4].shape].append(item)
-    for _shape, items in sorted(groups.items()):
-        for i0 in range(0, len(items), opts.max_batch_size):
-            chunk = items[i0 : i0 + opts.max_batch_size]
-            heads = None
-            if len(chunk) > 1:
-                try:
-                    db, mask = forward(np.stack([it[4] for it in chunk]))
-                    heads = [
-                        (db[j : j + 1], mask[j : j + 1]) for j in range(len(chunk))
-                    ]
-                except Exception:  # noqa: BLE001 — fall back to per-image
-                    heads = None
-            for j, (idx, img, add_border, img_h, tensor, ctx) in enumerate(chunk):
-                try:
-                    if heads is None:
-                        db_j, mask_j = forward(tensor[None, ...])
-                    else:
-                        db_j, mask_j = heads[j]
-                    quads, mask2d = infer_post(db_j, mask_j, ctx, opts)
-                    quads, _m = detect_post(quads, mask2d, add_border, pre_eff, img_h)
-                    quads_by_idx[idx] = (img, quads)
-                except Exception as e:  # noqa: BLE001 — poison isolation
-                    err_by_idx[idx] = e
-
-    rows: list[tuple] = []
-    for idx, (doc_id, ref, off) in enumerate(spans):
-        ref, off = str(ref), int(off)
-        if idx in err_by_idx:
-            e = err_by_idx[idx]
-            rows.append(
-                (doc_id, "error", f"{type(e).__name__}: {e}"[:500], ref,
-                 off * SPAN_STRIDE)
-            )
+            out[idx] = _error_row(span, e)
             continue
-        img, quads = quads_by_idx[idx]
-        if not quads:
-            rows.append((doc_id, "media", "", ref, span_order(off, 0)))
-            continue
-        ranks = reading_order(quads)
-        texts = decode_quads(img, quads)
-        for order, text in sorted(
-            (span_order(off, int(r)), t) for r, t in zip(ranks, texts)
-        ):
-            rows.append((doc_id, "media", text, ref, order))
-    return rows
+        group = groups[tensor.shape]
+        group.append((idx, img, add_border, img_h, tensor, ctx))
+        if len(group) >= opts.max_batch_size:
+            flush(groups.pop(tensor.shape))
+    for _shape, group in sorted(groups.items()):
+        flush(group)
+    return [row for rows in out for row in rows]

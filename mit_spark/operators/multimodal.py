@@ -112,9 +112,12 @@ def decode_external(fmt: str, data: bytes) -> np.ndarray:
     reference's native fixture format — is decoded by the stdlib codec in
     operators/png_codec.py (zlib + struct + numpy un-filtering; no PIL),
     normalizing gray/gray+alpha/RGBA to RGB the way PIL's convert("RGB")
-    does (alpha dropped, luminance replicated). JPEG/video stay env-gated:
-    PIL/cv2/av are attempted and a clearly marked NotImplementedError is
-    raised otherwise."""
+    does (alpha dropped, luminance replicated). JPEG is decoded by the
+    stdlib codec in operators/jpeg_codec.py for its baseline subset
+    (gray or 4:4:4 colour, no restart markers); other JPEGs go to PIL when
+    it is installed and otherwise raise the codec's ValueError. Any other
+    format raises NotImplementedError (WAV and MJPEG-AVI have their own
+    stdlib codecs, operators/wav_codec.py and operators/avi_codec.py)."""
     if fmt == "png":
         from mit_spark.operators.png_codec import decode_png
 

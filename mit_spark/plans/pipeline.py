@@ -18,6 +18,12 @@ Everything relational is built-in; the only Python is the Arrow-batched
 media UDF (vectorized-batch UDF execution per "Accelerating Python UDFs in
 Vectorized Query Execution", CIDR 2022 — see PAPERS.md). No collect(), no
 driver-side loops, no custom partitioner — scales by adding executors.
+
+The cost at that UDF boundary is paid per task, not per row: each Python
+task spends about 0.25 CPU-s in pyspark's worker set-up before the UDF
+runs (measured on a 4-core host). So the media stage runs two tasks per
+slot (``media_task_count``), and the UDF streams each task's longer Arrow
+batches in bounded memory.
 """
 
 from __future__ import annotations
@@ -66,25 +72,27 @@ def _media_udf(detector_conf: dict, pre_conf: dict, fault_inject_refs: tuple = (
 
 
 def media_task_count(par: int) -> int:
-    """Media-stage task count for ``par`` execution slots.
+    """Media-stage task count for ``par`` execution slots: two per slot.
 
-    Task granularity: small tasks bound the straggler tail of the stage
-    (idle time in the LAST wave, whose relative cost grows with
-    parallelism), but each task also carries a fixed scheduling + python
-    worker round-trip cost. Target ~128 tasks, clamped to [4x, 16x] the
-    slot count: measured at local[32], 128 tasks run the media stage 38%
-    faster than a fixed 16x (512 tasks), while low-parallelism levels keep
-    the same fine granularity (par=2 -> 32 tasks, par=8 -> 128) so the
-    N->4N scaling ladder is unaffected. On a 1000-executor cluster the 4x
-    floor keeps tasks plentiful (4000).
+    Every Python task pays a fixed cost before any UDF code runs: pyspark's
+    worker calls ``importlib.invalidate_caches()`` once per task, and on
+    Python 3.11 that re-reads pyspark.zip's central directory for every
+    cached zipimporter. Measured on a 4-core host, a trivial 64-task Python
+    stage costs 4-5 s of wall and about 0.25 CPU-s per task. Two tasks per
+    slot pay it 8 times per pass at local[4] (64 tasks would cost ~16
+    CPU-s), and the second task per slot still absorbs a straggler. On the
+    same host one ``extract()`` pass with 64 / 16 / 8 / 4 media tasks took
+    7.75 / 3.35 / 2.41 / 2.17 s over 1,200 docs with 156 media spans, and
+    18.6 / 14.0 / 13.2 / 13.3 s over 300 docs with 1,528 media spans.
+    Worker memory does not grow with the longer Arrow batches this gives,
+    because the media UDF streams them (operators/batched_detect.py).
 
     ``par`` comes from defaultParallelism at PLAN time, which is correct on
-    a static cluster (the north rule's N / 4N shape). Under dynamic
-    allocation it reflects the executors held when the plan is built —
-    merely suboptimal (the 4x floor still yields several waves as the
-    cluster grows), never a correctness issue; pin
-    spark.default.parallelism to the target size if scheduling there."""
-    return par * max(4, min(16, 128 // max(par, 1)))
+    a static cluster. Under dynamic allocation it reflects the executors
+    held when the plan is built — merely suboptimal, never a correctness
+    issue; pin spark.default.parallelism to the target size if scheduling
+    there."""
+    return 2 * par
 
 
 def extract_flat(spark: SparkSession, docs_df: DataFrame, config: PipelineConfig | None = None) -> DataFrame:

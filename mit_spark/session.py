@@ -10,8 +10,11 @@ BENCH/BASELINE.md):
   * OMP/BLAS threads = 1: 32 python workers x N BLAS threads oversubscribes
     (the reference pins ORT intra=4/inter=2 for ONE process,
     base-util/src/onnx.rs:59-60; for a worker-per-core model 1 is correct).
-  * Arrow batch size bounded: each media span costs ~0.05-0.6 s in the UDF;
-    small batches keep tasks responsive and bound worker memory.
+  * Arrow batches capped at 256 records. Worker memory does not grow with
+    the cap: the media UDF streams a batch shape group by shape group
+    (operators/batched_detect.py). The media task count, not the batch
+    size, sets the fixed per-task cost (plans/pipeline.py
+    media_task_count; ~0.25 CPU-s per Python task on a 4-core host).
 """
 
 from __future__ import annotations

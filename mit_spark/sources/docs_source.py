@@ -83,14 +83,21 @@ def read_table(
 ) -> DataFrame:
     """Engine input seam for the relational tables. ``fmt=None`` autodetects
     by file presence — parquet (the testdata default) first, then orc, json,
-    csv, xml — so every registry query runs unchanged over any corpus format
-    Spark ships a vectorized reader for; pointing sf_dir at an ORC/JSON
-    export of the same tables is the only change (tests/test_source_formats
-    proves output equality across formats). Pass ``schema`` to pin types
-    for the schemaless formats (json/csv/xml infer BIGINT/VARCHAR/DOUBLE,
-    which matches the testdata tables; columns like array<float> need the
-    pin). XML uses Spark 4's built-in reader with rowTag="row" (the
-    convention this seam's writer side uses in test_source_formats)."""
+    csv, xml — so pointing sf_dir at an export of the same tables in another
+    format is the only change a registry query needs. Equality with parquet
+    is tested only for three documents queries (exact_dedup,
+    doc_token_stats, sequence_pack) over ORC, JSON and XML, one embeddings
+    query over ORC, and two columns of a pinned-schema CSV round trip
+    (tests/test_source_formats); other tables and formats are untested.
+    Pass ``schema`` to pin types for the schemaless formats (json/csv/xml
+    infer BIGINT/VARCHAR/DOUBLE, which matches the testdata tables; columns
+    like array<float> need the pin). XML uses Spark 4's built-in reader
+    with rowTag="row" (the convention test_source_formats writes with).
+    XML does not round-trip every string. On Spark 4.1, null and "" in a
+    flat string column come back apart (checked by hand, not by a test),
+    but leading and trailing whitespace is trimmed on read (" a " -> "a",
+    "  " -> ""), and a value holding a character XML 1.0 forbids (most
+    control characters) fails the write."""
     import os as _os
 
     if fmt is None:

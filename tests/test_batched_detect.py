@@ -126,3 +126,54 @@ def test_single_poison_image_errors_alone_in_packed_call():
     assert {r[4] // SPAN_STRIDE for r in err_rows} == poison_offs
     ok_want = _per_span_rows([s for s in spans if str(s[1]) != poison_ref], OPTS, PRE)
     assert [r for r in got if r[1] != "error"] == ok_want
+
+
+def test_raising_ocr_errors_alone(monkeypatch):
+    """A span whose OCR raises becomes exactly one error row, and its
+    batch-mates (same packed forward calls) keep their per-span rows."""
+    from mit_spark.operators import batched_detect
+    from mit_spark.synth import render_media
+
+    spans = _spans()
+    want = _per_span_rows(spans, OPTS, PRE)
+    # a ref with detected text, so its finish reaches decode_quads
+    bad = next(str(s[1]) for s in spans
+               if any(r[3] == str(s[1]) and r[2] for r in want))
+    bad_img = render_media(bad)
+    real = batched_detect.decode_quads
+
+    def decode(img, quads):
+        if img.shape == bad_img.shape and np.array_equal(img, bad_img):
+            raise RuntimeError("ocr failed")
+        return real(img, quads)
+
+    monkeypatch.setattr(batched_detect, "decode_quads", decode)
+    got = extract_media_spans_batched(spans, OPTS, PRE)
+    err_rows = [r for r in got if r[1] == "error"]
+    assert len(err_rows) == sum(1 for s in spans if str(s[1]) == bad)
+    assert all(r[3] == bad and "ocr failed" in r[2] for r in err_rows)
+    assert [r for r in got if r[1] != "error"] == [r for r in want if r[3] != bad]
+
+
+def test_peak_memory_bounded_by_shape_groups():
+    """Tensors are forwarded and finished as their shape group fills, so the
+    traced peak over 64 spans stays near the peak over 8 instead of growing
+    with every staged tensor and raster."""
+    import tracemalloc
+
+    spans = _spans(n_docs=60)[:64]
+    assert len(spans) == 64
+    extract_media_spans_batched(spans[:4], OPTS, PRE)  # lazy state, imports
+
+    def peak(n):
+        tracemalloc.start()
+        try:
+            extract_media_spans_batched(spans[:n], OPTS, PRE)
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    small, large = peak(8), peak(64)
+    assert large < 2 * small, (
+        f"peak {large / 1e6:.1f} MB over 64 spans vs {small / 1e6:.1f} MB over 8"
+    )

@@ -122,17 +122,15 @@ def test_detection_recovers_ground_truth_exactly():
 
 
 def test_media_task_count_bounds():
-    """Task-count policy across parallelism levels: ~128 tasks in the
-    mid range, [4x, 16x] slot clamp at the extremes (VERDICT r2 #8)."""
+    """Task-count policy: two media tasks per execution slot at every
+    parallelism level, so the fixed per-Python-task cost is paid twice per
+    slot and each slot still has a spare task for stragglers."""
     from mit_spark.plans.pipeline import media_task_count
 
-    assert media_task_count(2) == 32        # 16x clamp at low parallelism
-    assert media_task_count(8) == 128       # target
-    assert media_task_count(32) == 128      # target via 4x floor
-    assert media_task_count(1000) == 4000   # 4x floor keeps waves at scale
-    for par in (1, 2, 4, 8, 16, 32, 64, 128, 512, 1000):
-        n = media_task_count(par)
-        assert 4 * par <= n <= 16 * par
+    assert media_task_count(1) == 2
+    assert media_task_count(4) == 8
+    assert media_task_count(32) == 64
+    assert media_task_count(1000) == 2000
 
 
 def test_media_stage_partition_count_matches_policy(spark):

@@ -127,16 +127,25 @@ markup_strategy = st.lists(
 ).map("".join)
 
 
+_CLEAN_SELECT = f"SELECT {clean_text_sql('?')}"
+
+
+@pytest.fixture(scope="module")
+def duck():
+    """One DuckDB connection for the module, shared by every example."""
+    con = duckdb.connect()
+    yield con
+    con.close()
+
+
 @settings(max_examples=120, deadline=None)
 @given(markup_strategy)
-def test_clean_text_py_matches_duckdb(s):
-    con = duckdb.connect()
-    sql = clean_text_sql("?")
-    want = con.execute(f"SELECT {sql}", [s]).fetchone()[0]
+def test_clean_text_py_matches_duckdb(duck, s):
+    want = duck.execute(_CLEAN_SELECT, [s]).fetchone()[0]
     assert clean_text_py(s) == want
 
 
-def test_clean_text_three_engine_agreement_randomized(spark):
+def test_clean_text_three_engine_agreement_randomized(spark, duck):
     """All THREE engines — Catalyst (Java regex), python `re`, DuckDB
     (RE2) — must agree on 500 seeded random markup strings in one batch:
     the leftmost-first alternation + tag/ws-collapse semantics must not
@@ -163,7 +172,5 @@ def test_clean_text_three_engine_agreement_randomized(spark):
     }
     assert [got_spark[i] for i in range(len(strings))] == want_py
 
-    con = duckdb.connect()
-    sql = clean_text_sql("?")
-    got_duck = [con.execute(f"SELECT {sql}", [s]).fetchone()[0] for s in strings]
+    got_duck = [duck.execute(_CLEAN_SELECT, [s]).fetchone()[0] for s in strings]
     assert got_duck == want_py
