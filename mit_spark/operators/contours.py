@@ -7,7 +7,11 @@ oracle == pipeline, and both import THIS module):
       as called from /root/reference/crates/util/src/imageproc.rs:62-88.
       We group 8-connected foreground pixels; hole contours are irrelevant
       for DBNet text maps. Components are enumerated in deterministic
-      (min_row, min_col) order.
+      (min_row, min_col) order. One run labeller (_label_runs) has two
+      views: connected_components gives every pixel of each component;
+      component_row_extremes gives each row's leftmost and rightmost pixel.
+      The detect path (dbnet_post.boxes_from_bitmap) uses the row-extremes
+      view, which holds the component's whole convex hull.
   * min_area_rect          <- cv2.minAreaRect + boxPoints as used by
       get_mini_boxes (/root/reference/crates/util/src/dbnet.rs:113-149):
       convex hull + rotating calipers.
@@ -38,20 +42,29 @@ def _find(parent: list, x: int) -> int:
     return root
 
 
-def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
-    """Group 8-connected True pixels; returns a list of (N_i, 2) int64 arrays
-    of (x, y) coordinates, ordered by (min_row, min_col) of the component."""
+def _label_runs(bitmap: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Horizontal runs of True pixels (exclusive ends) and the 8-connected
+    component of each: (rows, starts, ends, labels). Labels number the
+    components in (min_row, min_col) order; runs come grouped by label,
+    row-major within a component."""
     bm = np.asarray(bitmap, dtype=bool)
     h, w = bm.shape
-    if not bm.any():
-        return []
+    ink_rows = np.flatnonzero(bm.any(axis=1))
+    if not len(ink_rows):
+        e = np.empty(0, dtype=np.int64)
+        return e, e, e, e
 
-    # per-row runs: starts/ends via diff on padded rows
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = bm
-    d = np.diff(padded, axis=1)
-    run_rows, run_starts = np.nonzero(d == 1)
-    _, run_ends = np.nonzero(d == -1)  # exclusive end; same count/order per row
+    # runs only on the rows holding ink: starts/ends via diff on padded
+    # rows, located in the flattened diff (one 1-D pass, no 2-D nonzero)
+    K = w + 2
+    padded = np.zeros((len(ink_rows), K), dtype=np.int8)
+    padded[:, 1:-1] = bm[ink_rows]
+    d = np.diff(padded, axis=1).ravel()
+    starts_flat = np.flatnonzero(d == 1)
+    ends_flat = np.flatnonzero(d == -1)  # same count/order per row
+    run_rows = ink_rows[starts_flat // (K - 1)]
+    run_starts = starts_flat % (K - 1)
+    run_ends = ends_flat % (K - 1)  # exclusive
 
     n_runs = len(run_rows)
     row_start_idx = np.searchsorted(run_rows, np.arange(h + 1))
@@ -63,10 +76,9 @@ def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
     # run j the touching runs of the PREVIOUS row form one contiguous index
     # interval [lo_j, hi_j), located with two global searchsorted calls on
     # row-composite keys (row*K + coord is globally increasing).
-    K = w + 2
     starts_key = run_rows * K + run_starts
     ends_key = run_rows * K + run_ends
-    j_ids = np.nonzero(run_rows > 0)[0]
+    j_ids = np.flatnonzero(run_rows > 0)
     i_idx = jj = np.empty(0, dtype=np.int64)
     if len(j_ids):
         rj = run_rows[j_ids]
@@ -82,27 +94,50 @@ def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
             i_idx = lo[grp] + within
             jj = j_ids[grp]
 
+    # the root of a component is its smallest run index, i.e. its first
+    # run in (row, start) order — so sorted roots give (min_row, min_col)
     parent = list(range(n_runs))
     for i, j in zip(i_idx.tolist(), jj.tolist()):
         ri, rjr = _find(parent, i), _find(parent, j)
         if ri != rjr:
             parent[max(ri, rjr)] = min(ri, rjr)
+    roots = np.fromiter((_find(parent, i) for i in range(n_runs)), dtype=np.int64, count=n_runs)
+    labels = np.unique(roots, return_inverse=True)[1]
+    order = np.argsort(labels, kind="stable")
+    return run_rows[order], run_starts[order], run_ends[order], labels[order]
 
-    roots = np.fromiter((_find(parent, i) for i in range(n_runs)), dtype=np.int64)
-    comps: dict[int, list[int]] = {}
-    for idx, root in enumerate(roots):
-        comps.setdefault(int(root), []).append(idx)
 
-    out = []
-    for _, run_ids in sorted(comps.items(), key=lambda kv: (run_rows[kv[1][0]], run_starts[kv[1][0]])):
-        xs_parts, ys_parts = [], []
-        for ri in run_ids:
-            xs = np.arange(run_starts[ri], run_ends[ri], dtype=np.int64)
-            xs_parts.append(xs)
-            ys_parts.append(np.full(len(xs), run_rows[ri], dtype=np.int64))
-        pts = np.stack([np.concatenate(xs_parts), np.concatenate(ys_parts)], axis=1)
-        out.append(pts)
-    return out
+def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
+    """Group 8-connected True pixels; returns a list of (N_i, 2) int64 arrays
+    of (x, y) coordinates, ordered by (min_row, min_col) of the component.
+    Pixels of a component come row-major."""
+    rows, starts, ends, labels = _label_runs(bitmap)
+    if not len(rows):
+        return []
+    lens = ends - starts
+    first = np.cumsum(lens) - lens  # each run's offset in the pixel list
+    xs = np.arange(first[-1] + lens[-1]) - np.repeat(first - starts, lens)
+    pts = np.stack([xs, np.repeat(rows, lens)], axis=1)
+    new_comp = np.flatnonzero(np.diff(labels)) + 1  # first run of each later component
+    return np.split(pts, first[new_comp])
+
+
+def component_row_extremes(bitmap: np.ndarray) -> list[np.ndarray]:
+    """Per-row extremes of the same components, in the same order: for each
+    component a (2 * n_rows, 2) int64 array holding (min x, y), (max x, y)
+    for each of its rows, top to bottom. These points carry the component's
+    full convex hull, at a fraction of its pixels."""
+    rows, starts, ends, labels = _label_runs(bitmap)
+    if not len(rows):
+        return []
+    # one segment per (component, row); a row may hold several runs
+    seg = np.flatnonzero(np.r_[True, (labels[1:] != labels[:-1]) | (rows[1:] != rows[:-1])])
+    pts = np.empty((len(seg), 2, 2), dtype=np.int64)
+    pts[:, 0, 0] = np.minimum.reduceat(starts, seg)
+    pts[:, 1, 0] = np.maximum.reduceat(ends - 1, seg)
+    pts[:, :, 1] = rows[seg, None]
+    new_comp = np.flatnonzero(np.diff(labels[seg])) + 1
+    return np.split(pts.reshape(-1, 2), 2 * new_comp)
 
 
 # ---------------------------------------------------------------------------

@@ -18,9 +18,11 @@ to the UNSCALED polygon (dbnet.rs:307-317), inflating delta 100x. We use the
 standard DBNet delta (area * unclip_ratio / perimeter at original scale).
 Equality in this engine is oracle == pipeline and both use this module.
 
-"Contours" here are connected components of the thresholded map; the score
-and the mini box are computed over the component's convex hull, which for
-text blobs matches cv2's outer-contour behaviour.
+"Contours" here are the 8-connected components of the thresholded map, read
+through contours.component_row_extremes: each component as its per-row
+leftmost and rightmost pixels, which hold its whole convex hull. The score
+and the first mini box are computed over that hull, which for text blobs
+matches cv2's outer-contour behaviour.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 
 from mit_spark.operators.contours import (
-    connected_components,
+    component_row_extremes,
     fill_polygon_mask,
     min_area_rect,
     offset_polygon_round,
@@ -40,24 +42,6 @@ from mit_spark.operators.geometry import convex_hull, polygon_area, roll_rows, r
 def binarize(pred: np.ndarray, thresh: float) -> np.ndarray:
     """dbnet.rs:55-57."""
     return pred > thresh
-
-
-def _row_extremes(comp: np.ndarray) -> np.ndarray:
-    """Reduce component pixels (x, y) to per-row min/max x (hull-preserving)."""
-    ys = comp[:, 1]
-    xs = comp[:, 0]
-    order = np.argsort(ys, kind="stable")
-    ys_s, xs_s = ys[order], xs[order]
-    row_starts = np.searchsorted(ys_s, np.unique(ys_s))
-    out = []
-    bounds = list(row_starts) + [len(ys_s)]
-    for i in range(len(bounds) - 1):
-        lo, hi = bounds[i], bounds[i + 1]
-        seg = xs_s[lo:hi]
-        y = ys_s[lo]
-        out.append((seg.min(), y))
-        out.append((seg.max(), y))
-    return np.array(out, dtype=np.int64)
 
 
 def get_mini_boxes(points: np.ndarray) -> tuple[np.ndarray, float]:
@@ -126,18 +110,18 @@ def boxes_from_bitmap(
     rejected candidates keep zero rows/scores exactly like the reference
     (filtered later by filter_boxes_and_adjust)."""
     height, width = bitmap.shape
-    comps = connected_components(bitmap)
+    # per-row x-extremes carry each component's full convex hull — avoids
+    # hulling hundreds of thousands of interior pixels for big components
+    comps = component_row_extremes(bitmap)
     num = min(len(comps), max_candidates)
     boxes = np.zeros((num, 4, 2), dtype=np.int64)
     scores = np.zeros(num, dtype=np.float64)
 
     for index in range(num):
-        comp = comps[index]
-        # per-row x-extremes carry the full convex hull — avoids hulling
-        # hundreds of thousands of interior pixels for big components
-        comp = _row_extremes(comp)
-        hull = convex_hull(comp.astype(np.float64))
-        points, sside = get_mini_boxes(comp)
+        hull = convex_hull(comps[index].astype(np.float64))
+        # the monotone chain is idempotent on its own output, so the mini
+        # box over the hull equals the one over the extremes
+        points, sside = get_mini_boxes(hull)
         if sside < min_size:
             continue
         score = box_score_fast(pred, hull)

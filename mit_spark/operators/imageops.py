@@ -170,6 +170,22 @@ def _bilinear_axis_coords(dst: int, src: int) -> tuple[np.ndarray, np.ndarray, n
     return lo, hi, frac
 
 
+def _bilinear_tables(
+    dst: int, src: int, channels: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Gather indices and weights (lo, hi, 1 - frac, frac) for one axis,
+    indexing a channel-flattened (., src * channels) row: index and weight
+    repeat per channel."""
+    lo, hi, frac = _bilinear_axis_coords(dst, src)
+    w_lo, w_hi = 1 - frac, frac
+    if channels > 1:
+        c = np.arange(channels)
+        lo = (lo[:, None] * channels + c).ravel()
+        hi = (hi[:, None] * channels + c).ravel()
+        w_lo, w_hi = np.repeat(w_lo, channels), np.repeat(w_hi, channels)
+    return lo, hi, w_lo, w_hi
+
+
 # convolution-filter kernels for the remaining Interpolation variants
 # (image/mod.rs:212-218 -> fast_image_resize FilterType, rayon.rs:394-434):
 # Box, Bicubic (CatmullRom) and Lanczos3 are classic separable convolution
@@ -255,40 +271,26 @@ def resize(img: np.ndarray, width: int, height: int, interpolation: str = "bilin
     if interpolation != "bilinear":
         raise NotImplementedError(f"interpolation {interpolation!r}")
 
-    y0, y1, fy = _bilinear_axis_coords(height, h)
-    x0, x1, fx = _bilinear_axis_coords(width, w)
-    # rows first (H, w, [3]) then columns — avoids the w*H-sized double
-    # fancy-index temporaries of the naive formulation; row gathers happen
-    # on the UINT8 source (4x less read traffic than gathering a float32
-    # copy) with the f32 conversion fused into the gathered rows — the lerp
-    # arithmetic is unchanged, so output is bit-identical. In-place
-    # accumulation trims large float temporaries (memory-bandwidth is the
-    # scaling bottleneck at 32 workers).
-    if img.ndim == 3:
-        rows = img[y0].astype(np.float32)
-        rows *= (1 - fy)[:, None, None]
-        r1 = img[y1].astype(np.float32)
-        r1 *= fy[:, None, None]
-        rows += r1
-        out = rows[:, x0]
-        out *= (1 - fx)[None, :, None]
-        o1 = rows[:, x1]
-        o1 *= fx[None, :, None]
-        out += o1
-    else:
-        rows = img[y0].astype(np.float32)
-        rows *= (1 - fy)[:, None]
-        r1 = img[y1].astype(np.float32)
-        r1 *= fy[:, None]
-        rows += r1
-        out = rows[:, x0]
-        out *= (1 - fx)[None, :]
-        o1 = rows[:, x1]
-        o1 *= fx[None, :]
-        out += o1
-    # convex combination of uint8 stays in [0, 255]; +0.5 then truncate == round
+    # rows first, then columns, on the channel-flattened (rows, w * c)
+    # layout, so the column pass is one np.take over contiguous rows. The
+    # row gathers read the UINT8 source and convert inside the multiply.
+    # The per-element float32 order is fixed, because the property tests
+    # pin the output bit-exactly to it: r = a*(1-fy) + b*fy, then
+    # out = r0*(1-fx) + r1*fx, then +0.5 and truncate (== round, since a
+    # convex combination of uint8 stays in [0, 255]).
+    c = img.shape[2] if img.ndim == 3 else 1
+    y0, y1, wy0, wy1 = _bilinear_tables(height, h, 1)
+    x0, x1, wx0, wx1 = _bilinear_tables(width, w, c)
+    src = img.reshape(h, w * c)
+    rows = np.multiply(src[y0], wy0[:, None], dtype=np.float32)
+    rows += np.multiply(src[y1], wy1[:, None], dtype=np.float32)
+    out = np.take(rows, x0, axis=1)
+    out *= wx0
+    o1 = np.take(rows, x1, axis=1)
+    o1 *= wx1
+    out += o1
     out += np.float32(0.5)
-    return out.astype(np.uint8)
+    return out.astype(np.uint8).reshape((height, width) + img.shape[2:])
 
 
 def resize_float(arr: np.ndarray, width: int, height: int) -> np.ndarray:
@@ -348,7 +350,9 @@ def bilateral_filter(
 def resize_aspect_ratio(
     img: np.ndarray, square_size: int, mag_ratio: float = 1.0
 ) -> tuple[np.ndarray, float, int, int]:
-    """Returns (padded_img, ratio, pad_w, pad_h)."""
+    """Returns (padded_img, ratio, pad_w, pad_h). When the image is already
+    at the target size and needs no padding, padded_img is ``img`` itself,
+    not a copy: callers must not write to it."""
     h, w = img.shape[:2]
     target_size = min(mag_ratio * square_size, float(square_size))
     ratio = target_size / max(h, w)
@@ -359,5 +363,7 @@ def resize_aspect_ratio(
     mult = 256
     pad_h = (mult - target_h % mult) % mult
     pad_w = (mult - target_w % mult) % mult
+    if pad_w == pad_h == 0:
+        return proc, ratio, 0, 0
     out = add_border_wh(proc, target_w + pad_w, target_h + pad_h)
     return out, ratio, pad_w, pad_h

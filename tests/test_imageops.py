@@ -117,6 +117,29 @@ def test_resize_aspect_ratio_invariants():
     assert out.shape[1] == 512 and out.shape[0] == 256
 
 
+def test_resize_aspect_ratio_returns_input_and_detect_leaves_it_unwritten():
+    # a 512x512 page at detect_size 512 needs neither resize nor padding, so
+    # resize_aspect_ratio hands back the input itself; the detect path must
+    # then only read it (a write to a read-only array raises)
+    from mit_spark.config import DetectorOptions
+    from mit_spark.operators.detector import detect
+    from mit_spark.operators.forward import synthetic_forward
+
+    img = np.full((512, 512, 3), 255, dtype=np.uint8)
+    img[100:140, 60:300] = 70  # one ink block for the stand-in forward
+    img.flags.writeable = False
+    out, ratio, pad_w, pad_h = ops.resize_aspect_ratio(img, 512)
+    assert out is img and (ratio, pad_w, pad_h) == (1.0, 0, 0)
+    opts = DetectorOptions(detect_size=512)
+    quads, mask = detect(img, synthetic_forward, opts)
+    want_quads, want_mask = detect(img.copy(), synthetic_forward, opts)
+    assert quads
+    assert [(q.pts.tolist(), q.score) for q in quads] == [
+        (q.pts.tolist(), q.score) for q in want_quads
+    ]
+    assert np.array_equal(mask, want_mask)
+
+
 def test_bilateral_filter_smooths_noise_keeps_edges():
     rng = np.random.RandomState(1)
     img = np.zeros((24, 24, 3), dtype=np.uint8)

@@ -22,9 +22,11 @@ hyp = pytest.importorskip("hypothesis")
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
 from mit_spark.operators.contours import (  # noqa: E402
+    component_row_extremes,
     connected_components,
     min_area_rect,
 )
+from mit_spark.operators.dbnet_post import get_mini_boxes  # noqa: E402
 from mit_spark.operators.geometry import convex_hull, polygon_area  # noqa: E402
 from mit_spark.operators.imageops import resize  # noqa: E402
 from mit_spark.operators.png_codec import decode_png, encode_png  # noqa: E402
@@ -85,6 +87,70 @@ def test_connected_components_partition_is_exact(h, w, seed):
         assert bm[y, x]
 
 
+def _bfs_row_extremes(bm: np.ndarray) -> list[list[tuple[int, int]]]:
+    """The BFS components in (min_row, min_col) order, each reduced to
+    (min x, y), (max x, y) per row, top to bottom."""
+    out = []
+    for comp in sorted(_bfs_components(bm), key=lambda c: min((y, x) for x, y in c)):
+        pts = []
+        for y in sorted({y for _, y in comp}):
+            xs = [x for x, yy in comp if yy == y]
+            pts += [(min(xs), y), (max(xs), y)]
+        out.append(pts)
+    return out
+
+
+def _assert_row_extremes_match_bfs(bm: np.ndarray) -> None:
+    got = component_row_extremes(bm)
+    assert all(c.dtype == np.int64 and c.shape[1] == 2 for c in got)
+    assert [list(map(tuple, c.tolist())) for c in got] == _bfs_row_extremes(bm)
+
+
+@COMMON
+@given(
+    st.integers(1, 12),
+    st.integers(1, 12),
+    st.integers(0, 2**32 - 1),
+    st.floats(0.1, 0.9),
+    st.floats(0.0, 0.8),
+)
+def test_component_row_extremes_match_bfs(h, w, seed, density, blank_rows):
+    """The row-extremes view equals the BFS components' per-row min/max x,
+    in the same (min_row, min_col) component order; a share of the rows is
+    blanked so rows without ink sit between and around the components."""
+    rng = np.random.RandomState(seed)
+    bm = rng.rand(h, w) < density
+    bm[rng.rand(h) < blank_rows] = False
+    _assert_row_extremes_match_bfs(bm)
+
+
+@pytest.mark.parametrize("shape", [(1, 1), (4, 4), (3, 17), (0, 5)])
+def test_component_row_extremes_empty(shape):
+    assert component_row_extremes(np.zeros(shape, dtype=bool)) == []
+
+
+def test_component_row_extremes_u_shape():
+    """One component with two runs in its top rows: each row reduces to the
+    outer extremes of both arms, not to one run's."""
+    bm = np.array(
+        [
+            [0, 0, 0, 0, 0, 0, 0],
+            [0, 1, 0, 0, 0, 1, 1],
+            [0, 1, 0, 0, 0, 1, 0],
+            [0, 1, 1, 1, 1, 1, 0],
+            [0, 0, 0, 0, 0, 0, 0],
+            [1, 0, 0, 0, 0, 0, 0],
+        ],
+        dtype=bool,
+    )
+    got = component_row_extremes(bm)
+    assert [c.tolist() for c in got] == [
+        [[1, 1], [6, 1], [1, 2], [5, 2], [1, 3], [5, 3]],
+        [[0, 5], [0, 5]],
+    ]
+    _assert_row_extremes_match_bfs(bm)
+
+
 # ---------------------------------------------------------------------------
 # convex_hull / min_area_rect geometry properties
 
@@ -142,6 +208,21 @@ def test_min_area_rect_encloses_and_beats_aabb(pts):
 
 @COMMON
 @given(points_strategy)
+def test_hull_of_hull_is_hull_and_keeps_mini_box(pts):
+    """The monotone chain is idempotent on integer points, so
+    boxes_from_bitmap may pass its hull to get_mini_boxes in place of the
+    points: same hull, same box, same side."""
+    arr = np.array(pts, dtype=np.float64)
+    hull = convex_hull(arr)
+    np.testing.assert_array_equal(convex_hull(hull), hull)
+    box_pts, side_pts = get_mini_boxes(arr)
+    box_hull, side_hull = get_mini_boxes(hull)
+    np.testing.assert_array_equal(box_hull, box_pts)
+    assert side_hull == side_pts
+
+
+@COMMON
+@given(points_strategy)
 def test_polygon_area_nonnegative_on_hull(pts):
     arr = np.array(pts, dtype=np.float64)
     hull = convex_hull(arr)
@@ -153,8 +234,8 @@ def test_polygon_area_nonnegative_on_hull(pts):
 # bilinear resize vs the per-pixel scalar definition (bit-exact)
 
 
-def _resize_bilinear_naive(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Direct per-output-pixel evaluation of the same half-pixel-center
+def _bilinear_pixel_naive(img: np.ndarray, width: int, height: int, oy: int, ox: int):
+    """One output pixel by direct evaluation of the half-pixel-center
     convention (coord = (i+0.5)*src/dst - 0.5, clamp-to-edge, f32 lerp,
     +0.5 truncate) — scalar, no shared temporaries with the fast path.
 
@@ -166,26 +247,27 @@ def _resize_bilinear_naive(img: np.ndarray, width: int, height: int) -> np.ndarr
     one = np.float32(1)
     half = np.float32(0.5)
     h, w = img.shape[:2]
-    out = np.empty((height, width) + img.shape[2:], dtype=np.uint8)
     sy, sx = h / height, w / width  # pre-divided scale, as the fast path does
+    y = (oy + 0.5) * sy - 0.5
+    y0 = int(np.floor(y))
+    fy = np.float32(y - y0)
+    y0c, y1c = min(max(y0, 0), h - 1), min(max(y0 + 1, 0), h - 1)
+    x = (ox + 0.5) * sx - 0.5
+    x0 = int(np.floor(x))
+    fx = np.float32(x - x0)
+    x0c, x1c = min(max(x0, 0), w - 1), min(max(x0 + 1, 0), w - 1)
+    r0 = img[y0c, x0c].astype(np.float32) * (one - fy) + img[y1c, x0c].astype(np.float32) * fy
+    r1 = img[y0c, x1c].astype(np.float32) * (one - fy) + img[y1c, x1c].astype(np.float32) * fy
+    val = r0 * (one - fx) + r1 * fx + half
+    return val.astype(np.uint8)
+
+
+def _resize_bilinear_naive(img: np.ndarray, width: int, height: int) -> np.ndarray:
+    """Every output pixel by ``_bilinear_pixel_naive``."""
+    out = np.empty((height, width) + img.shape[2:], dtype=np.uint8)
     for oy in range(height):
-        y = (oy + 0.5) * sy - 0.5
-        y0 = int(np.floor(y))
-        fy = np.float32(y - y0)
-        y0c, y1c = min(max(y0, 0), h - 1), min(max(y0 + 1, 0), h - 1)
         for ox in range(width):
-            x = (ox + 0.5) * sx - 0.5
-            x0 = int(np.floor(x))
-            fx = np.float32(x - x0)
-            x0c, x1c = min(max(x0, 0), w - 1), min(max(x0 + 1, 0), w - 1)
-            r0 = img[y0c, x0c].astype(np.float32) * (one - fy) + img[y1c, x0c].astype(
-                np.float32
-            ) * fy
-            r1 = img[y0c, x1c].astype(np.float32) * (one - fy) + img[y1c, x1c].astype(
-                np.float32
-            ) * fy
-            val = r0 * (one - fx) + r1 * fx + half
-            out[oy, ox] = val.astype(np.uint8)
+            out[oy, ox] = _bilinear_pixel_naive(img, width, height, oy, ox)
     return out
 
 
@@ -212,6 +294,24 @@ def test_resize_bilinear_matches_scalar_definition(sh, sw, dh, dw, seed, rgb):
 def test_resize_identity_is_noop(h, w, seed):
     img = np.random.RandomState(seed).randint(0, 256, (h, w, 3), dtype=np.uint8)
     np.testing.assert_array_equal(resize(img, w, h, "bilinear"), img)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.sampled_from([((400, 400), (512, 512)), ((448, 512), (400, 512))]),
+    st.integers(0, 2**32 - 1),
+)
+def test_resize_bilinear_pipeline_shapes_match_scalar_definition(shapes, seed):
+    """The detect path's real page sizes (upscale on both axes; downscale
+    on one with the other unchanged), checked at sampled output pixels."""
+    (sh, sw), (dh, dw) = shapes
+    rng = np.random.RandomState(seed)
+    img = rng.randint(0, 256, (sh, sw, 3), dtype=np.uint8)
+    out = resize(img, dw, dh, "bilinear")
+    assert out.shape == (dh, dw, 3) and out.dtype == np.uint8
+    for oy, ox in zip(rng.randint(0, dh, 200), rng.randint(0, dw, 200)):
+        want = _bilinear_pixel_naive(img, dw, dh, int(oy), int(ox))
+        np.testing.assert_array_equal(out[oy, ox], want, err_msg=f"pixel ({oy}, {ox})")
 
 
 # ---------------------------------------------------------------------------

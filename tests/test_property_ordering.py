@@ -4,16 +4,20 @@
 hangs on: it must be a PERMUTATION, must not depend on quad arrival order
 (detection order is contour-discovery order, which is an implementation
 detail), and must equal its own definition (RTL band, then top-to-bottom,
-then x-desc) computed by an independent scalar sort.
+then x-desc) derived independently from band membership and pairwise
+precedence.
 """
 
 from __future__ import annotations
+
+import statistics
+from fractions import Fraction
 
 import numpy as np
 import pytest
 
 hyp = pytest.importorskip("hypothesis")
-from hypothesis import assume, given, settings, strategies as st  # noqa: E402
+from hypothesis import assume, example, given, settings, strategies as st  # noqa: E402
 
 from mit_spark.operators.geometry import Quad  # noqa: E402
 from mit_spark.operators.ordering import reading_order  # noqa: E402
@@ -44,18 +48,37 @@ rects_strategy = st.lists(
 )
 
 
-def _keys(quads):
-    x_center = np.array(
-        [int(q.pts[:, 0].min()) + int(q.pts[:, 0].max()) for q in quads]
-    ) / 2.0
-    y_top = np.array([int(q.pts[:, 1].min()) for q in quads])
-    widths = np.array(
-        [int(q.pts[:, 0].max()) - int(q.pts[:, 0].min()) for q in quads],
-        dtype=np.float64,
-    )
-    band_w = max(float(np.median(widths)), 1.0)
-    band = np.floor((float(x_center.max()) - x_center) / band_w).astype(np.int64)
-    return list(zip(band.tolist(), y_top.tolist(), (-x_center).tolist()))
+def _bands(rects):
+    """Column band of each rect, by explicit interval membership: band k
+    holds the centers at a distance in [k * bw, (k + 1) * bw) left of the
+    rightmost center, bw = median width (at least 1). Exact rationals, and
+    the band is found by walking the intervals, not by a floor formula."""
+    centers = [Fraction(2 * x + w, 2) for x, _y, w, _h in rects]
+    bw = max(Fraction(statistics.median(Fraction(w) for _x, _y, w, _h in rects)), Fraction(1))
+    right = max(centers)
+    bands = []
+    for c in centers:
+        k = 0
+        while not (k * bw <= right - c < (k + 1) * bw):
+            k += 1
+        bands.append(k)
+    return bands, centers
+
+
+def _precedes(rects, i, j, bands, centers):
+    """Rect i is read before rect j: an earlier (further right) band; in
+    the same band, a higher top; at the same top, further right."""
+    if bands[i] != bands[j]:
+        return bands[i] < bands[j]
+    if rects[i][1] != rects[j][1]:
+        return rects[i][1] < rects[j][1]
+    return centers[i] > centers[j]
+
+
+def _no_ties(rects):
+    """No two rects share band, top and center, so the order is total."""
+    bands, centers = _bands(rects)
+    return len({(b, r[1], c) for b, r, c in zip(bands, rects, centers)}) == len(rects)
 
 
 @COMMON
@@ -72,7 +95,7 @@ def test_reading_order_input_order_invariant(rects, rnd):
     """With unique sort keys, each quad's rank must not depend on the
     order quads arrive in (contour-discovery order is arbitrary)."""
     quads = _mk_quads(rects)
-    assume(len(set(_keys(quads))) == len(quads))  # no exact ties
+    assume(_no_ties(rects))
     base = reading_order(quads)
     perm = list(range(len(quads)))
     rnd.shuffle(perm)
@@ -84,17 +107,21 @@ def test_reading_order_input_order_invariant(rects, rnd):
 
 @COMMON
 @given(rects_strategy)
+# same band and top: x-desc decides; then a band boundary at exactly bw
+@example([(100, 10, 40, 20), (120, 10, 40, 20), (0, 50, 40, 20)])
+@example([(0, 0, 10, 5), (15, 9, 10, 5), (20, 3, 10, 5), (25, 7, 10, 5)])
 def test_reading_order_matches_scalar_sort_definition(rects):
-    """Independent scalar re-derivation: sort indices by (band asc,
-    y_top asc, x_center desc) with python sorted()."""
-    quads = _mk_quads(rects)
-    assume(len(set(_keys(quads))) == len(quads))
-    keys = _keys(quads)
-    order = sorted(range(len(quads)), key=lambda i: keys[i])
-    want = [0] * len(quads)
-    for rank, i in enumerate(order):
-        want[i] = rank
-    assert reading_order(quads) == want
+    """Independent re-derivation from the definition: each rect's rank is
+    the number of rects that precede it (RTL band, then top-to-bottom,
+    then x-desc), with bands found by interval membership."""
+    assume(_no_ties(rects))
+    bands, centers = _bands(rects)
+    n = len(rects)
+    want = [
+        sum(_precedes(rects, j, i, bands, centers) for j in range(n) if j != i)
+        for i in range(n)
+    ]
+    assert reading_order(_mk_quads(rects)) == want
 
 
 # ---------------------------------------------------------------------------
