@@ -20,121 +20,15 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-# queries benchmarked beyond the flagship (a representative operator mix)
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_topk_revenue",
-    "q5_region_revenue",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "user_sessions",
-    "hourly_event_stats",
-    "exact_dedup",
-    "minhash_near_dup",
-    "simhash_fingerprint",
-    "embedding_cosine_topk",
-    "embedding_lsh_buckets",
-    "embedding_near_dup",
-    "ann_ivf_topk",
-    "embedding_kmeans",
-    "boilerplate_strip",
-    "language_id_ngram",
-    "rolling_fingerprint",
-    "token_count_bpe",
-    "tfidf_topk_terms",
-    "kgram_novelty_score",
-    "rare_token_profile",
-    "ann_recall_eval",
-    "ann_multiprobe_recall",
-    "embedding_quant_recall",
-    "split_leakage_audit",
-    "interval_overlap_join",
-    "gopher_quality_rules",
-    "gopher_repetition_rules",
-    "corpus_integrity_audit",
-    "mixture_resample",
-    "keyword_search_topk",
-    "hybrid_rrf_fusion",
-    "simhash_hamming_pairs",
-    "lm_perplexity_buckets",
-    "dsir_importance_weights",
-    "decontaminate_ngrams",
-    "pii_redaction",
-    "events_asof_join",
-    "quality_repetition_filter",
-    "incremental_dedup",
-    "cross_doc_chunk_dedup",
-    "corpus_topk_ngrams",
-    "dedup_clusters",
-    "stratified_sample",
-    "sequence_pack",
-    "streaming_windowed_stats",
-    "streaming_session_windows",
-    "media_channel_stats",
-    # round 4: new operators + previously-unbenched round-3 families
-    "substring_dedup_runs",
-    "substring_dedup_clean",
-    "cluster_balanced_sample",
-    "media_channel_stats_png",
-    "semantic_mixture_weights",
-    "semantic_outlier_prune",
-    "minhash_verified_dups",
-    "token_length_quantiles",
-    "domain_mixture_weights",
-    "ngram_jaccard_pairs",
-    "bloom_dedup_screen",
-    "media_frame_census",
-    "streaming_stateful_dedup",
-    # round 5: the real JPEG / WAV / MJPEG-AVI codec paths
-    "media_channel_stats_jpeg",
-    "audio_waveform_stats",
-    "video_frame_stats",
-    "corpus_curation_report",
-    # round 5: sketch / graph / tokenizer-induction entries
-    "cardinality_kmv_sketch",
-    "pagerank_dup_graph",
-    "bpe_merge_candidates",
-    "heavy_hitters_cms",
-    "cluster_purity_eval",
-    "hard_negative_mining",
-    "cross_source_dup_matrix",
-    "quantile_sketch_eval",
-    "streaming_histogram_merge",
-    "lsh_band_sweep",
-    "winnowing_fingerprints",
-    "dedup_clusters_logrounds",
-    "collocation_topk",
-    "phrase_search_topk",
-    "funnel_conversion",
-    "cardinality_hll_sketch",
-    "fuzzy_match_join",
-    "cohort_retention",
-    # round 5 closing sweep: every remaining registry entry EXCEPT the three
-    # flagship_*_digest variants and flagship_span_counts/flagship_extract —
-    # those re-run the full detect+OCR pipeline over the WHOLE corpus
-    # (~20 s each at sf0.1) and are throughput-measured by the dedicated
-    # flagship block above (1500 docs, docs/s + spans/s), so re-timing them
-    # here would triple-count the same pipeline without new signal
-    "reading_order_sql",
-    "docs_span_stats",
-    "streaming_drain",
-    "doc_quality_by_lang",
-    "doc_token_stats",
-    "top_customer_per_nation",
-    "part_type_stats",
-    "supplier_balance_rollup",
-    "user_topk_events",
-    "event_type_matrix",
-    "repeat_customers_intersect",
-    "churned_customers_except",
-    "supplier_distinct_parts",
-    "orders_without_lineitems",
-    "priority_orders_semi",
-    "embedding_label_norms",
-    "semantic_dedup_verified",
-]
+from mit_spark.queries import QUERIES  # noqa: E402
 
-FLAGSHIP_DOC_LIMIT = int(os.environ.get("MIT_BENCH_DOC_LIMIT", "1500"))
+# every registry entry beyond the flagship. flagship_extract re-runs the full
+# detect+OCR pipeline over the WHOLE corpus and is throughput-measured by the
+# dedicated flagship block (FLAGSHIP_DOC_LIMIT docs, docs/s + spans/s), so
+# re-timing it here would count the same pipeline twice without new signal
+BENCH_QUERIES = [name for name in QUERIES if name != "flagship_extract"]
+
+FLAGSHIP_DOC_LIMIT = 1500
 
 
 def _force(df) -> int:
@@ -170,7 +64,7 @@ def _host_probe() -> dict:
 # (the same suite has measured 37-67 s wall minutes apart), so an official
 # BENCH_rN.json must be a steady-state artifact, not a phase lottery.
 # Quiet-phase membw_sec measures ~0.73-0.78 here; 1.2 = comfortably quiet.
-MEMBW_GATE = float(os.environ.get("MIT_BENCH_MEMBW_GATE", "1.2"))
+MEMBW_GATE = 1.2
 
 
 def _wait_for_quiet(gate: float = MEMBW_GATE, max_wait_sec: float = 180.0) -> dict:
@@ -185,7 +79,6 @@ def _wait_for_quiet(gate: float = MEMBW_GATE, max_wait_sec: float = 180.0) -> di
 
 
 def run(sf_dir: str, cpus: str, *, make_session=None) -> dict:
-    from mit_spark.queries import QUERIES
     from mit_spark.session import make_session as _mk
 
     # gate the suite on a quiet memory bus (waits up to 3 min), and record
@@ -271,8 +164,8 @@ def run(sf_dir: str, cpus: str, *, make_session=None) -> dict:
         if name == "media_channel_stats":
             builder = media_channel_stats_from_scan
             # this entry moves ~400 MB of binaries through the JVM's Arrow
-            # path: it is the suite's most DRAM-bound region AND runs last,
-            # so it is the most exposed to mid-suite bus contention — wait
+            # path: it is the suite's most DRAM-bound region, so it is the
+            # most exposed to mid-suite bus contention — wait
             # out a loud phase and take best-of-3 (fresh-session steady
             # state: 1.8-3 s; a contended pass reads 10-16 s)
             _wait_for_quiet(max_wait_sec=120)
@@ -327,21 +220,23 @@ def run(sf_dir: str, cpus: str, *, make_session=None) -> dict:
     return result
 
 
+# a degraded host phase (sibling DRAM load) inflates suite numbers ~2x,
+# and the before/after probes can MISS a mid-suite dip — so always run
+# MIN_ATTEMPTS full attempts (up to MAX_ATTEMPTS if none is endpoint-quiet)
+# and MIN-MERGE per entry: each entry's min across attempts is its
+# best-observed steady state (the same criterion-style logic as the
+# in-attempt best-of-2). Every attempt's summary is recorded for provenance.
+MIN_ATTEMPTS = 2
+MAX_ATTEMPTS = 3
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # a degraded host phase (sibling DRAM load) inflates suite numbers ~2x,
-    # and the before/after probes can MISS a mid-suite dip — so always run
-    # >=2 full attempts (up to 3 if none is endpoint-quiet) and MIN-MERGE
-    # per entry: each entry's min across attempts is its best-observed
-    # steady state (the same criterion-style logic as the in-attempt
-    # best-of-2). Every attempt's summary is recorded for provenance.
-    max_attempts = int(os.environ.get("MIT_BENCH_ATTEMPTS", "3"))
-    min_attempts = min(int(os.environ.get("MIT_BENCH_MIN_ATTEMPTS", "2")), max_attempts)
     attempts = []
-    for _ in range(max_attempts):
+    for _ in range(MAX_ATTEMPTS):
         attempts.append(run(sf_dir, cpus))
-        if len(attempts) >= min_attempts and any(a["host_quiet"] for a in attempts):
+        if len(attempts) >= MIN_ATTEMPTS and any(a["host_quiet"] for a in attempts):
             break
     # "best" supplies the merged artifact's provenance fields (host probes,
     # host_quiet): pick it among the attempts with the MOST completed
@@ -361,7 +256,6 @@ def main() -> int:
     # is byte-stable across runs and diffable against prior rounds.
     all_names = {n for a in attempts for n in a["queries"]}
     ordered = [n for n in ["flagship_extract", *BENCH_QUERIES] if n in all_names]
-    ordered += sorted(all_names.difference(ordered))
     merged["queries"] = {
         name: min(a["queries"][name] for a in attempts if name in a["queries"])
         for name in ordered

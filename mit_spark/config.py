@@ -15,7 +15,7 @@ broadcast-able plain values.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -56,13 +56,11 @@ class DetectorOptions:
     # outputs. Parity tests keep it on.
     emit_mask: bool = True
 
-    def to_dict(self) -> dict:
-        return asdict(self)
-
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """End-to-end job config (broadcast to executors as a plain dict)."""
+    """End-to-end job config (its detector and preprocessor options travel
+    to executors as plain dicts)."""
 
     detector: DetectorOptions = field(default_factory=DetectorOptions)
     preprocessor: PreprocessorOptions = field(default_factory=PreprocessorOptions)
@@ -70,17 +68,11 @@ class PipelineConfig:
     n_buckets: int = 64
     # salt factor for the final per-doc regroup of media-heavy documents
     regroup_salt: int = 8
-    # explode threshold: docs with more media spans than this get salted
-    heavy_doc_spans: int = 32
     # per-span poison tolerance (SURVEY.md §2.10): a span whose detect/OCR
     # raises is recorded as an error row instead of failing the task, so one
     # poisoned document cannot kill a 10^12-doc job. Fault injection for
     # tests: media_refs listed here raise inside the UDF.
     fault_inject_refs: tuple = ()
-
-    def to_dict(self) -> dict:
-        d = asdict(self)
-        return d
 
 
 # Output-content spec version: bump when any change alters extracted bytes

@@ -1,8 +1,8 @@
 """The closed-form detected-quad model behind the flagship order oracle.
 
-The SQL oracle for flagship_extract / flagship_order_digest re-derives the
-detector's output quad bbox in closed form (border -> bilinear ink-band
-extent -> unclip delta -> truncation -> inverse-ratio truncation). This
+The SQL oracle for flagship_extract re-derives the detector's output quad
+bbox in closed form (border -> bilinear ink-band extent -> unclip delta ->
+truncation -> inverse-ratio truncation). This
 suite pins that model against the REAL detect path so a change to
 imageops.resize, the synthetic forward's ink band, dbnet_post's unclip, or
 the rounding helpers immediately breaks a fast numpy test instead of

@@ -93,12 +93,11 @@ def test_heavy_doc_media_extraction(spark):
 
 
 def test_detection_recovers_ground_truth_exactly():
-    """Absolute-truth invariant backing the flagship SQL oracles
-    (flagship_span_counts / flagship_text_digest): at detect_size=512 the
-    detect->OCR path recovers EXACTLY media_truth's rects — same count, same
-    digit strings — for every media ref. The DuckDB oracle re-derives
-    media_truth arithmetic in SQL, so this equality is what makes those
-    oracles sound."""
+    """Absolute-truth invariant backing the flagship SQL oracle
+    (flagship_extract): at detect_size=512 the detect->OCR path recovers
+    EXACTLY media_truth's rects — same count, same digit strings — for every
+    media ref. The DuckDB oracle re-derives media_truth arithmetic in SQL,
+    so this equality is what makes that oracle sound."""
     from mit_spark.config import DetectorOptions, PreprocessorOptions
     from mit_spark.oracle import extract_media_span
     from mit_spark.synth import gen_doc, media_truth

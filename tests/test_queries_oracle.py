@@ -53,9 +53,6 @@ def test_query_matches_oracle(spark, ddb, name):
     sdf = builder(spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
     scols = list(sdf.columns)
-    if sql is None:
-        assert len(srows) >= 0  # rows-only check (non-SQL-expressible op)
-        return
     drel = ddb.execute(sql)
     dcols = [d[0] for d in drel.description]
     drows = drel.fetchall()
@@ -93,6 +90,44 @@ def test_gate_detects_wrong_values(spark, ddb):
     assert _canon([tuple(r) for r in bad], cols) != _canon(drows, dcols)
     # dropping a row must mismatch too
     assert _canon(srows[1:], cols) != _canon(drows, dcols)
+
+
+def test_gate_detects_flagship_span_faults(ddb):
+    """Negative control for the flagship's row-level compare, DuckDB only:
+    the faults a per-document span count, text multiset or reading-order
+    digest would catch must each fail `_canon` equality against
+    flagship_extract's oracle rows."""
+    from mit_spark.queries import QUERIES
+
+    drel = ddb.execute(QUERIES["flagship_extract"][1])
+    cols = [d[0] for d in drel.description]
+    rows = drel.fetchall()
+    doc, kind, text, order = (cols.index(c) for c in ("doc_id", "kind", "text", "order"))
+    want = _canon(rows, cols)
+
+    def corrupt(*edits):  # (row index, column name, new value)
+        bad = [list(r) for r in rows]
+        for i, col, v in edits:
+            bad[i][cols.index(col)] = v
+        return _canon(bad, cols)
+
+    media = [i for i, r in enumerate(rows) if r[kind] == "media"]
+    # two media spans of one document with different texts
+    i, j = next(
+        (i, j)
+        for i in media
+        for j in media
+        if i < j and rows[i][doc] == rows[j][doc] and rows[i][text] != rows[j][text]
+    )
+    swap = corrupt((i, "order", rows[j][order]), (j, "order", rows[i][order]))
+    assert swap != want, "swapped reading order of two media spans"
+    t = rows[i][text]
+    assert corrupt((i, "text", t[:-1] + ("1" if t.endswith("0") else "0"))) != want, (
+        "changed one OCR character"
+    )
+    docs = sorted({r[doc] for r in rows})
+    neighbour = docs[docs.index(rows[i][doc]) + 1]
+    assert corrupt((i, "doc_id", neighbour)) != want, "moved a span to the next doc"
 
 
 def test_dedup_clusters_idempotent_and_cache_clean(spark):
