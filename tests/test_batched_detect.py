@@ -177,3 +177,66 @@ def test_peak_memory_bounded_by_shape_groups():
     assert large < 2 * small, (
         f"peak {large / 1e6:.1f} MB over 64 spans vs {small / 1e6:.1f} MB over 8"
     )
+
+
+def test_perfbench_replay_gives_the_batched_rows():
+    """The benchmark's traced run imports the media UDF's public phase
+    functions by name and replays them in extract_media_spans_batched's
+    order; a renamed phase or a changed signature must fail here first."""
+    import perfbench.checks  # noqa: F401  (imported by every benchmark run)
+    from perfbench.tracing import PHASES, Tracer, replay_media
+
+    spans = _spans()[:8]
+    tr = Tracer("tier1")
+    rows, n_quads = replay_media(spans, OPTS, PRE, tr)
+    assert rows == extract_media_spans_batched(spans, OPTS, PRE)
+    assert n_quads > 0
+    assert {s["name"] for s in tr.spans} == set(PHASES)
+
+
+# sha256 of the rows and detections below; it changes only together with
+# PIPELINE_SPEC_VERSION (mit_spark/config.py), because a kernel rewrite that
+# moves any quad corner, score bit, mask pixel or OCR character changes what
+# the pipeline emits
+ROWS_DIGEST = "55fa28b6ade8d41d2a7b24109d246d5d7895847f5daec36fb0aea4c067fa94c8"
+DETECT_DIGEST = "d005e4c5a6ab5d91bf12868d8fd528813940fe87a37ad5ba39a84bd494d8ce58"
+
+
+def _digest(items) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for item in items:
+        h.update(repr(item).encode())
+    return h.hexdigest()
+
+
+def test_golden_digest_of_media_rows():
+    """Rows of extract_media_spans_batched over 96 media spans at
+    detect_size 512, hashed: the end-to-end check that the media UDF's
+    output is unchanged by a rewrite of any kernel under it."""
+    from mit_spark.config import PIPELINE_SPEC_VERSION
+
+    spans = _spans(n_docs=48)[:96]
+    assert len(spans) == 96
+    rows = extract_media_spans_batched(spans, OPTS, PRE)
+    assert (PIPELINE_SPEC_VERSION, _digest(rows)) == ("2", ROWS_DIGEST)
+
+
+def test_golden_digest_of_detect_quads_and_masks():
+    """detector.detect at detect_size 1024 with the inpainting mask, rotate
+    and gamma_correct on: quads (corners, score, vertical flag) and mask
+    bytes over 16 rendered pages, hashed."""
+    from mit_spark.config import PIPELINE_SPEC_VERSION
+    from mit_spark.operators.detector import detect
+    from mit_spark.synth import render_media
+
+    opts = DetectorOptions(detect_size=1024, emit_mask=True)
+    pre = PreprocessorOptions(rotate=True, gamma_correct=True)
+    out = []
+    for _doc, ref, _off in _spans(n_docs=40)[:16]:
+        quads, mask = detect(render_media(str(ref)), synthetic_forward, opts, pre)
+        out.append([(q.pts.tolist(), q.score, q.vertical) for q in quads])
+        out.append((mask.shape, mask.tobytes()))
+    assert sum(len(q) for q in out[::2]) > 0
+    assert (PIPELINE_SPEC_VERSION, _digest(out)) == ("2", DETECT_DIGEST)
