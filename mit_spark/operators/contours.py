@@ -11,15 +11,22 @@ oracle == pipeline, and both import THIS module):
       views: connected_components gives every pixel of each component;
       component_row_extremes gives each row's leftmost and rightmost pixel.
       The detect path (dbnet_post.boxes_from_bitmap) uses the row-extremes
-      view, which holds the component's whole convex hull.
+      view, which holds the component's whole convex hull, and hulls it
+      with row_extremes_hull (drops the row extremes that cannot be hull
+      vertices before the sequential monotone chain).
   * min_area_rect          <- cv2.minAreaRect + boxPoints as used by
       get_mini_boxes (/root/reference/crates/util/src/dbnet.rs:113-149):
-      convex hull + rotating calipers.
-  * fill_polygon_mask      <- cv2.fillPoly as used by box_score_fast
-      (dbnet.rs:184-200): even-odd scanline at integer pixel centers.
+      convex hull + rotating calipers over all edges at once.
   * offset_polygon_round   <- Clipper2 ROUND_JOIN polygon offset as used by
       unclip (dbnet.rs:300-324): exact round-join offset of a convex polygon
-      (arc-sampled corners).
+      (arc-sampled corners), all vertices' arcs in one array pass.
+  (cv2.fillPoly, as used by box_score_fast, is filled in
+  dbnet_post.box_score_fast itself: its polygon is always a convex hull.)
+
+The per-candidate kernels here run a few times per text candidate, on 4- to
+40-point arrays, so their cost is numpy's per-call overhead: each is a
+fixed handful of array operations, bit-identical to the scalar loops kept
+as definitions in tests/scalar_oracles.py.
 """
 
 from __future__ import annotations
@@ -27,6 +34,9 @@ from __future__ import annotations
 import numpy as np
 
 from mit_spark.operators.geometry import convex_hull
+
+# (dx, dy) -> (-dy, dx) as dn[:, ::-1] * _TO_NORMAL: the left normal
+_TO_NORMAL = np.array([-1.0, 1.0])
 
 
 # ---------------------------------------------------------------------------
@@ -59,7 +69,7 @@ def _label_runs(bitmap: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray,
     K = w + 2
     padded = np.zeros((len(ink_rows), K), dtype=np.int8)
     padded[:, 1:-1] = bm[ink_rows]
-    d = np.diff(padded, axis=1).ravel()
+    d = (padded[:, 1:] - padded[:, :-1]).ravel()
     starts_flat = np.flatnonzero(d == 1)
     ends_flat = np.flatnonzero(d == -1)  # same count/order per row
     run_rows = ink_rows[starts_flat // (K - 1)]
@@ -101,8 +111,13 @@ def _label_runs(bitmap: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray,
         ri, rjr = _find(parent, i), _find(parent, j)
         if ri != rjr:
             parent[max(ri, rjr)] = min(ri, rjr)
-    roots = np.fromiter((_find(parent, i) for i in range(n_runs)), dtype=np.int64, count=n_runs)
-    labels = np.unique(roots, return_inverse=True)[1]
+    # every parent index is at most its child's, so one ascending pass
+    # leaves each run pointing at its root
+    for i in range(n_runs):
+        parent[i] = parent[parent[i]]
+    roots = np.array(parent, dtype=np.int64)
+    # label = rank of the root among the roots
+    labels = (np.cumsum(roots == np.arange(n_runs)) - 1)[roots]
     order = np.argsort(labels, kind="stable")
     return run_rows[order], run_starts[order], run_ends[order], labels[order]
 
@@ -131,13 +146,31 @@ def component_row_extremes(bitmap: np.ndarray) -> list[np.ndarray]:
     if not len(rows):
         return []
     # one segment per (component, row); a row may hold several runs
-    seg = np.flatnonzero(np.r_[True, (labels[1:] != labels[:-1]) | (rows[1:] != rows[:-1])])
+    seg = np.flatnonzero(np.concatenate(([True], (labels[1:] != labels[:-1]) | (rows[1:] != rows[:-1]))))
     pts = np.empty((len(seg), 2, 2), dtype=np.int64)
     pts[:, 0, 0] = np.minimum.reduceat(starts, seg)
     pts[:, 1, 0] = np.maximum.reduceat(ends - 1, seg)
     pts[:, :, 1] = rows[seg, None]
-    new_comp = np.flatnonzero(np.diff(labels[seg])) + 1
-    return np.split(pts.reshape(-1, 2), 2 * new_comp)
+    bounds = [0, *(2 * np.flatnonzero(np.diff(labels[seg])) + 2).tolist(), 2 * len(seg)]
+    flat = pts.reshape(-1, 2)
+    return [flat[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
+def row_extremes_hull(ext: np.ndarray) -> np.ndarray:
+    """convex_hull of one component's row extremes (one item of
+    component_row_extremes), equal to convex_hull(ext) point for point.
+
+    The rows are consecutive, so a left extreme of an inner row whose x is at
+    least the mean of its neighbours' lies between their midpoint and its
+    row's right extreme: inside the hull of the other points, and no hull
+    vertex; mirrored on the right. The monotone chain keeps only strict hull
+    vertices (exact on integer points), so dropping those first leaves its
+    output unchanged and feeds it a few points instead of two per row."""
+    x = ext[:, 0].reshape(-1, 2)
+    keep = np.ones(x.shape, dtype=bool)
+    keep[1:-1, 0] = 2 * x[1:-1, 0] < x[:-2, 0] + x[2:, 0]
+    keep[1:-1, 1] = 2 * x[1:-1, 1] > x[:-2, 1] + x[2:, 1]
+    return convex_hull(ext[keep.ravel()].astype(np.float64))
 
 
 # ---------------------------------------------------------------------------
@@ -163,100 +196,22 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
     # rotating calipers vectorized over ALL edges at once (the per-edge
     # loop cost ~8 small numpy calls each; dots here are 2-term products so
     # the arithmetic is order-identical to the scalar loop, and argmin keeps
-    # the loop's first-strict-min tie behavior)
-    edges = np.roll(hull, -1, axis=0) - hull
-    norms = np.hypot(edges[:, 0], edges[:, 1])
-    valid = norms > 0
-    dn = edges[valid] / norms[valid, None]              # (m, 2) unit dirs
-    nv = np.stack([-dn[:, 1], dn[:, 0]], axis=1)       # (m, 2) normals
-    pd_all = hull @ dn.T                                # (n_pts, m)
-    pn_all = hull @ nv.T
-    d0s, d1s = pd_all.min(axis=0), pd_all.max(axis=0)
-    n0s, n1s = pn_all.min(axis=0), pn_all.max(axis=0)
-    ws, hs = d1s - d0s, n1s - n0s
-    k = int(np.argmin(ws * hs))
-    d, nvec = dn[k], nv[k]
-    d0, d1, n0, n1, w, h = d0s[k], d1s[k], n0s[k], n1s[k], ws[k], hs[k]
-    corners = np.array(
-        [
-            d0 * d + n0 * nvec,
-            d1 * d + n0 * nvec,
-            d1 * d + n1 * nvec,
-            d0 * d + n1 * nvec,
-        ]
-    )
-    return corners.astype(np.float32), float(w), float(h)
-
-
-# ---------------------------------------------------------------------------
-# polygon scanline fill (even-odd), for box_score_fast's masked mean
-
-
-def fill_polygon_mask(poly: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Rasterize ``poly`` ((N,2) float, x/y in mask coords) into a bool mask of
-    shape (height, width) using even-odd scanline at integer pixel centers.
-
-    Vectorized over scanlines (edges x rows matrices + a difference-array
-    interval fill) — 10x the per-row python loop, property-tested equal to
-    it over 3000 random/integer/degenerate polygons. Same rounding rules:
-    lo = max(ceil(x_even - 0.5), 0), hi = min(floor(x_odd + 0.5), w-1),
-    inclusive fill, unpaired trailing crossings ignored; rows having ONLY
-    horizontal edges keep the original per-edge fallback."""
-    p = np.asarray(poly, dtype=np.float64)
-    mask = np.zeros((height, width), dtype=bool)
-    n = len(p)
-    if n < 3:
-        # degenerate: mark covered pixels directly
-        xi = np.clip(np.round(p[:, 0]).astype(int), 0, width - 1)
-        yi = np.clip(np.round(p[:, 1]).astype(int), 0, height - 1)
-        mask[yi, xi] = True
-        return mask
-    y0 = max(int(np.floor(p[:, 1].min())), 0)
-    y1 = min(int(np.ceil(p[:, 1].max())), height - 1)
-    if y1 < y0:
-        return mask
-    xA, yA = p[:, 0], p[:, 1]
-    xB, yB = np.roll(p[:, 0], -1), np.roll(p[:, 1], -1)
-    ys = np.arange(y0, y1 + 1, dtype=np.float64)
-    # crossing condition per (edge, row) — half-open rule avoids double count
-    condM = ((yA[:, None] <= ys) & (yB[:, None] > ys)) | (
-        (yB[:, None] <= ys) & (yA[:, None] > ys)
-    )
-    rows_any = condM.any(axis=0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        tM = (ys[None, :] - yA[:, None]) / (yB[:, None] - yA[:, None])
-        xM = xA[:, None] + tM * (xB[:, None] - xA[:, None])
-    xM = np.where(condM, xM, np.inf)
-    xs_sorted = np.sort(xM, axis=0)  # real crossings first, inf padding below
-    firsts = xs_sorted[0::2]
-    seconds = xs_sorted[1::2]
-    if seconds.shape[0] < firsts.shape[0]:
-        seconds = np.vstack([seconds, np.full((1, xs_sorted.shape[1]), np.inf)])
-    cnt = condM.sum(axis=0)
-    pair_valid = (np.arange(xs_sorted.shape[0])[0::2][:, None] + 1) < cnt[None, :]
-    los = np.where(pair_valid, firsts, 0.0)
-    his = np.where(pair_valid, seconds, -1.0)
-    lo = np.maximum(np.ceil(los - 0.5), 0.0)
-    hi = np.minimum(np.floor(his + 0.5), width - 1.0)
-    valid = pair_valid & (lo <= hi)
-    lo_i = np.where(valid, lo, 0).astype(np.int64)
-    hi_i = np.where(valid, hi, -1).astype(np.int64)
-    diff = np.zeros((len(ys), width + 1), dtype=np.int32)
-    pidx, yidx = np.nonzero(valid)
-    np.add.at(diff, (yidx, lo_i[pidx, yidx]), 1)
-    np.add.at(diff, (yidx, hi_i[pidx, yidx] + 1), -1)
-    mask[y0 : y1 + 1] |= np.cumsum(diff[:, :width], axis=1) > 0
-    # rows whose only incident edges are horizontal (no crossings anywhere)
-    for k in np.nonzero(~rows_any)[0]:
-        y = y0 + int(k)
-        on = (yA == y) & (yB == y)
-        for a in np.nonzero(on)[0]:
-            xs = sorted((xA[a], xB[a]))
-            l = max(int(np.ceil(xs[0])), 0)
-            h = min(int(np.floor(xs[1])), width - 1)
-            if l <= h:
-                mask[y, l : h + 1] = True
-    return mask
+    # the loop's first-strict-min tie behavior). Hull points are distinct,
+    # so no edge has zero length.
+    edges = np.concatenate((hull[1:], hull[:1])) - hull
+    dn = edges / np.hypot(edges[:, 0], edges[:, 1])[:, None]   # (m, 2) unit dirs
+    nv = dn[:, ::-1] * _TO_NORMAL                               # (m, 2) normals
+    m = len(dn)
+    # projections on every direction, then every normal: (n_pts, 2m)
+    proj = np.concatenate((hull @ dn.T, hull @ nv.T), axis=1)
+    lo, hi = proj.min(axis=0), proj.max(axis=0)
+    size = hi - lo                                              # widths, then heights
+    k = int(np.argmin(size[:m] * size[m:]))
+    (d0, n0), (d1, n1) = lo[[k, m + k]].tolist(), hi[[k, m + k]].tolist()
+    # corners d0*d + n0*n, d1*d + n0*n, d1*d + n1*n, d0*d + n1*n, all at once
+    coef = np.array([[d0, n0], [d1, n0], [d1, n1], [d0, n1]])
+    corners = coef[:, :1] * dn[k] + coef[:, 1:] * nv[k]
+    return corners.astype(np.float32), float(size[k]), float(size[m + k])
 
 
 # ---------------------------------------------------------------------------
@@ -266,47 +221,46 @@ def fill_polygon_mask(poly: np.ndarray, width: int, height: int) -> np.ndarray:
 def offset_polygon_round(poly: np.ndarray, delta: float, arc_steps: int = 8) -> np.ndarray:
     """Outward offset of a convex CCW/CW polygon by ``delta`` with round
     joins: each vertex contributes arc samples on the circle of radius delta
-    between its adjacent edge normals. Returns (M, 2) float64 points."""
+    between its adjacent edge normals. Returns (M, 2) float64 points.
+
+    One pass over all vertices: edge normals, their angles, each vertex's
+    sweep and step count as arrays, then every arc angle a0 + da * k / steps
+    in one array and one cos and one sin over it. Bit-identical to the
+    per-vertex loop kept in the tests (tests/scalar_oracles.py); a vertex
+    with a zero-length adjacent edge contributes nothing."""
     p = np.asarray(poly, dtype=np.float64)
     n = len(p)
     if n < 3 or delta <= 0:
         return p.copy()
 
     # ensure CCW orientation so outward normals are consistent
-    area2 = float(
-        np.dot(p[:, 0], np.roll(p[:, 1], -1)) - np.dot(p[:, 1], np.roll(p[:, 0], -1))
-    )
-    if area2 < 0:
+    x, y = p[:, 0], p[:, 1]
+    x1, y1 = np.concatenate((x[1:], x[:1])), np.concatenate((y[1:], y[:1]))
+    if np.dot(x, y1) - np.dot(y, x1) < 0:
         p = p[::-1]
 
-    out = []
-    for i in range(len(p)):
-        prev_ = p[i - 1]
-        cur = p[i]
-        nxt = p[(i + 1) % len(p)]
-        e0 = cur - prev_
-        e1 = nxt - cur
-        l0, l1 = np.hypot(*e0), np.hypot(*e1)
-        if l0 == 0 or l1 == 0:
-            continue
-        # outward normals for CCW polygon
-        n0 = np.array([e0[1], -e0[0]]) / l0
-        n1 = np.array([e1[1], -e1[0]]) / l1
-        a0 = np.arctan2(n0[1], n0[0])
-        a1 = np.arctan2(n1[1], n1[0])
-        # sweep from a0 to a1 the short way around (convex turn)
-        da = a1 - a0
-        while da < 0:
-            da += 2 * np.pi
-        while da > 2 * np.pi:
-            da -= 2 * np.pi
-        steps = max(int(np.ceil(da / (np.pi / arc_steps))), 1)
-        angles = a0 + da * np.arange(steps + 1) / steps
-        for a in angles:
-            out.append(cur + delta * np.array([np.cos(a), np.sin(a)]))
-    return np.array(out, dtype=np.float64)
+    # edge i runs from vertex i to i+1; vertex i joins edges i-1 and i
+    e = np.concatenate((p[1:], p[:1])) - p
+    length = np.hypot(e[:, 0], e[:, 1])
+    # outward normal (ey, -ex) / length of a CCW edge, as an angle
+    safe = np.where(length == 0, 1.0, length)
+    ang = np.arctan2(-e[:, 0] / safe, e[:, 1] / safe)
+    keep = (length != 0) & (np.concatenate((length[-1:], length[:-1])) != 0)
+    if not keep.any():  # no vertex between two real edges: no points, shape (0,)
+        return np.empty(0, dtype=np.float64)
+    a0 = np.concatenate((ang[-1:], ang[:-1]))[keep]
+    # sweep from a0 to a1 the short way around (convex turn)
+    da = ang[keep] - a0
+    da = np.where(da < 0, da + 2 * np.pi, da)
+    da = np.where(da > 2 * np.pi, da - 2 * np.pi, da)
+    steps = np.maximum(np.ceil(da / (np.pi / arc_steps)).astype(np.int64), 1)
+    counts = steps + 1
+    k = np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
+    angles = np.repeat(a0, counts) + np.repeat(da, counts) * k / np.repeat(steps, counts)
+    arcs = np.stack([np.cos(angles), np.sin(angles)], axis=1)
+    return np.repeat(p[keep], counts, axis=0) + delta * arcs
 
 
 def polygon_perimeter(poly: np.ndarray) -> float:
     p = np.asarray(poly, dtype=np.float64)
-    return float(np.sqrt(((p - np.roll(p, -1, axis=0)) ** 2).sum(axis=1)).sum())
+    return float(np.sqrt(((p - np.concatenate((p[1:], p[:1]))) ** 2).sum(axis=1)).sum())

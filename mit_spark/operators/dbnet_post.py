@@ -23,20 +23,27 @@ through contours.component_row_extremes: each component as its per-row
 leftmost and rightmost pixels, which hold its whole convex hull. The score
 and the first mini box are computed over that hull, which for text blobs
 matches cv2's outer-contour behaviour.
+
+Each candidate costs a fixed handful of numpy calls on a few points (hull,
+two mini boxes, score, unclip, rescale), not a python loop per row, vertex
+or pixel; every value is bit-identical to the scalar definitions in
+tests/scalar_oracles.py and to tests/test_batched_detect.py's golden digest.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
 from mit_spark.operators.contours import (
     component_row_extremes,
-    fill_polygon_mask,
     min_area_rect,
     offset_polygon_round,
     polygon_perimeter,
+    row_extremes_hull,
 )
-from mit_spark.operators.geometry import convex_hull, polygon_area, roll_rows, rust_round, trunc_i64
+from mit_spark.operators.geometry import polygon_area, roll_rows, rust_round, trunc_i64
 
 
 def binarize(pred: np.ndarray, thresh: float) -> np.ndarray:
@@ -50,35 +57,74 @@ def get_mini_boxes(points: np.ndarray) -> tuple[np.ndarray, float]:
     pairwise-y rules; returns (4x2 float32, min side length)."""
     corners, w, h = min_area_rect(points)
     order = np.argsort(corners[:, 0], kind="stable")
-    pv = corners[order]
-    if pv[1, 1] > pv[0, 1]:
-        i1, i4 = 0, 1
-    else:
-        i1, i4 = 1, 0
-    if pv[3, 1] > pv[2, 1]:
-        i2, i3 = 2, 3
-    else:
-        i2, i3 = 3, 2
-    box = np.stack([pv[i1], pv[i2], pv[i3], pv[i4]]).astype(np.float32)
-    return box, float(min(w, h))
+    y = corners[order, 1].tolist()
+    i1, i4 = (0, 1) if y[1] > y[0] else (1, 0)
+    i2, i3 = (2, 3) if y[3] > y[2] else (3, 2)
+    return corners[order[[i1, i2, i3, i4]]], float(min(w, h))
 
 
 def box_score_fast(pred: np.ndarray, contour_poly: np.ndarray) -> float:
     """dbnet.rs:151-222: mean of ``pred`` inside the filled polygon, over the
-    clamped bounding-box ROI."""
+    clamped bounding-box ROI.
+
+    The fill is cv2.fillPoly's even-odd scanline at integer pixel centres,
+    in the ROI's frame: per row, the crossings of the edges that straddle it
+    (half-open rule) fill from max(ceil(x_left - 0.5), 0) to
+    min(floor(x_right + 0.5), w - 1); a row with no crossing keeps the
+    pixels of the horizontal edges on it. ``contour_poly`` must be convex
+    (the only caller passes a convex hull), so each row crosses it at most
+    once each side and only its top row can be horizontal-only: the rows'
+    single spans come from one (rows, edges) pass, and the mask from one
+    broadcast comparison. Bit-identical to the per-row fill kept in the
+    tests (tests/scalar_oracles.py)."""
     h, w = pred.shape
-    xs = contour_poly[:, 0]
-    ys = contour_poly[:, 1]
-    xmin = int(np.clip(np.floor(xs.min()), 0, w - 1))
-    xmax = int(np.clip(np.ceil(xs.max()), 0, w - 1))
-    ymin = int(np.clip(np.floor(ys.min()), 0, h - 1))
-    ymax = int(np.clip(np.ceil(ys.max()), 0, h - 1))
+    p = np.asarray(contour_poly, dtype=np.float64)
+    pts = p.tolist()  # the few vertices' scalars, without numpy reductions
+    px0, py0 = (min(c) for c in zip(*pts))
+    px1, py1 = (max(c) for c in zip(*pts))
+    xmin = min(max(math.floor(px0), 0), w - 1)
+    xmax = min(max(math.ceil(px1), 0), w - 1)
+    ymin = min(max(math.floor(py0), 0), h - 1)
+    ymax = min(max(math.ceil(py1), 0), h - 1)
     bw = xmax - xmin + 1
-    bh = ymax - ymin + 1
-    shifted = contour_poly - np.array([xmin, ymin], dtype=np.float64)
-    mask = fill_polygon_mask(shifted, bw, bh)
-    roi = pred[ymin : ymax + 1, xmin : xmax + 1]
-    cnt = int(mask.sum())
+    q = p - np.array([xmin, ymin], dtype=np.float64)
+    if len(q) < 3:  # degenerate: mark the rounded vertices
+        mask = np.zeros((ymax - ymin + 1, bw), dtype=bool)
+        xi = np.clip(np.round(q[:, 0]).astype(int), 0, bw - 1)
+        yi = np.clip(np.round(q[:, 1]).astype(int), 0, ymax - ymin)
+        mask[yi, xi] = True
+        y0 = 0
+    else:
+        # rows in the ROI frame; min/max commute with subtracting ymin
+        top = py1 - ymin
+        y0 = max(math.floor(py0 - ymin), 0)
+        y1 = min(math.ceil(top), ymax - ymin)
+        if y1 < y0:
+            return 0.0
+        nxt = np.concatenate((q[1:], q[:1]))
+        e = nxt - q
+        xa, ya, xb, yb, dx, dy = q[:, 0], q[:, 1], nxt[:, 0], nxt[:, 1], e[:, 0], e[:, 1]
+        ys = np.arange(y0, y1 + 1, dtype=np.float64)[:, None]
+        cross = (ya <= ys) != (yb <= ys)  # half-open: one end on or below
+        # x where each edge meets each row; horizontal edges never cross,
+        # so their divisor may be anything finite
+        x = xa + (ys - ya) / np.where(dy == 0, 1.0, dy) * dx
+        # a convex polygon crosses a row twice or not at all
+        x = np.sort(np.where(cross, x, np.inf), axis=1)
+        lo = np.maximum(np.ceil(x[:, 0] - 0.5), 0.0)
+        hi = np.minimum(np.floor(x[:, 1] + 0.5), bw - 1.0)
+        if top == math.floor(top) and y0 <= top <= y1:
+            # the top row has no crossing; its horizontal edges, one
+            # contiguous run on a convex polygon, fill their pixel span
+            flat = (ya == top) & (yb == top)
+            if flat.any():
+                ends = np.concatenate((xa[flat], xb[flat])).tolist()
+                lo[int(top) - y0] = max(math.ceil(min(ends)), 0)
+                hi[int(top) - y0] = min(math.floor(max(ends)), bw - 1)
+        cols = np.arange(bw)
+        mask = (cols >= lo[:, None]) & (cols <= hi[:, None])
+    roi = pred[ymin + y0 : ymin + y0 + len(mask), xmin : xmax + 1]
+    cnt = np.count_nonzero(mask)
     if cnt == 0:
         return 0.0
     return float(roi[mask].astype(np.float64).sum() / cnt)
@@ -116,9 +162,12 @@ def boxes_from_bitmap(
     num = min(len(comps), max_candidates)
     boxes = np.zeros((num, 4, 2), dtype=np.int64)
     scores = np.zeros(num, dtype=np.float64)
+    to_src = np.array([width, height], dtype=np.float32)
+    to_dest = np.array([dest_width, dest_height], dtype=np.float32)
+    dest_max = np.array([dest_width, dest_height], dtype=np.float64)
 
     for index in range(num):
-        hull = convex_hull(comps[index].astype(np.float64))
+        hull = row_extremes_hull(comps[index])
         # the monotone chain is idempotent on its own output, so the mini
         # box over the hull equals the one over the extremes
         points, sside = get_mini_boxes(hull)
@@ -135,11 +184,10 @@ def boxes_from_bitmap(
         if sside < min_size + 2.0:
             continue
 
-        x = np.clip(rust_round(box[:, 0] / width * dest_width), 0.0, float(dest_width))
-        y = np.clip(rust_round(box[:, 1] / height * dest_height), 0.0, float(dest_height))
-        out = np.stack([x, y], axis=1)
-        startidx = int(np.argmin(out.sum(axis=1)))
-        out = roll_rows(out, 4 - startidx)
+        # x / width * dest_width per column, in float32 like the scalar form
+        out = np.minimum(np.maximum(rust_round(box / to_src * to_dest), 0.0), dest_max)
+        corner_sums = (out[:, 0] + out[:, 1]).tolist()
+        out = roll_rows(out, 4 - corner_sums.index(min(corner_sums)))  # first min
         scores[index] = score
         boxes[index] = out.astype(np.int64)
 

@@ -219,8 +219,8 @@ def fill_polys_mask(quads: list, width: int, height: int) -> np.ndarray:
     """Paddle's full-page quad rasterization (paddle/src/lib.rs:211-264):
     per scanline, edge intersections x = x0 + t*dx truncated to int
     (`as i64` = toward zero), sorted, consecutive pairs filled INCLUSIVE
-    with endpoint clamp. Kept distinct from contours.fill_polygon_mask
-    (even-odd pixel-center fill) because the two references round
+    with endpoint clamp. Kept distinct from dbnet_post.box_score_fast's
+    fill (even-odd pixel-center fill) because the two references round
     differently.
 
     Vectorized per quad: all scanline/edge intersections in one (rows,

@@ -139,7 +139,9 @@ def polygon_area(poly: np.ndarray) -> float:
     if len(p) < 3:
         return 0.0
     x, y = p[:, 0], p[:, 1]
-    return float(abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) / 2.0)
+    # each concatenate is np.roll(v, -1): the same contiguous copy, cheaper
+    x1, y1 = np.concatenate((x[1:], x[:1])), np.concatenate((y[1:], y[:1]))
+    return float(abs(np.dot(x, y1) - np.dot(y, x1)) / 2.0)
 
 
 # ---------------------------------------------------------------------------
@@ -195,7 +197,9 @@ class Quad:
 
 
 def roll_rows(arr: np.ndarray, shift: int) -> np.ndarray:
-    """Rotate rows down by ``shift`` (negative rolls up); == np.roll axis 0."""
+    """Rotate rows down by ``shift`` (negative rolls up); == np.roll axis 0,
+    as one concatenate."""
     if arr.shape[0] == 0:
         return arr.copy()
-    return np.roll(arr, shift, axis=0)
+    k = -shift % arr.shape[0]
+    return np.concatenate((arr[k:], arr[:k]))

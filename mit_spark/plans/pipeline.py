@@ -47,9 +47,10 @@ def _media_udf(detector_conf: dict, pre_conf: dict, fault_inject_refs: tuple = (
         import pandas as pd
 
         from mit_spark.operators.batched_detect import extract_media_spans_batched
-        from mit_spark.session import apply_worker_env
+        from mit_spark.session import apply_worker_env, drop_zip_importers
 
         apply_worker_env()
+        drop_zip_importers()
         opts = DetectorOptions(**detector_conf)
         pre = PreprocessorOptions(**pre_conf)
         fault_refs = frozenset(fault_inject_refs or ())
@@ -85,7 +86,10 @@ def media_task_count(par: int) -> int:
     7.75 / 3.35 / 2.41 / 2.17 s over 1,200 docs with 156 media spans, and
     18.6 / 14.0 / 13.2 / 13.3 s over 300 docs with 1,528 media spans.
     Worker memory does not grow with the longer Arrow batches this gives,
-    because the media UDF streams them (operators/batched_detect.py).
+    because the media UDF streams them (operators/batched_detect.py). The
+    media UDF also drops the cached zipimporters
+    (session.drop_zip_importers), so later tasks in a reused worker skip
+    the re-read.
 
     ``par`` comes from defaultParallelism at PLAN time, which is correct on
     a static cluster. Under dynamic allocation it reflects the executors

@@ -14,12 +14,16 @@ BENCH/BASELINE.md):
     the cap: the media UDF streams a batch shape group by shape group
     (operators/batched_detect.py). The media task count, not the batch
     size, sets the fixed per-task cost (plans/pipeline.py
-    media_task_count; ~0.25 CPU-s per Python task on a 4-core host).
+    media_task_count; ~0.25 CPU-s per Python task on a 4-core host, most
+    of it the zipimporter re-reads that drop_zip_importers spares later
+    tasks of a reused worker).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 WORKER_ENV = {
     "MALLOC_MMAP_THRESHOLD_": "1073741824",
@@ -33,6 +37,21 @@ WORKER_ENV = {
 def apply_worker_env() -> None:
     for k, v in WORKER_ENV.items():
         os.environ.setdefault(k, v)
+
+
+def drop_zip_importers() -> None:
+    """Remove the zipimporter entries from ``sys.path_importer_cache``.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (pyspark/worker_util.py ``setup_spark_files``), and on
+    CPython 3.11 each cached zipimporter then re-reads its archive's
+    directory: 16 of them (pyspark.zip and py4j's zip) cost 0.15-0.29 CPU-s
+    per task on a 4-core host. Dropped once in a reused worker, they are not
+    re-read by later tasks; an import that needs a zip again rebuilds its
+    importer from zipimport's own directory cache."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
 
 
 def make_session(

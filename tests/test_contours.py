@@ -1,12 +1,13 @@
 """Tests for the pure-numpy geometry kernels replacing cv2/Clipper
-(connected components, min-area rect, polygon fill, round-join offset)."""
+(connected components, min-area rect, polygon fill, round-join offset).
+The general even-odd fill is the scalar definition in scalar_oracles."""
 
 import numpy as np
 import pytest
+from scalar_oracles import fill_polygon_mask
 
 from mit_spark.operators.contours import (
     connected_components,
-    fill_polygon_mask,
     min_area_rect,
     offset_polygon_round,
     polygon_perimeter,

@@ -15,7 +15,9 @@ import pytest
 hyp = pytest.importorskip("hypothesis")
 from hypothesis import assume, given, settings, strategies as st  # noqa: E402
 
-from mit_spark.operators.contours import fill_polygon_mask, polygon_perimeter  # noqa: E402
+from scalar_oracles import fill_polygon_mask  # noqa: E402
+
+from mit_spark.operators.contours import polygon_perimeter  # noqa: E402
 from mit_spark.operators.dbnet_post import (  # noqa: E402
     binarize,
     box_score_fast,

@@ -4,7 +4,8 @@ scalar definitions (tests/scalar_oracles.py), compared bit for bit.
 box_score_fast, offset_polygon_round (through unclip too) and decode_quad
 are hot per-candidate code in the detect/OCR path; each is written as a few
 array operations and must give exactly what the per-row / per-vertex /
-per-cell loop gives: np.array_equal and ==, never approx. Inputs: random
+per-cell loop gives: np.array_equal and ==, never approx. row_extremes_hull
+must give convex_hull of all the row extremes it prefilters. Inputs: random
 convex polygons (integer, float, out of frame, degenerate, both
 orientations), the hulls and unclipped boxes of real candidates from the
 synthetic detector, random quads over random and rendered rasters.
@@ -24,6 +25,7 @@ from mit_spark.operators.contours import (  # noqa: E402
     component_row_extremes,
     offset_polygon_round,
     polygon_perimeter,
+    row_extremes_hull,
 )
 from mit_spark.operators.dbnet_post import binarize, box_score_fast, get_mini_boxes, unclip  # noqa: E402
 from mit_spark.operators.geometry import Quad, convex_hull, polygon_area  # noqa: E402
@@ -84,7 +86,7 @@ def test_box_score_fast_equals_per_row_fill(poly, seed, shape):
 @COMMON
 @given(polygons, st.floats(0.01, 40.0), st.sampled_from([8, 3, 1]))
 def test_offset_polygon_round_equals_per_vertex_loop(poly, delta, arc_steps):
-    if len(poly) >= 3 and not (poly == poly[0]).all():
+    if len(poly) >= 3:
         got = offset_polygon_round(poly, delta, arc_steps)
         want = offset_def(poly, delta, arc_steps)
         assert got.dtype == want.dtype and np.array_equal(got, want)
@@ -96,6 +98,19 @@ def test_unclip_equals_per_vertex_loop(poly, ratio):
     perim = polygon_perimeter(poly)
     want = poly if perim <= 0 else offset_def(poly, polygon_area(poly) * ratio / perim)
     assert np.array_equal(unclip(poly, ratio), want)
+
+
+@COMMON
+@given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2**32 - 1), st.floats(0.05, 0.9))
+def test_row_extremes_hull_equals_hull_of_all_extremes(h, w, seed, density):
+    rng = np.random.RandomState(seed)
+    bm = rng.rand(h, w) < density
+    if seed % 2:  # blobs: a few filled discs and bars
+        yy, xx = np.mgrid[:h, :w]
+        for cy, cx, r in rng.randint(0, 40, size=(3, 3)):
+            bm |= (yy - cy) ** 2 + (xx - cx) ** 2 <= r * r // 4
+    for ext in component_row_extremes(bm):
+        assert np.array_equal(row_extremes_hull(ext), convex_hull(ext.astype(np.float64)))
 
 
 def _real_candidates():
@@ -114,6 +129,7 @@ def _real_candidates():
         pred = db[0, 0]
         for comp in component_row_extremes(binarize(pred, opts.text_threshold)):
             hull = convex_hull(comp.astype(np.float64))
+            assert np.array_equal(row_extremes_hull(comp), hull)
             out.append((pred, hull, get_mini_boxes(hull)[0].astype(np.float64)))
     assert len(out) >= 10
     return out
