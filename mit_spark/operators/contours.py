@@ -207,11 +207,12 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
     lo, hi = proj.min(axis=0), proj.max(axis=0)
     size = hi - lo                                              # widths, then heights
     k = int(np.argmin(size[:m] * size[m:]))
-    (d0, n0), (d1, n1) = lo[[k, m + k]].tolist(), hi[[k, m + k]].tolist()
+    lo, hi = lo.tolist(), hi.tolist()
+    d0, d1, n0, n1 = lo[k], hi[k], lo[m + k], hi[m + k]
     # corners d0*d + n0*n, d1*d + n0*n, d1*d + n1*n, d0*d + n1*n, all at once
     coef = np.array([[d0, n0], [d1, n0], [d1, n1], [d0, n1]])
     corners = coef[:, :1] * dn[k] + coef[:, 1:] * nv[k]
-    return corners.astype(np.float32), float(size[k]), float(size[m + k])
+    return corners.astype(np.float32), d1 - d0, n1 - n0
 
 
 # ---------------------------------------------------------------------------

@@ -56,11 +56,11 @@ def get_mini_boxes(points: np.ndarray) -> tuple[np.ndarray, float]:
     [left-top, right-top, right-bottom, left-bottom] via the x-sort +
     pairwise-y rules; returns (4x2 float32, min side length)."""
     corners, w, h = min_area_rect(points)
-    order = np.argsort(corners[:, 0], kind="stable")
-    y = corners[order, 1].tolist()
-    i1, i4 = (0, 1) if y[1] > y[0] else (1, 0)
-    i2, i3 = (2, 3) if y[3] > y[2] else (3, 2)
-    return corners[order[[i1, i2, i3, i4]]], float(min(w, h))
+    c = corners.tolist()
+    s0, s1, s2, s3 = sorted(range(4), key=lambda i: c[i][0])  # stable x-sort
+    i1, i4 = (s0, s1) if c[s1][1] > c[s0][1] else (s1, s0)
+    i2, i3 = (s2, s3) if c[s3][1] > c[s2][1] else (s3, s2)
+    return corners[[i1, i2, i3, i4]], float(min(w, h))
 
 
 def box_score_fast(pred: np.ndarray, contour_poly: np.ndarray) -> float:
@@ -103,7 +103,7 @@ def box_score_fast(pred: np.ndarray, contour_poly: np.ndarray) -> float:
             return 0.0
         nxt = np.concatenate((q[1:], q[:1]))
         e = nxt - q
-        xa, ya, xb, yb, dx, dy = q[:, 0], q[:, 1], nxt[:, 0], nxt[:, 1], e[:, 0], e[:, 1]
+        xa, ya, yb, dx, dy = q[:, 0], q[:, 1], nxt[:, 1], e[:, 0], e[:, 1]
         ys = np.arange(y0, y1 + 1, dtype=np.float64)[:, None]
         cross = (ya <= ys) != (yb <= ys)  # half-open: one end on or below
         # x where each edge meets each row; horizontal edges never cross,
@@ -116,9 +116,10 @@ def box_score_fast(pred: np.ndarray, contour_poly: np.ndarray) -> float:
         if top == math.floor(top) and y0 <= top <= y1:
             # the top row has no crossing; its horizontal edges, one
             # contiguous run on a convex polygon, fill their pixel span
-            flat = (ya == top) & (yb == top)
-            if flat.any():
-                ends = np.concatenate((xa[flat], xb[flat])).tolist()
+            on = [y - ymin == top for _x, y in pts]
+            n = len(pts)
+            ends = [pts[i][0] - xmin for i in range(n) if on[i] and (on[i - 1] or on[(i + 1) % n])]
+            if ends:
                 lo[int(top) - y0] = max(math.ceil(min(ends)), 0)
                 hi[int(top) - y0] = min(math.floor(max(ends)), bw - 1)
         cols = np.arange(bw)
