@@ -146,7 +146,8 @@ def component_row_extremes(bitmap: np.ndarray) -> list[np.ndarray]:
     if not len(rows):
         return []
     # one segment per (component, row); a row may hold several runs
-    seg = np.flatnonzero(np.concatenate(([True], (labels[1:] != labels[:-1]) | (rows[1:] != rows[:-1]))))
+    starts_seg = (labels[1:] != labels[:-1]) | (rows[1:] != rows[:-1])
+    seg = np.flatnonzero(np.concatenate(([True], starts_seg)))
     pts = np.empty((len(seg), 2, 2), dtype=np.int64)
     pts[:, 0, 0] = np.minimum.reduceat(starts, seg)
     pts[:, 1, 0] = np.maximum.reduceat(ends - 1, seg)

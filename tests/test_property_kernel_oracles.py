@@ -51,7 +51,8 @@ def _convex_polygon(kind: str, seed: int, reverse: bool, start: int) -> np.ndarr
         x = float(rng.randint(0, 62))
         pts = np.stack([x + rng.randint(0, 2, n), rng.randint(0, 64, n)], axis=1).astype(np.float64)
     elif kind == "flat":  # every vertex on one row
-        pts = np.stack([rng.randint(0, 64, n), np.full(n, rng.randint(0, 64))], axis=1).astype(np.float64)
+        pts = np.stack([rng.randint(0, 64, n), np.full(n, rng.randint(0, 64))], axis=1)
+        pts = pts.astype(np.float64)
     elif kind == "tiny":  # inside one or two pixels
         pts = rng.uniform(0, 1.6, size=(n, 2)) + rng.randint(0, 62, size=2)
     else:
