@@ -119,25 +119,46 @@ def test_poison_span_isolation(spark):
 
 
 def test_lineage_records_errors(spark, tmp_path):
-    from mit_spark.plans.checkpoint import run_extraction
+    """Per bucket, lineage n_docs/n_spans equal the written output's counts
+    and the one poisoned span's error lands in its document's bucket."""
+    from mit_spark.plans.checkpoint import (
+        bucket_of,
+        read_extracted,
+        read_lineage,
+        run_extraction,
+    )
     from mit_spark.sources.docs_source import load_docs
 
     docs = load_docs(spark, "/root/testdata/sf0.001", limit=15)
     ref = (
-        docs.select(F.explode("spans").alias("s"))
+        docs.select("doc_id", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "media")
-        .select("s.media_ref")
-        .first()[0]
+        .select("doc_id", "s.media_ref")
+        .first()
     )
     cfg = PipelineConfig(
         detector=DetectorOptions(detect_size=512, emit_mask=False),
         n_buckets=4,
-        fault_inject_refs=(ref,),
+        fault_inject_refs=(ref.media_ref,),
     )
-    metrics = run_extraction(spark, docs, str(tmp_path / "out"), cfg, resume=False)
+    out_dir = str(tmp_path / "out")
+    metrics = run_extraction(spark, docs, out_dir, cfg, resume=False)
     assert metrics["n_errors"] == 1
-    lin = spark.read.parquet(str(tmp_path / "out" / "_lineage"))
-    assert lin.agg(F.sum("n_errors")).first()[0] == 1
+    lin = {r["bucket_id"]: r for r in read_lineage(spark, out_dir).collect()}
+    assert sorted(lin) == list(range(cfg.n_buckets))
+    want = {
+        r["b"]: (r["n_docs"], r["n_spans"])
+        for r in read_extracted(spark, out_dir)
+        .groupBy(bucket_of(F.col("doc_id"), cfg.n_buckets).alias("b"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum(F.size("spans")).alias("n_spans"))
+        .collect()
+    }
+    poisoned = spark.range(1).select(bucket_of(F.lit(ref.doc_id), cfg.n_buckets)).first()[0]
+    for b, r in lin.items():
+        assert (r["n_docs"], r["n_spans"]) == want.get(b, (0, 0)), f"bucket {b}"
+        assert r["n_errors"] == (1 if b == poisoned else 0), f"bucket {b}"
+    assert metrics["n_docs"] == 15
+    assert metrics["n_spans"] == sum(n for _, n in want.values())
 
 
 def test_default_detector_options_match_reference():
