@@ -19,7 +19,7 @@ Design (see SURVEY.md):
     the numpy ports of the reference's detect path (preprocess -> patch
     rearrange -> batched forward -> DBNet segmentation post-processing ->
     quad canonicalisation -> OCR -> reading order);
-  * the per-document regroup is a salted two-phase
+  * the per-document regroup is one
     ``groupBy(doc_id).agg(sort_array(collect_list(...)))``.
 
 Nothing here is a code port of the reference — the reference defines WHAT

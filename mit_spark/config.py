@@ -66,8 +66,6 @@ class PipelineConfig:
     preprocessor: PreprocessorOptions = field(default_factory=PreprocessorOptions)
     # number of hash buckets for checkpoint/lineage partitioning
     n_buckets: int = 64
-    # salt factor for the final per-doc regroup of media-heavy documents
-    regroup_salt: int = 8
     # per-span poison tolerance (SURVEY.md §2.10): a span whose detect/OCR
     # raises is recorded as an error row instead of failing the task, so one
     # poisoned document cannot kill a 10^12-doc job. Fault injection for

@@ -3,7 +3,7 @@
 Usage:
     spark-submit --py-files mit_spark.zip main.py \
         --input /root/testdata/sf0.01 --output /tmp/extract_out \
-        --buckets 64 --detect-size 1024 [--no-resume] [--limit N]
+        --buckets 64 --detect-size 1024 [--no-resume] [--limit N] [--master URL]
 
 Reads the interleaved docs table (derived deterministically from the sf
 dir), runs the bucketed resumable extraction, prints one metrics JSON line.
@@ -30,7 +30,6 @@ def main(argv=None) -> int:
     p.add_argument("--output", required=True)
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--detect-size", type=int, default=2048)
-    p.add_argument("--salt", type=int, default=8)
     p.add_argument("--limit", type=int, default=None)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--master", default=None)
@@ -45,7 +44,6 @@ def main(argv=None) -> int:
     cfg = PipelineConfig(
         detector=DetectorOptions(detect_size=args.detect_size),
         n_buckets=args.buckets,
-        regroup_salt=args.salt,
     )
     docs = load_docs(spark, args.input, limit=args.limit)
     t0 = time.time()

@@ -188,33 +188,6 @@ def infer_none(img: np.ndarray, forward: ForwardFn, opts: DetectorOptions):
     return [], mask
 
 
-def _fill_polys_mask_scanline(quads: list, width: int, height: int) -> np.ndarray:
-    """Direct per-pixel port of the reference scanline loop — kept as the
-    property-test oracle for the vectorized version below."""
-    mask = np.zeros((height, width), dtype=np.uint8)
-    for q in quads:
-        p = np.asarray(q.pts if hasattr(q, "pts") else q, dtype=np.int64)
-        edges = [
-            (p[i], p[(i + 1) % 4]) for i in range(4) if p[i][1] != p[(i + 1) % 4][1]
-        ]
-        if not edges:
-            continue
-        y_min = max(int(p[:, 1].min()), 0)
-        y_max = min(int(p[:, 1].max()), height - 1)
-        for y in range(y_min, y_max + 1):
-            xs = []
-            for (x0, y0), (x1, y1) in edges:
-                if (y0 <= y < y1) or (y1 <= y < y0):
-                    t = (y - y0) / (y1 - y0)
-                    xs.append(int(x0 + t * (x1 - x0)))  # `as i64` truncation
-            xs.sort()
-            for k in range(0, len(xs) - 1, 2):
-                lo = min(max(xs[k], 0), width - 1)
-                hi = min(max(xs[k + 1], 0), width - 1)
-                mask[y, lo : hi + 1] = 255
-    return mask
-
-
 def fill_polys_mask(quads: list, width: int, height: int) -> np.ndarray:
     """Paddle's full-page quad rasterization (paddle/src/lib.rs:211-264):
     per scanline, edge intersections x = x0 + t*dx truncated to int
@@ -225,7 +198,8 @@ def fill_polys_mask(quads: list, width: int, height: int) -> np.ndarray:
 
     Vectorized per quad: all scanline/edge intersections in one (rows,
     edges) array, span fill via a +1/-1 difference array cumsummed along x
-    (property-tested equal to the scalar scanline port above)."""
+    (property-tested equal to the scalar scanline port in
+    tests/scalar_oracles.py)."""
     mask = np.zeros((height, width), dtype=np.uint8)
     big = np.int64(1) << 62  # sorts non-crossing edges past every real x
     for q in quads:

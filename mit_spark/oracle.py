@@ -22,8 +22,11 @@ def extract_media_span(
     media_ref: str, offset: int, opts: DetectorOptions, pre: PreprocessorOptions
 ) -> list[dict]:
     """detect -> OCR -> reading order for one media span; returns output
-    spans [(kind='media', text, media_ref, order)]. Shared verbatim by the
-    Spark mapInPandas UDF (pipeline) and the oracle below."""
+    spans [(kind='media', text, media_ref, order)], one image at a time
+    through ``detector.detect``. The Spark media UDF runs
+    ``batched_detect.extract_media_spans_batched`` instead; the two share
+    the operators (detect phases, OCR, reading order), not this function,
+    and tests compare their rows."""
     img = render_media(media_ref)
     forward = get_forward("synthetic")
     quads, _mask = detect(img, forward, opts, pre)

@@ -3,9 +3,10 @@
 
 Documents are hash-bucketed by doc_id (the parquet stand-in for Iceberg's
 ``bucket(N, doc_id)`` partition transform — SURVEY.md §4.2; the writeTo()
-Iceberg path drops in at _write_bucket when the runtime jar is present).
+Iceberg path drops in at _write_wave when the runtime jar is present).
 Buckets are processed in waves; each finished wave appends
-  lineage(bucket_id, status, n_docs, n_spans, started_at, finished_at, error)
+  lineage(bucket_id, status, n_docs, n_spans, n_errors, started_at,
+          finished_at, error)
 rows, and a resumed run anti-joins pending buckets against 'done' lineage —
 a killed 10^12-doc job loses at most one wave, never recomputes finished
 buckets, and one poisoned bucket records status='failed' instead of killing
@@ -19,6 +20,7 @@ Layout under ``out_dir``:
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import traceback
 
@@ -160,44 +162,36 @@ def run_extraction(
     # spec-version stamp: a resumed run must produce byte-identical spans to
     # the waves already on disk; refuse to mix cleaning-spec versions in one
     # output table (ADVICE: regex-fuse changed outputs for ill-formed markup)
-    import json
-    import shutil
-
     os.makedirs(out_dir, exist_ok=True)
     meta_path = os.path.join(out_dir, "_meta.json")
-    extracted_dir = os.path.join(out_dir, "extracted")
-    if os.path.exists(meta_path):
+    stamped = os.path.exists(meta_path)
+    if stamped:
         with open(meta_path) as fh:
             prior = json.load(fh).get("pipeline_spec_version")
-        if resume and prior != PIPELINE_SPEC_VERSION:
-            raise RuntimeError(
-                f"output dir {out_dir} was written by pipeline spec {prior!r}; "
-                f"this build is {PIPELINE_SPEC_VERSION!r} — resuming would mix "
-                "cleaning-spec versions in one table (use a fresh out_dir, or "
-                "resume=False to restart from scratch in place)"
-            )
-        if not resume:
-            # restart: clear every sink (local parquet AND the Iceberg table
-            # when one is configured) before re-stamping — otherwise old-spec
-            # rows would sit beside new-spec rows under the new stamp (the
-            # exact mixing the guard exists to prevent)
-            _clear_restart_output(spark, out_dir, iceberg_table)
-            with open(meta_path, "w") as fh:
-                json.dump({"pipeline_spec_version": PIPELINE_SPEC_VERSION}, fh)
-    else:
-        if resume and os.path.isdir(_lineage_dir(out_dir)):
-            # a pre-stamp (unknown-spec) output dir with existing lineage:
-            # resuming would silently adopt it under the current spec — the
-            # historical corpora the guard most needs to protect
-            raise RuntimeError(
-                f"output dir {out_dir} has lineage but no _meta.json (written "
-                "by an unknown pipeline spec) — refuse to resume; rerun with "
-                "resume=False to restart in place, or use a fresh out_dir"
-            )
-        if not resume:
-            _clear_restart_output(spark, out_dir, iceberg_table)
-        with open(meta_path, "w") as fh:
-            json.dump({"pipeline_spec_version": PIPELINE_SPEC_VERSION}, fh)
+    if resume and stamped and prior != PIPELINE_SPEC_VERSION:
+        raise RuntimeError(
+            f"output dir {out_dir} was written by pipeline spec {prior!r}; "
+            f"this build is {PIPELINE_SPEC_VERSION!r} — resuming would mix "
+            "cleaning-spec versions in one table (use a fresh out_dir, or "
+            "resume=False to restart from scratch in place)"
+        )
+    if resume and not stamped and os.path.isdir(_lineage_dir(out_dir)):
+        # a pre-stamp (unknown-spec) output dir with existing lineage:
+        # resuming would silently adopt it under the current spec — the
+        # historical corpora the guard most needs to protect
+        raise RuntimeError(
+            f"output dir {out_dir} has lineage but no _meta.json (written "
+            "by an unknown pipeline spec) — refuse to resume; rerun with "
+            "resume=False to restart in place, or use a fresh out_dir"
+        )
+    if not resume:
+        # restart: clear every sink (local parquet AND the Iceberg table
+        # when one is configured) before re-stamping — otherwise old-spec
+        # rows would sit beside new-spec rows under the new stamp (the
+        # exact mixing the guard exists to prevent)
+        _clear_restart_output(spark, out_dir, iceberg_table)
+    with open(meta_path, "w") as fh:
+        json.dump({"pipeline_spec_version": PIPELINE_SPEC_VERSION}, fh)
 
     docs = docs_df.withColumn("_bucket", bucket_of(F.col("doc_id"), n_buckets))
     done = done_buckets(spark, out_dir) if resume else set()
@@ -217,54 +211,46 @@ def run_extraction(
     for wave in waves:
         started = datetime.datetime.now()
         wave_docs = docs.filter(F.col("_bucket").isin(wave))
-        # one UDF pass per wave: persist the flat spans so the regrouped
-        # output AND the per-bucket poison-error tally (SURVEY.md §2.10)
-        # both read it without recomputing detect+OCR; unpersist in finally —
-        # a failed (poisoned) wave must not leak its cached partitions into
-        # the remaining waves of a long job
+        # one UDF pass per wave: persist the flat spans so the per-bucket
+        # counts AND the regrouped output both read it without recomputing
+        # detect+OCR; unpersist in finally — a failed (poisoned) wave must
+        # not leak its cached partitions into the remaining waves of a long
+        # job
         flat = extract_flat(spark, wave_docs.drop("_bucket"), config).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            err_by_bucket = {
-                r["b"]: int(r["n"])
-                for r in flat.filter(F.col("kind") == "error")
-                .groupBy(bucket_of(F.col("doc_id"), n_buckets).alias("b"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            # one aggregation over the flat spans gives every lineage count:
+            # regroup keeps the non-error rows, so a bucket's docs are the
+            # distinct doc_ids among them and its spans their count; the
+            # kind='error' poison rows are tallied apart (SURVEY.md §2.10)
+            ok = F.col("kind") != "error"
+            stats = flat.groupBy(bucket_of(F.col("doc_id"), n_buckets).alias("bucket_id")).agg(
+                F.countDistinct(F.when(ok, F.col("doc_id"))).alias("n_docs"),
+                F.count(F.when(ok, F.lit(1))).alias("n_spans"),
+                F.count(F.when(~ok, F.lit(1))).alias("n_errors"),
+            )
+            by_bucket = {r["bucket_id"]: r.asDict() for r in stats.collect()}
             out = regroup(flat, config)
             out = out.withColumn("bucket_id", bucket_of(F.col("doc_id"), n_buckets))
             _write_wave(spark, out, out_dir, iceberg_table)
-            stats = (
-                out.groupBy("bucket_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum(F.size("spans")).alias("n_spans"),
-                )
-                .collect()
-            )
-            by_bucket = {r["bucket_id"]: r for r in stats}
             finished = datetime.datetime.now()
-            rows = []
-            for b in wave:
-                r = by_bucket.get(b)
-                rows.append(
-                    {
-                        "bucket_id": b,
-                        "status": "done",
-                        "n_docs": int(r["n_docs"]) if r else 0,
-                        "n_spans": int(r["n_spans"]) if r else 0,
-                        "n_errors": err_by_bucket.get(b, 0),
-                        "started_at": started,
-                        "finished_at": finished,
-                        "error": None,
-                    }
-                )
-                metrics["buckets_processed"] += 1
-                metrics["n_docs"] += rows[-1]["n_docs"]
-                metrics["n_spans"] += rows[-1]["n_spans"]
-                metrics["n_errors"] += rows[-1]["n_errors"]
+            zero = {"n_docs": 0, "n_spans": 0, "n_errors": 0}
+            rows = [
+                {
+                    "bucket_id": b,
+                    "status": "done",
+                    **by_bucket.get(b, zero),
+                    "started_at": started,
+                    "finished_at": finished,
+                    "error": None,
+                }
+                for b in wave
+            ]
+            for r in rows:
+                for k in zero:
+                    metrics[k] += r[k]
+            metrics["buckets_processed"] += len(wave)
             _append_lineage(spark, out_dir, rows)
         except Exception as e:  # poisoned wave -> lineage 'failed', job continues
             _append_lineage(

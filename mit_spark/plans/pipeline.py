@@ -11,8 +11,15 @@ Plan shape:
       -> kind='text'  : Catalyst-only boilerplate strip (JVM codegen)
          kind='media' : repartition by span hash -> mapInPandas(detect+OCR)
       -> unionByName
-      -> salted two-phase groupBy(doc_id) collect_list + sort_array
+      -> groupBy(doc_id) sort_array(collect_list)  (map-side partial collect,
+                                                    one Exchange, final merge)
       -> extracted(doc_id, spans ordered by `order`)
+
+Skew (SURVEY.md §4.1) is handled before the UDF: explode plus the span-hash
+repartition spread a heavy document's media spans over many tasks. The
+regroup needs nothing extra: Spark plans ``collect_list`` as a map-side
+partial aggregate, so each task combines its own spans of a document before
+the one shuffle, and the final array lands on one reducer in any design.
 
 Everything relational is built-in; the only Python is the Arrow-batched
 media UDF (vectorized-batch UDF execution per "Accelerating Python UDFs in
@@ -140,28 +147,17 @@ def regroup(flat: DataFrame, config: PipelineConfig | None = None) -> DataFrame:
     """Rebuild ordered span arrays per document (kind='error' poison rows
     are excluded here; checkpoint counts them into lineage).
 
-    Two-phase salted aggregation (SURVEY.md §4.1): phase 1 collects partial
-    arrays per (doc_id, salt) so a 10^5-span document's rows are combined by
-    ``regroup_salt`` reducers instead of one; phase 2 merges the few partial
-    arrays and does the final sort. With salt<=1 it is a plain single-phase
-    groupBy.
+    One aggregation: ``groupBy(doc_id)`` + ``sort_array(collect_list)``,
+    which Spark plans as a partial collect per map task, one Exchange on
+    doc_id and a final merge. ``config`` is unused; the parameter stays
+    because callers pass it (perfbench's tracer calls ``regroup(flat, cfg)``).
     """
-    config = config or PipelineConfig()
-    flat = flat.filter(F.col("kind") != "error")
     span_struct = F.struct("order", "kind", "text", "media_ref")
-    salt = config.regroup_salt
-    if salt > 1:
-        partial = (
-            flat.withColumn("_salt", F.pmod(F.col("order"), F.lit(salt)))
-            .groupBy("doc_id", "_salt")
-            .agg(F.collect_list(span_struct).alias("part"))
-        )
-        grouped = partial.groupBy("doc_id").agg(
-            F.sort_array(F.flatten(F.collect_list("part"))).alias("sp")
-        )
-    else:
-        grouped = flat.groupBy("doc_id").agg(F.sort_array(F.collect_list(span_struct)).alias("sp"))
-
+    grouped = (
+        flat.filter(F.col("kind") != "error")
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list(span_struct)).alias("sp"))
+    )
     return grouped.select(
         "doc_id",
         F.transform(

@@ -12,6 +12,8 @@ array kernel in ``mit_spark.operators`` must reproduce bit for bit:
                           (contours.offset_polygon_round)
   * decode_quad           the glyph-bar decode, one python iteration per cell
                           (ocr.decode_quad)
+  * fill_polys_mask       paddle's quad scanline fill, one python iteration
+                          per row and edge (detector.fill_polys_mask)
 
 They are slow on purpose: each is the definition, not an implementation.
 """
@@ -154,3 +156,32 @@ def decode_quad(img: np.ndarray, quad) -> str:
         if 0 <= v < len(ALPHABET):
             out.append(ALPHABET[v])
     return "".join(out)
+
+
+def fill_polys_mask(quads: list, width: int, height: int) -> np.ndarray:
+    """Paddle's quad fill (paddle/src/lib.rs:211-264), the direct per-pixel
+    port of the reference scanline loop: per row, the crossings of the
+    non-horizontal edges truncated toward zero, sorted and paired, each pair
+    filled inclusive after clamping to the row."""
+    mask = np.zeros((height, width), dtype=np.uint8)
+    for q in quads:
+        p = np.asarray(q.pts if hasattr(q, "pts") else q, dtype=np.int64)
+        edges = [
+            (p[i], p[(i + 1) % 4]) for i in range(4) if p[i][1] != p[(i + 1) % 4][1]
+        ]
+        if not edges:
+            continue
+        y_min = max(int(p[:, 1].min()), 0)
+        y_max = min(int(p[:, 1].max()), height - 1)
+        for y in range(y_min, y_max + 1):
+            xs = []
+            for (x0, y0), (x1, y1) in edges:
+                if (y0 <= y < y1) or (y1 <= y < y0):
+                    t = (y - y0) / (y1 - y0)
+                    xs.append(int(x0 + t * (x1 - x0)))  # `as i64` truncation
+            xs.sort()
+            for k in range(0, len(xs) - 1, 2):
+                lo = min(max(xs[k], 0), width - 1)
+                hi = min(max(xs[k + 1], 0), width - 1)
+                mask[y, lo : hi + 1] = 255
+    return mask

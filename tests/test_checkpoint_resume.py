@@ -17,7 +17,7 @@ from mit_spark.plans.checkpoint import (
 from mit_spark.schema import DOCS
 from mit_spark.synth import gen_docs
 
-CFG = PipelineConfig(detector=DetectorOptions(detect_size=512), n_buckets=8, regroup_salt=4)
+CFG = PipelineConfig(detector=DetectorOptions(detect_size=512), n_buckets=8)
 
 
 def _tuples(rows):

@@ -123,10 +123,9 @@ def test_fill_polys_mask_vectorized_equals_scanline_port():
     quads."""
     import numpy as np
 
-    from mit_spark.operators.detector import (
-        _fill_polys_mask_scanline,
-        fill_polys_mask,
-    )
+    from scalar_oracles import fill_polys_mask as scanline_fill
+
+    from mit_spark.operators.detector import fill_polys_mask
     from mit_spark.operators.geometry import Quad
 
     rng = np.random.RandomState(11)
@@ -139,5 +138,5 @@ def test_fill_polys_mask_vectorized_equals_scanline_port():
                 pts[:, 1] = pts[0, 1]  # all-horizontal degenerate
             quads.append(Quad(pts, 1.0))
         got = fill_polys_mask(quads, w, h)
-        want = _fill_polys_mask_scanline(quads, w, h)
+        want = scanline_fill(quads, w, h)
         assert np.array_equal(got, want), f"trial {trial} ({w}x{h})"

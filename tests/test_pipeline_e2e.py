@@ -67,20 +67,11 @@ def test_pipeline_orders_are_sorted(spark, docs):
         assert orders == sorted(orders)
 
 
-def test_pipeline_unsalted_equals_salted(spark, docs, oracle_out):
-    from mit_spark.plans.pipeline import extract
-
-    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512), regroup_salt=1)
-    docs_df = spark.createDataFrame(docs[:8], schema=DOCS)
-    got = _rows_to_dict(extract(spark, docs_df, cfg).collect())
-    for k, v in got.items():
-        assert v == oracle_out[k]
-
-
 def test_heavy_doc_media_extraction(spark):
     """doc_no % 50 == 49 -> 64-256 media spans (FIXTURES.md F1 skew knob);
-    run one heavy doc at a small detect size through the salted path."""
-    cfg = PipelineConfig(detector=DetectorOptions(detect_size=256), regroup_salt=8)
+    run one heavy doc at a small detect size: its spans spread over many
+    media tasks and come back together in one regroup."""
+    cfg = PipelineConfig(detector=DetectorOptions(detect_size=256))
     heavy = gen_docs(50)[49:50]
     n_media = sum(1 for s in heavy[0]["spans"] if s["kind"] == "media")
     assert n_media >= 64
@@ -142,3 +133,29 @@ def test_media_stage_partition_count_matches_policy(spark):
     expect = media_task_count(spark.sparkContext.defaultParallelism)
     plan = flat._jdf.queryExecution().optimizedPlan().toString()
     assert f", {expect}" in plan.split("RepartitionByExpression")[1].splitlines()[0]
+
+
+def test_regroup_plan_has_one_exchange_after_a_partial_collect(spark):
+    """The regroup is one aggregation: a map-side partial collect_list
+    (ObjectHashAggregate), one Exchange on doc_id, then the final merge."""
+    import contextlib
+    import io
+    import re
+
+    from mit_spark.plans.pipeline import regroup
+    from mit_spark.schema import FLAT_OUT
+
+    flat = spark.createDataFrame(
+        [("d0", "text", "a", "", 1), ("d0", "error", "x", "m", 2), ("d1", "text", "b", "", 0)],
+        schema=FLAT_OUT,
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        regroup(flat, TEST_CFG).explain("formatted")
+    # the details section lists one block per operator, leaves first
+    nodes = re.findall(r"^\(\d+\) ([^\n]+)\n(.*?)(?=^\(\d+\) |\Z)", buf.getvalue(), re.M | re.S)
+    names = [name.strip() for name, _ in nodes]
+    assert names.count("Exchange") == 1, names
+    i = names.index("Exchange")
+    assert names[i - 1] == "ObjectHashAggregate", names
+    assert "partial_collect_list" in nodes[i - 1][1], nodes[i - 1][1]
