@@ -11,9 +11,8 @@ master at first SparkContext creation, so two levels in one process would
 silently share the first context's core count.
 
 Method notes:
-  * TWO full-size warmup passes per level — stage-level profiling
-    (BENCH/profile_stages.py) showed the first pass in a fresh JVM runs up
-    to 1.7x slower (C2 JIT of codegen'd stages, shuffle + Arrow paths),
+  * TWO full-size warmup passes per level — the first pass in a fresh JVM
+    runs up to 1.7x slower (C2 JIT of codegen'd stages, shuffle + Arrow paths),
     which inflates the low level less than the high one and corrupts the
     ratio; the reference's criterion benches exclude the same class of
     one-time cost (model load, onnx_bench.rs:130-166);
@@ -24,7 +23,8 @@ Method notes:
     +-10-18% window drift between its two halves;
   * best-of-3 per level (criterion-style min) on top of that.
 
-Run:  python BENCH/scaling.py [n_docs]     (env PAIR="8,32" to override)
+Run:  python BENCH/scaling.py [n_docs]     (env PAIR="2,8" to override; the
+default local[1] -> local[4] pair fits a 4-core host without oversubscribing it)
 """
 
 from __future__ import annotations
@@ -106,7 +106,7 @@ def _host_phase() -> dict:
 
 
 def main() -> int:
-    pair = tuple(int(x) for x in os.environ.get("PAIR", "4,16").split(","))
+    pair = tuple(int(x) for x in os.environ.get("PAIR", "1,4").split(","))
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 6000
     phase = _host_phase()
     procs = {}

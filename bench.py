@@ -1,12 +1,16 @@
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
-    {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Registry timer — runs every registry entry except ``flagship_extract`` at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
+in one session and prints two JSON lines:
 
-The flagship extraction is measured as docs/sec + spans/sec over the
-derived interleaved docs table (detect_size=1024 profile; BENCH/BASELINE.md
-records the reference's 2.27 s/image single-node number for comparison).
-Full plans are forced with the noop sink (no collect, no disk cost).
+    line 1: {"metric": "bench_suite_wall_sec", "value": N, "unit": "sec",
+             "entries": N, "errors": N, "sf": ..., "cpus": N,
+             "host_probe_before": {...}, "host_probe": {...}}
+    line 2: {"queries": {name: sec, ...}, "errors": {name: msg, ...}}
+
+Each entry is timed best-of-2 (the first hit pays operator JIT and a cold
+page cache); its plan is forced with the noop sink (no collect, no disk
+cost). An entry that raises is recorded in "errors" and the suite goes on.
+The flagship ``extract()`` is measured and checked by ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -21,269 +25,55 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 from mit_spark.queries import QUERIES  # noqa: E402
+from perfbench.probes import host_probe  # noqa: E402
 
-# every registry entry beyond the flagship. flagship_extract re-runs the full
-# detect+OCR pipeline over the WHOLE corpus and is throughput-measured by the
-# dedicated flagship block (FLAGSHIP_DOC_LIMIT docs, docs/s + spans/s), so
-# re-timing it here would count the same pipeline twice without new signal
 BENCH_QUERIES = [name for name in QUERIES if name != "flagship_extract"]
 
-FLAGSHIP_DOC_LIMIT = 1500
 
+def run(sf_dir: str, cpus: str) -> tuple[dict, dict]:
+    from mit_spark.session import make_session
 
-def _force(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
-
-
-def _host_probe() -> dict:
-    """Fixed-work probes so suite numbers are normalizable across runs:
-    this sandbox's CPU and DRAM throughput swing with sibling load (the
-    same suite has measured 37-67 s wall minutes apart), so each BENCH
-    record carries the host phase it ran in. cpu: single-thread uint8->f32
-    convert+sum; membw: large array copies (bus-bound)."""
-    import numpy as np
-
-    a = np.random.RandomState(0).randint(0, 256, (4096, 4096), dtype=np.uint8)
-    a.astype(np.float32).sum()  # untimed: first-touch/alloc warmup
-    t0 = time.time()
-    for _ in range(10):
-        a.astype(np.float32).sum()
-    cpu = time.time() - t0
-    big = np.zeros((512, 1 << 20), dtype=np.uint8)  # 512 MB
-    big[:] = 1
-    big.copy()  # untimed: fault in source+dest pages
-    t0 = time.time()
-    for _ in range(4):
-        big.copy()
-    membw = time.time() - t0
-    return {"cpu_sec": round(cpu, 3), "membw_sec": round(membw, 3)}
-
-
-# quiet-phase gate: sibling load on this host swings DRAM throughput ~5x
-# (the same suite has measured 37-67 s wall minutes apart), so an official
-# BENCH_rN.json must be a steady-state artifact, not a phase lottery.
-# Quiet-phase membw_sec measures ~0.73-0.78 here; 1.2 = comfortably quiet.
-MEMBW_GATE = 1.2
-
-
-def _wait_for_quiet(gate: float = MEMBW_GATE, max_wait_sec: float = 180.0) -> dict:
-    """Probe until the memory bus is quiet (or the wait budget runs out);
-    returns the last probe."""
-    t0 = time.time()
-    p = _host_probe()
-    while p["membw_sec"] > gate and time.time() - t0 < max_wait_sec:
-        time.sleep(10)
-        p = _host_probe()
-    return p
-
-
-def run(sf_dir: str, cpus: str, *, make_session=None) -> dict:
-    from mit_spark.session import make_session as _mk
-
-    # gate the suite on a quiet memory bus (waits up to 3 min), and record
-    # the phase on BOTH sides of the run so the artifact is auditable
-    probe_before = _wait_for_quiet()
-
-    mk = make_session or _mk
-    spark = mk(master=f"local[{cpus}]", app_name="mit-spark-bench")
+    probe_before = host_probe()
+    spark = make_session(master=f"local[{cpus}]", app_name="mit-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-
-    # flagship extraction throughput
-    from mit_spark.config import DetectorOptions, PipelineConfig
-    from mit_spark.plans.pipeline import extract, extract_flat
-    from mit_spark.sources.docs_source import load_docs
-
-    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512, emit_mask=False))
-    docs = load_docs(spark, sf_dir, max_doc_no=FLAGSHIP_DOC_LIMIT).cache()
-    n_docs = docs.count()
-    n_in_spans = docs.selectExpr("sum(size(spans))").collect()[0][0]
-
-    # warmup: one FULL-size pass — python worker spawn+import plus C2 JIT of
-    # the codegen'd stages (a token-size warmup leaves the first measured
-    # pass up to 1.7x slower; same exclusion the reference's criterion
-    # benches make for model load, onnx_bench.rs:130-166)
-    _force(extract(spark, docs, cfg))
-
-    t0 = time.time()
-    out = extract(spark, docs, cfg)
-    _force(out)
-    flagship_sec = time.time() - t0
-    timings["flagship_extract"] = round(flagship_sec, 3)
-
-    docs_per_sec = n_docs / flagship_sec
-    spans_per_sec = n_in_spans / flagship_sec
-    docs.unpersist()
-
-    # media_channel_stats: synthesize the media table ONCE to parquet and
-    # time only the decode+aggregate over that scan — in a real deployment
-    # media binaries come from storage, so payload synthesis (which made
-    # this entry wobble 4.4-12 s) does not belong in the timed region
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from mit_spark.operators.multimodal import channel_stats, media_table
-
-    media_dir = os.path.join(tempfile.gettempdir(), "mit_bench_media")
-    media_table(spark, load_docs(spark, sf_dir, max_doc_no=120)).write.mode(
-        "overwrite"
-    ).parquet(media_dir)
-
-    def media_channel_stats_from_scan(spark, _sf_dir):
-        # synthetic rasters compress ~15x in parquet, so the default byte
-        # split (maxPartitionBytes=128M) puts the whole 27 MB scan in ONE
-        # task while the decoded payloads are ~400 MB. Shrink the split so
-        # each of the ~64 written files becomes its own task — decode
-        # parallelizes with ZERO shuffle of the binary column (a
-        # repartition-based fix moved 400 MB through shuffle disk and
-        # wobbled with page-cache state). At 100 TB: size
-        # maxPartitionBytes by the payload expansion ratio at write time.
-        # The conf is session-wide and split size is decided at EXECUTION
-        # time, so it must stay set across the caller's timed _force; the
-        # bench loop save/restores it around this entry.
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(512 * 1024))
-        stats = channel_stats(spark.read.parquet(media_dir))
-        return (
-            stats.groupBy("channel")
-            .agg(
-                F.count(F.lit(1)).alias("n_media"),
-                F.round(F.avg("mean"), 3).alias("avg_mean"),
-                F.round(F.avg("std"), 3).alias("avg_std"),
-                F.sum("n_frames").alias("total_frames"),
-            )
-            .orderBy("channel")
-        )
-
-    saved_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     for name in BENCH_QUERIES:
-        reps = 2  # best-of-2 (criterion-style): the first hit pays operator
-        #           JIT + cold page cache; the min is the steady-state rate
-        if name == "media_channel_stats":
-            builder = media_channel_stats_from_scan
-            # this entry moves ~400 MB of binaries through the JVM's Arrow
-            # path: it is the suite's most DRAM-bound region, so it is the
-            # most exposed to mid-suite bus contention — wait
-            # out a loud phase and take best-of-3 (fresh-session steady
-            # state: 1.8-3 s; a contended pass reads 10-16 s)
-            _wait_for_quiet(max_wait_sec=120)
-            reps = 3
-            # after 20+ prior queries the long-lived local JVM's heap churn
-            # (not the plan) dominated variance — collect first so the
-            # measurement starts from a quiet heap like a fresh session
-            spark._jvm.System.gc()
-        else:
-            builder, _ = QUERIES[name]
+        builder, _ = QUERIES[name]
         walls = []
         try:
-            for _ in range(reps):
+            for _ in range(2):
                 t0 = time.time()
-                _force(builder(spark, sf_dir))
+                builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 walls.append(time.time() - t0)
         except Exception as exc:  # noqa: BLE001 — one bad entry must not
-            # cost the whole suite artifact; record it and keep measuring
+            # cost the whole suite; record it and keep measuring
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             continue
-        finally:
-            # the media entry shrinks the file-split conf for its scan;
-            # every other entry must run under the session default
-            spark.conf.set("spark.sql.files.maxPartitionBytes", saved_split)
         timings[name] = round(min(walls), 3)
-
-    total = round(sum(timings.values()), 3)
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    result = {
-        "metric": "bench_suite_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "flagship": {
-            "n_docs": int(n_docs),
-            "n_input_spans": int(n_in_spans),
-            "docs_per_sec": round(docs_per_sec, 3),
-            "spans_per_sec": round(spans_per_sec, 3),
-            "detect_size": cfg.detector.detect_size,
-        },
-        "cpus": int(cpus),
-        "host_probe": _host_probe(),
-        "host_probe_before": probe_before,
-    }
-    if errors:
-        result["errors"] = errors
-    result["host_quiet"] = (
-        max(probe_before["membw_sec"], result["host_probe"]["membw_sec"]) <= MEMBW_GATE
-    )
     spark.stop()
-    return result
 
-
-# a degraded host phase (sibling DRAM load) inflates suite numbers ~2x,
-# and the before/after probes can MISS a mid-suite dip — so always run
-# MIN_ATTEMPTS full attempts (up to MAX_ATTEMPTS if none is endpoint-quiet)
-# and MIN-MERGE per entry: each entry's min across attempts is its
-# best-observed steady state (the same criterion-style logic as the
-# in-attempt best-of-2). Every attempt's summary is recorded for provenance.
-MIN_ATTEMPTS = 2
-MAX_ATTEMPTS = 3
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    summary = {
+        "metric": "bench_suite_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "entries": len(timings),
+        "errors": len(errors),
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": int(cpus),
+        "host_probe_before": probe_before,
+        "host_probe": host_probe(),
+    }
+    return summary, {"queries": timings, "errors": errors}
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    attempts = []
-    for _ in range(MAX_ATTEMPTS):
-        attempts.append(run(sf_dir, cpus))
-        if len(attempts) >= MIN_ATTEMPTS and any(a["host_quiet"] for a in attempts):
-            break
-    # "best" supplies the merged artifact's provenance fields (host probes,
-    # host_quiet): pick it among the attempts with the MOST completed
-    # entries first — an attempt where an expensive entry crashed would
-    # otherwise win on suite total and stamp the record with the wrong
-    # phase — then by total among those
-    most_complete = max(len(a["queries"]) for a in attempts)
-    best = min(
-        (a for a in attempts if len(a["queries"]) == most_complete),
-        key=lambda r: r["value"],
-    )
-    merged = dict(best)
-    # union of entry names across attempts: an entry that errored in one
-    # attempt but timed in another keeps its best timing; an entry that
-    # errored in EVERY attempt stays in "errors" only. Names are ordered
-    # canonically (flagship, then BENCH_QUERIES order) so the JSON artifact
-    # is byte-stable across runs and diffable against prior rounds.
-    all_names = {n for a in attempts for n in a["queries"]}
-    ordered = [n for n in ["flagship_extract", *BENCH_QUERIES] if n in all_names]
-    merged["queries"] = {
-        name: min(a["queries"][name] for a in attempts if name in a["queries"])
-        for name in ordered
-    }
-    merged["value"] = round(sum(merged["queries"].values()), 3)
-    always_err = {
-        n: a["errors"][n]
-        for a in attempts
-        for n in a.get("errors", {})
-        if n not in all_names
-    }
-    if always_err:
-        merged["errors"] = always_err
-    elif "errors" in merged:
-        del merged["errors"]
-    # flagship throughput from the attempt whose flagship pass was fastest
-    fbest = min(attempts, key=lambda a: a["queries"]["flagship_extract"])
-    merged["flagship"] = fbest["flagship"]
-    merged["bench_attempts"] = [
-        {
-            "value": a["value"],
-            "host_quiet": a["host_quiet"],
-            "membw_before": a["host_probe_before"]["membw_sec"],
-            "membw_after": a["host_probe"]["membw_sec"],
-        }
-        for a in attempts
-    ]
-    print(json.dumps(merged))
+    for line in run(sf_dir, cpus):
+        print(json.dumps(line))
     return 0
 
 

@@ -1,5 +1,5 @@
 """Text-analysis scalar functions for the documents table — token counting,
-quality scoring, language-ID heuristic, fingerprinting (SURVEY.md §2.7 +
+stopword ratio, token length, fingerprinting (SURVEY.md §2.7 +
 the training-data-pipeline operator set). All Catalyst built-ins (JVM,
 codegen) — no Python in the hot path; each has a portable SQL twin used by
 the DuckDB oracle strings in mit_spark.queries."""
@@ -28,14 +28,6 @@ def stopword_ratio_col(text: Column) -> Column:
 def avg_token_len_col(text: Column) -> Column:
     no_space = F.length(F.regexp_replace(text, " ", ""))
     return F.round(no_space / token_count_col(text), 4)
-
-
-def quality_score_col(text: Column) -> Column:
-    """Length/stopword balance heuristic in [0, 1]."""
-    n = token_count_col(text)
-    len_term = F.least(n / F.lit(100.0), F.lit(1.0))
-    sw = stopword_ratio_col(text)
-    return F.round(0.5 * len_term + 0.5 * F.least(sw * 4, F.lit(1.0)), 4)
 
 
 def fingerprint_col(text: Column) -> Column:

@@ -6,7 +6,8 @@ Usage:
         --buckets 64 --detect-size 1024 [--no-resume] [--limit N] [--master URL]
 
 Reads the interleaved docs table (derived deterministically from the sf
-dir), runs the bucketed resumable extraction, prints one metrics JSON line.
+dir), runs the bucketed resumable extraction, prints one metrics JSON line,
+and exits 1 when any bucket failed (its lineage row holds the error).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import sys
 import time
 
 # direct `python mit_spark/main.py` invocation (no --py-files): make the
-# package importable from the repo root
+# package importable from the repo root, here and in the Python workers
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
@@ -40,7 +41,8 @@ def main(argv=None) -> int:
     from mit_spark.session import make_session
     from mit_spark.sources.docs_source import load_docs
 
-    spark = make_session(master=args.master, app_name="mit-spark-extract")
+    spark = make_session(master=args.master, app_name="mit-spark-extract",
+                         extra={"spark.executorEnv.PYTHONPATH": _ROOT})
     cfg = PipelineConfig(
         detector=DetectorOptions(detect_size=args.detect_size),
         n_buckets=args.buckets,
@@ -52,7 +54,7 @@ def main(argv=None) -> int:
     metrics["docs_per_sec"] = round(metrics["n_docs"] / max(metrics["elapsed_sec"], 1e-9), 3)
     metrics["spans_per_sec"] = round(metrics["n_spans"] / max(metrics["elapsed_sec"], 1e-9), 3)
     print(json.dumps(metrics))
-    return 0
+    return 1 if metrics["buckets_failed"] else 0
 
 
 if __name__ == "__main__":

@@ -4,13 +4,15 @@
 Documents are hash-bucketed by doc_id (the parquet stand-in for Iceberg's
 ``bucket(N, doc_id)`` partition transform — SURVEY.md §4.2; the writeTo()
 Iceberg path drops in at _write_wave when the runtime jar is present).
-Buckets are processed in waves; each finished wave appends
+Buckets are processed in waves; each wave overwrites its own buckets'
+output (a re-run replaces a bucket, never adds to it), then appends
   lineage(bucket_id, status, n_docs, n_spans, n_errors, started_at,
           finished_at, error)
 rows, and a resumed run anti-joins pending buckets against 'done' lineage —
 a killed 10^12-doc job loses at most one wave, never recomputes finished
-buckets, and one poisoned bucket records status='failed' instead of killing
-the job (reference error model, SURVEY.md §2.10).
+buckets, never duplicates a document of a wave that died between its write
+and its lineage, and one poisoned bucket records status='failed' instead of
+killing the job (reference error model, SURVEY.md §2.10).
 
 Layout under ``out_dir``:
     extracted/bucket_id=<N>/*.parquet     (hive-partitioned -> pruning)
@@ -60,15 +62,20 @@ def _ensure_iceberg_table(spark: SparkSession, table: str, n_buckets: int) -> No
 
 def _write_wave(spark: SparkSession, out: DataFrame, out_dir: str,
                 iceberg_table: str | None) -> None:
-    """Append one wave of regrouped docs. Iceberg when a table name is
-    given (atomic snapshot commit per wave; bucket transform prunes reads),
-    else hive-partitioned parquet (bucket_id column)."""
+    """Write one wave of regrouped docs, replacing whatever an earlier
+    attempt left in the wave's buckets and leaving every other bucket alone:
+    a wave re-run after a death between this write and its 'done' lineage
+    rows rewrites its buckets instead of appending them a second time.
+    Iceberg when a table name is given (overwritePartitions: one atomic
+    snapshot per wave; the bucket transform prunes reads), else
+    hive-partitioned parquet (bucket_id column) under a dynamic partition
+    overwrite."""
     if iceberg_table is not None:
-        out.drop("bucket_id").writeTo(iceberg_table).append()
+        out.drop("bucket_id").writeTo(iceberg_table).overwritePartitions()
     else:
-        out.write.mode("append").partitionBy("bucket_id").parquet(
-            os.path.join(out_dir, "extracted")
-        )
+        out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket_id"
+        ).parquet(os.path.join(out_dir, "extracted"))
 
 
 def _lineage_dir(out_dir: str) -> str:
@@ -112,13 +119,14 @@ def _append_lineage(spark: SparkSession, out_dir: str, rows: list[dict]) -> None
 
 def _clear_restart_output(spark: SparkSession, out_dir: str,
                           iceberg_table: str | None) -> None:
-    """Restart hygiene: every sink a prior run appended into must be emptied
-    before the new spec stamp lands. Bucket parquet is written with
-    mode('append'), so extracted/ + _lineage/ are removed; when the sink is
-    an Iceberg table, rows from the prior run survive in the table even after
-    the local dirs are gone — truncate it (DELETE FROM with no predicate is a
-    metadata-only truncation in Iceberg) so the rerun cannot mix old-spec and
-    duplicate rows under the fresh stamp."""
+    """Restart hygiene: every sink a prior run wrote into must be emptied
+    before the new spec stamp lands. A wave overwrites only its own buckets,
+    and lineage is appended, so extracted/ + _lineage/ are removed (a bucket
+    the rerun leaves empty would otherwise keep its old-spec rows); when the
+    sink is an Iceberg table, rows from the prior run survive in the table
+    even after the local dirs are gone — truncate it (DELETE FROM with no
+    predicate is a metadata-only truncation in Iceberg) so the rerun cannot
+    mix old-spec and new-spec rows under the fresh stamp."""
     import shutil
 
     shutil.rmtree(os.path.join(out_dir, "extracted"), ignore_errors=True)
@@ -138,11 +146,13 @@ def run_extraction(
     max_waves: int | None = None,
     iceberg_table: str | None = None,
 ) -> dict:
-    """Process all pending buckets; returns run metrics. ``max_waves`` exists
-    for kill/resume tests (stop after k waves like a preempted job).
-    ``iceberg_table`` (e.g. "catalog.db.extracted") switches the span sink
-    to Iceberg writeTo appends when the runtime jar is present — lineage
-    and resume bookkeeping stay in out_dir either way."""
+    """Process all pending buckets; returns run metrics, with
+    ``buckets_failed`` counting the buckets whose wave recorded 'failed'.
+    ``max_waves`` exists for kill/resume tests (stop after k waves like a
+    preempted job). ``iceberg_table`` (e.g. "catalog.db.extracted")
+    switches the span sink to Iceberg writeTo partition overwrites when the
+    runtime jar is present — lineage and resume bookkeeping stay in out_dir
+    either way."""
     if iceberg_table is not None:
         if not iceberg_available(spark):
             raise RuntimeError(
@@ -200,6 +210,7 @@ def run_extraction(
     metrics = {
         "buckets_done_prior": len(done),
         "buckets_processed": 0,
+        "buckets_failed": 0,
         "n_docs": 0,
         "n_spans": 0,
         "n_errors": 0,
@@ -247,12 +258,13 @@ def run_extraction(
                 }
                 for b in wave
             ]
+            _append_lineage(spark, out_dir, rows)
             for r in rows:
                 for k in zero:
                     metrics[k] += r[k]
             metrics["buckets_processed"] += len(wave)
-            _append_lineage(spark, out_dir, rows)
         except Exception as e:  # poisoned wave -> lineage 'failed', job continues
+            metrics["buckets_failed"] += len(wave)
             _append_lineage(
                 spark,
                 out_dir,

@@ -5,7 +5,9 @@ unimplemented translate_async, interface/src/translator/mod.rs:7-11), and
 the north rule is checkpointed batch — but because every pipeline stage is
 stateless per document, the SAME plan body runs incrementally: a file/
 Iceberg stream of docs micro-batches through extract() via foreachBatch,
-with Spark's own streaming checkpoint providing exactly-once sink appends.
+with Spark's own streaming checkpoint tracking which input files are done.
+The foreachBatch appends are at-least-once: a crash between a batch's
+parquet append and its offset commit replays that batch on restart.
 """
 
 from __future__ import annotations
@@ -203,7 +205,7 @@ def windowed_event_stats(
     deterministic pure function of the input — which is what lets the
     driver gate check it against a plain SQL oracle. No checkpoint is kept:
     every invocation reprocesses the same bounded input (idempotent
-    builder), unlike run_stream whose checkpointed exactly-once resume is
+    builder), unlike run_stream whose checkpointed at-least-once resume is
     tested separately.
     """
     from pyspark.sql import functions as F

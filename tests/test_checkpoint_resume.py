@@ -67,6 +67,41 @@ def test_kill_and_resume(spark, tmp_path):
     assert got == want
 
 
+def test_death_between_write_and_lineage_does_not_duplicate(spark, tmp_path, monkeypatch):
+    """A wave that dies after its span write but before its 'done' lineage
+    rows is recorded 'failed' and re-run on resume. The re-run must replace
+    that wave's buckets, not append them a second time."""
+    import mit_spark.plans.checkpoint as cp
+
+    out_dir = str(tmp_path / "out")
+    docs = gen_docs(16)
+    docs_df = spark.createDataFrame(docs, schema=DOCS)
+    real_append = cp._append_lineage
+    done_calls = []
+
+    def dies_on_first_done(spark, out_dir, rows):
+        if rows[0]["status"] == "done":
+            done_calls.append(rows)
+            if len(done_calls) == 1:
+                raise RuntimeError("injected death after the wave's write")
+        real_append(spark, out_dir, rows)
+
+    monkeypatch.setattr(cp, "_append_lineage", dies_on_first_done)
+    m1 = cp.run_extraction(spark, docs_df, out_dir, CFG, wave_size=4)
+    failed_wave = {r["bucket_id"] for r in done_calls[0]}
+    assert sum(r["n_docs"] for r in done_calls[0]) > 0  # the write had docs
+    assert m1["buckets_failed"] == len(failed_wave) == 4
+    assert m1["buckets_processed"] == CFG.n_buckets - 4
+    assert done_buckets(spark, out_dir) == set(range(CFG.n_buckets)) - failed_wave
+
+    m2 = cp.run_extraction(spark, docs_df, out_dir, CFG, wave_size=4)
+    assert m2["buckets_processed"] == 4 and m2["buckets_failed"] == 0
+    rows = read_extracted(spark, out_dir).collect()
+    assert len(rows) == len({r["doc_id"] for r in rows}) == len(docs)
+    want = _tuples([{"doc_id": d["doc_id"], "spans": d["spans"]} for d in extract_docs(docs, CFG)])
+    assert _tuples(rows) == want
+
+
 def test_idempotent_full_rerun(spark, tmp_path):
     out_dir = str(tmp_path / "out2")
     docs_df = spark.createDataFrame(gen_docs(6), schema=DOCS)
@@ -105,9 +140,9 @@ def test_resume_refuses_mismatched_spec_version(spark, tmp_path):
 
 def test_restart_clears_old_spec_output(spark, tmp_path):
     """resume=False on a dir stamped by an OLDER spec must clear extracted/
-    and _lineage/ before re-stamping: bucket parquet is written with
-    mode('append'), so stale rows would otherwise survive under the new
-    stamp (ADVICE r2, medium)."""
+    and _lineage/ before re-stamping: a wave overwrites only its own
+    buckets, so stale rows would otherwise survive under the new stamp
+    (ADVICE r2, medium)."""
     import json
 
     cfg = PipelineConfig(detector=DetectorOptions(detect_size=256), n_buckets=4)
@@ -228,7 +263,7 @@ def test_restart_routes_iceberg_truncation(spark, tmp_path, monkeypatch):
 
 
 def test_iceberg_write_path(spark, tmp_path):
-    """With the runtime jar present: waves append as Iceberg snapshots into
+    """With the runtime jar present: waves overwrite their partitions of
     a bucket(doc_id)-partitioned table, resume skips done buckets, and a
     restart truncates the table before re-writing (no doubled rows)."""
     from mit_spark.plans.checkpoint import iceberg_available
