@@ -19,7 +19,8 @@ import sys
 import time
 
 # direct `python mit_spark/main.py` invocation (no --py-files): make the
-# package importable from the repo root, here and in the Python workers
+# package importable from the repo root (make_session does the same for the
+# Python workers)
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
@@ -41,8 +42,7 @@ def main(argv=None) -> int:
     from mit_spark.session import make_session
     from mit_spark.sources.docs_source import load_docs
 
-    spark = make_session(master=args.master, app_name="mit-spark-extract",
-                         extra={"spark.executorEnv.PYTHONPATH": _ROOT})
+    spark = make_session(master=args.master, app_name="mit-spark-extract")
     cfg = PipelineConfig(
         detector=DetectorOptions(detect_size=args.detect_size),
         n_buckets=args.buckets,

@@ -4,15 +4,18 @@
 Documents are hash-bucketed by doc_id (the parquet stand-in for Iceberg's
 ``bucket(N, doc_id)`` partition transform — SURVEY.md §4.2; the writeTo()
 Iceberg path drops in at _write_wave when the runtime jar is present).
-Buckets are processed in waves; each wave overwrites its own buckets'
-output (a re-run replaces a bucket, never adds to it), then appends
+Buckets are processed in waves; each wave writes its buckets' output
+(parquet: overwriting its own buckets, so a re-run replaces a bucket, never
+adds to it), then appends
   lineage(bucket_id, status, n_docs, n_spans, n_errors, started_at,
           finished_at, error)
 rows, and a resumed run anti-joins pending buckets against 'done' lineage —
 a killed 10^12-doc job loses at most one wave, never recomputes finished
-buckets, never duplicates a document of a wave that died between its write
-and its lineage, and one poisoned bucket records status='failed' instead of
-killing the job (reference error model, SURVEY.md §2.10).
+buckets, and one poisoned bucket records status='failed' instead of killing
+the job (reference error model, SURVEY.md §2.10). The parquet sink never
+duplicates a document of a wave that died between its write and its
+lineage; the Iceberg sink still appends, so such a wave's re-run adds its
+documents a second time there.
 
 Layout under ``out_dir``:
     extracted/bucket_id=<N>/*.parquet     (hive-partitioned -> pruning)
@@ -62,16 +65,18 @@ def _ensure_iceberg_table(spark: SparkSession, table: str, n_buckets: int) -> No
 
 def _write_wave(spark: SparkSession, out: DataFrame, out_dir: str,
                 iceberg_table: str | None) -> None:
-    """Write one wave of regrouped docs, replacing whatever an earlier
-    attempt left in the wave's buckets and leaving every other bucket alone:
-    a wave re-run after a death between this write and its 'done' lineage
-    rows rewrites its buckets instead of appending them a second time.
-    Iceberg when a table name is given (overwritePartitions: one atomic
-    snapshot per wave; the bucket transform prunes reads), else
-    hive-partitioned parquet (bucket_id column) under a dynamic partition
-    overwrite."""
+    """Write one wave of regrouped docs. Parquet (no table name):
+    hive-partitioned by bucket_id under a dynamic partition overwrite, which
+    replaces whatever an earlier attempt left in the wave's buckets and
+    leaves every other bucket alone, so a wave re-run after a death between
+    this write and its 'done' lineage rows rewrites its buckets instead of
+    appending them a second time. Iceberg (table name given): an append,
+    one atomic snapshot per wave. A partition overwrite is wrong there: the
+    table's bucket(N, doc_id) transform hashes with murmur3, not the
+    xxhash64 of bucket_of, so one wave's docs land in nearly every Iceberg
+    partition and overwritePartitions() would drop earlier waves' rows."""
     if iceberg_table is not None:
-        out.drop("bucket_id").writeTo(iceberg_table).overwritePartitions()
+        out.drop("bucket_id").writeTo(iceberg_table).append()
     else:
         out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
             "bucket_id"
@@ -120,8 +125,8 @@ def _append_lineage(spark: SparkSession, out_dir: str, rows: list[dict]) -> None
 def _clear_restart_output(spark: SparkSession, out_dir: str,
                           iceberg_table: str | None) -> None:
     """Restart hygiene: every sink a prior run wrote into must be emptied
-    before the new spec stamp lands. A wave overwrites only its own buckets,
-    and lineage is appended, so extracted/ + _lineage/ are removed (a bucket
+    before the new spec stamp lands. A parquet wave overwrites only its own
+    buckets, and lineage is appended, so extracted/ + _lineage/ are removed (a bucket
     the rerun leaves empty would otherwise keep its old-spec rows); when the
     sink is an Iceberg table, rows from the prior run survive in the table
     even after the local dirs are gone — truncate it (DELETE FROM with no
@@ -150,8 +155,8 @@ def run_extraction(
     ``buckets_failed`` counting the buckets whose wave recorded 'failed'.
     ``max_waves`` exists for kill/resume tests (stop after k waves like a
     preempted job). ``iceberg_table`` (e.g. "catalog.db.extracted")
-    switches the span sink to Iceberg writeTo partition overwrites when the
-    runtime jar is present — lineage and resume bookkeeping stay in out_dir
+    switches the span sink to Iceberg writeTo appends when the runtime jar
+    is present — lineage and resume bookkeeping stay in out_dir
     either way."""
     if iceberg_table is not None:
         if not iceberg_available(spark):

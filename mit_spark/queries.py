@@ -3623,7 +3623,7 @@ def _staged(base: str, build) -> None:
 
 # ---------------------------------------------------------------------------
 # streaming (Structured Streaming drain; the stronger oracle is the
-# exactly-once batch-equality test in tests/test_streaming.py)
+# batch-equality test in tests/test_streaming.py)
 
 
 @register(
@@ -3641,7 +3641,7 @@ def streaming_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapper (availableNow + foreachBatch + checkpoint), and return the
     extracted span counts per doc, ORACLE-GATED: expected per-doc output
     span counts come from the same DuckDB generator re-derivation the
-    flagship oracles use, so a duplicate append (broken exactly-once), a
+    flagship oracles use, so a duplicate append (a replayed batch), a
     dropped doc, or a missed detection all flip the hash.
 
     IDEMPOTENT builder: the staging dir is derived deterministically from
@@ -3669,7 +3669,7 @@ def streaming_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     _staged(base, _build)
 
     run_stream(spark, inp, out, ckp, cfg, available_now=True)
-    run_stream(spark, inp, out, ckp, cfg, available_now=True)  # exactly-once re-drain
+    run_stream(spark, inp, out, ckp, cfg, available_now=True)  # re-drain of committed offsets: a no-op
 
     return (
         spark.read.parquet(out)
@@ -3810,8 +3810,8 @@ def streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     [500,inf) by doc_id) drain through applyInPandasWithState exact dedup
     (streaming/micro_batch.py stateful_dedup_stream) — first arrival of
     each content hash is emitted, every re-send suppressed by GroupState
-    that persists across micro-batches and across the exactly-once
-    re-drain. Arrival order is pinned by explicit mtimes +
+    that persists across micro-batches and across the re-drain of
+    committed offsets. Arrival order is pinned by explicit mtimes +
     maxFilesPerTrigger=1, so the oracle can replicate 'first file, then
     min doc_id' as a plain window over the file-membership union. A
     duplicate emit (state lost), a dropped batch, or a wrong winner all

@@ -17,6 +17,9 @@ BENCH/BASELINE.md):
     media_task_count; ~0.25 CPU-s per Python task on a 4-core host, most
     of it the zipimporter re-reads that drop_zip_importers spares later
     tasks of a reused worker).
+  * spark.executorEnv.PYTHONPATH = the directory holding the mit_spark
+    package, so Python workers import it from any cwd. Spark merges it
+    with pyspark's own path and with --py-files.
 """
 
 from __future__ import annotations
@@ -32,6 +35,8 @@ WORKER_ENV = {
     "OPENBLAS_NUM_THREADS": "1",
     "MKL_NUM_THREADS": "1",
 }
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def apply_worker_env() -> None:
@@ -82,6 +87,7 @@ def make_session(
     builder = builder.config("spark.sql.shuffle.partitions", str(max(n_shuffle, 16)))
     for k, v in WORKER_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

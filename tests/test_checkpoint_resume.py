@@ -263,7 +263,7 @@ def test_restart_routes_iceberg_truncation(spark, tmp_path, monkeypatch):
 
 
 def test_iceberg_write_path(spark, tmp_path):
-    """With the runtime jar present: waves overwrite their partitions of
+    """With the runtime jar present: waves append as Iceberg snapshots into
     a bucket(doc_id)-partitioned table, resume skips done buckets, and a
     restart truncates the table before re-writing (no doubled rows)."""
     from mit_spark.plans.checkpoint import iceberg_available

@@ -81,3 +81,54 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert metrics2["buckets_done_prior"] == 4
     assert metrics2["buckets_processed"] == 0
     assert metrics2["n_docs"] == 0  # nothing recomputed
+
+
+def _run_cli(tmp_path, input_dir: str, out_name: str) -> subprocess.CompletedProcess:
+    """`python <repo>/mit_spark/main.py` straight from the checkout, run from
+    a cwd outside it with no PYTHONPATH: the Python workers find the package
+    only through the session's spark.executorEnv.PYTHONPATH."""
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    env["OMP_NUM_THREADS"] = "1"
+    env["OPENBLAS_NUM_THREADS"] = "1"
+    cmd = [
+        sys.executable, os.path.join(REPO_ROOT, "mit_spark", "main.py"),
+        "--input", input_dir,
+        "--output", str(tmp_path / out_name),
+        "--buckets", "4",
+        "--detect-size", "256",
+        "--limit", "40",
+        "--master", "local[2]",
+    ]
+    return subprocess.run(
+        cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600
+    )
+
+
+def test_cli_from_another_cwd_completes_every_bucket(tmp_path):
+    run = _run_cli(tmp_path, SF_DIR, "out")
+    assert run.returncode == 0, run.stderr[-4000:]
+    metrics = json.loads(run.stdout.strip().splitlines()[-1])
+    assert metrics["buckets_processed"] == 4
+    assert metrics["buckets_failed"] == 0
+    assert metrics["n_docs"] == 40
+
+
+def test_cli_exits_1_when_a_bucket_fails(tmp_path):
+    """A null doc_id makes the docs generator raise in the workers, so every
+    wave fails: the metrics line counts the failed buckets and the exit code
+    is 1, not 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    poisoned = tmp_path / "sf_poisoned"
+    poisoned.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, None, 3], type=pa.int64())}),
+        str(poisoned / "documents.parquet"),
+    )
+    run = _run_cli(tmp_path, str(poisoned), "out")
+    assert run.returncode == 1, run.stderr[-4000:]
+    metrics = json.loads(run.stdout.strip().splitlines()[-1])
+    assert metrics["buckets_failed"] == 4
+    assert metrics["buckets_processed"] == 0
