@@ -15,15 +15,15 @@ SF = "/root/testdata/sf0.001"
 
 
 def _run(spark, width):
-    import mit_spark.queries as Q
+    import mit_spark.queries.events as QE
 
-    old = Q._BIN_W
-    Q._BIN_W = width
+    old = QE._BIN_W
+    QE._BIN_W = width
     try:
-        df = Q.interval_overlap_join(spark, SF)
+        df = QE.interval_overlap_join(spark, SF)
         return sorted(map(tuple, df.collect()))
     finally:
-        Q._BIN_W = old
+        QE._BIN_W = old
 
 
 @pytest.mark.parametrize("width", [600, 7200])
