@@ -55,7 +55,7 @@ def serve(cpus: int, n_docs: int) -> None:
     spark = make_session(master=f"local[{cpus}]", app_name=f"mit-scaling-{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
     assert spark.sparkContext.defaultParallelism == cpus, "master not honored"
-    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512, emit_mask=False))
+    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512))
     # exact deterministic corpus: n_docs must be a multiple of the base id
     # count (5000 at sf0.1) — a limit() over a union would pick an arbitrary
     # subset and the two parallelism levels must see IDENTICAL input

@@ -82,7 +82,7 @@ def main() -> int:
     cpus = sys.argv[2] if len(sys.argv) > 2 else "16"
     spark = make_session(master=f"local[{cpus}]", app_name="mit-skew")
     spark.sparkContext.setLogLevel("ERROR")
-    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512, emit_mask=False))
+    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512))
 
     skewed_numbers = list(range(n))
     uniform_numbers = [m for m in range(3 * n) if m % 50 != 49][: 2 * n]

@@ -1,6 +1,7 @@
 """Registry timer — runs every registry entry except ``flagship_extract`` at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-in one session and prints two JSON lines:
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) in one session on
+`make_session`'s default master (local[$SPARK_GRAFT_CPUS], else every CPU
+this process may run on) and prints two JSON lines:
 
     line 1: {"metric": "bench_suite_wall_sec", "value": N, "unit": "sec",
              "entries": N, "errors": N, "sf": ..., "cpus": N,
@@ -30,12 +31,13 @@ from perfbench.probes import host_probe  # noqa: E402
 BENCH_QUERIES = [name for name in QUERIES if name != "flagship_extract"]
 
 
-def run(sf_dir: str, cpus: str) -> tuple[dict, dict]:
+def run(sf_dir: str) -> tuple[dict, dict]:
     from mit_spark.session import make_session
 
     probe_before = host_probe()
-    spark = make_session(master=f"local[{cpus}]", app_name="mit-spark-bench")
+    spark = make_session(app_name="mit-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -62,7 +64,7 @@ def run(sf_dir: str, cpus: str) -> tuple[dict, dict]:
         "entries": len(timings),
         "errors": len(errors),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "host_probe_before": probe_before,
         "host_probe": host_probe(),
     }
@@ -71,8 +73,7 @@ def run(sf_dir: str, cpus: str) -> tuple[dict, dict]:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    for line in run(sf_dir, cpus):
+    for line in run(sf_dir):
         print(json.dumps(line))
     return 0
 

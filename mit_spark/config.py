@@ -50,10 +50,10 @@ class DetectorOptions:
     max_batch_size: int = 4
     # "bilateral" (reference parity, dbnet/src/lib.rs:135) | "none"
     pre_filter: str = "none"
-    # emit the inpainting mask (A9 post-proc, dbnet lib.rs:209-218). The
-    # extracted table never consumes it, so the pipeline profile turns it
-    # off — the Spark-side analogue of column pruning: don't compute unused
-    # outputs. Parity tests keep it on.
+    # emit the inpainting mask (A9 post-proc, dbnet lib.rs:209-218) from
+    # detect(). The extracted table never consumes it, so the media UDF
+    # (batched_detect) runs with it off whatever this says — the Spark-side
+    # analogue of column pruning. Parity tests keep it on.
     emit_mask: bool = True
 
 

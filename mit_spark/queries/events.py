@@ -350,7 +350,7 @@ def streaming_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_spark.sources.docs_source import load_docs
     from mit_spark.streaming.micro_batch import run_stream
 
-    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512, emit_mask=False))
+    cfg = PipelineConfig(detector=DetectorOptions(detect_size=512))
     # "v2" = generator/content version — bump if synth output changes so a
     # stale staged dir from an older build can never satisfy the marker
     base = _staging_dir(sf_dir, "stream", "v2")

@@ -17,7 +17,7 @@ from mit_spark.queries.core import _h_sql, register
 from mit_spark.sources.docs_source import read_table
 
 
-FLAGSHIP_CFG = PipelineConfig(detector=DetectorOptions(detect_size=512, emit_mask=False))
+FLAGSHIP_CFG = PipelineConfig(detector=DetectorOptions(detect_size=512))
 
 
 def _flagship_expected_body() -> str:

@@ -7,7 +7,7 @@ BENCH/BASELINE.md):
     every large allocation mmaps + munmaps and pays first-touch page faults
     (~10-20x slowdown in sandboxed kernels). Raising the thresholds keeps
     buffers in the arena for reuse. Exported to python workers via env.
-  * OMP/BLAS threads = 1: 32 python workers x N BLAS threads oversubscribes
+  * OMP/BLAS threads = 1: one python worker per core x N BLAS threads oversubscribes
     (the reference pins ORT intra=4/inter=2 for ONE process,
     base-util/src/onnx.rs:59-60; for a worker-per-core model 1 is correct).
   * Arrow batches capped at 256 records. Worker memory does not grow with
@@ -68,7 +68,8 @@ def make_session(
     from pyspark.sql import SparkSession
 
     apply_worker_env()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: $SPARK_GRAFT_CPUS, else every CPU this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.master(master)

@@ -60,6 +60,31 @@ def test_rows_equal_and_fewer_forward_calls():
     assert calls["n"] >= -(-len(spans) // OPTS.max_batch_size)
 
 
+@pytest.mark.parametrize("fallback", [False, True])
+def test_rows_never_build_the_inpainting_mask(monkeypatch, fallback):
+    """The rows carry quads only, so emit_mask=True must give the rows of
+    emit_mask=False without building a mask: with the mask resize made to
+    raise, a mask build would turn its span into an error row. `fallback`
+    sends every span through the single-image detect() branch instead of
+    the packed finish."""
+    from mit_spark.operators import batched_detect, imageops
+
+    spans = _spans()
+    want = extract_media_spans_batched(
+        spans, DetectorOptions(detect_size=512, emit_mask=False), PRE
+    )
+    assert want and all(row[1] == "media" for row in want)
+
+    def no_mask(*args, **kwargs):
+        raise AssertionError("inpainting mask built")
+
+    monkeypatch.setattr(imageops, "resize_mask", no_mask)
+    if fallback:
+        monkeypatch.setattr(batched_detect, "should_rearrange", lambda img, size: True)
+    opts = DetectorOptions(detect_size=512, emit_mask=True)
+    assert extract_media_spans_batched(spans, opts, PRE) == want
+
+
 def test_auto_rotate_output_parity_with_fewer_calls():
     """auto_rotate's rerun always fires and discards pass 1 (common.rs:40-44)
     — the batched path computes pass 2 directly: identical rows, and fewer

@@ -1,10 +1,11 @@
-"""Worker set-up helpers in mit_spark/session.py."""
+"""Worker set-up helpers and session defaults in mit_spark/session.py."""
 
+import os
 import sys
 import zipfile
 import zipimport
 
-from mit_spark.session import drop_zip_importers
+from mit_spark.session import drop_zip_importers, make_session
 
 
 def test_drop_zip_importers_keeps_zip_imports_working(tmp_path):
@@ -31,3 +32,20 @@ def test_drop_zip_importers_keeps_zip_imports_working(tmp_path):
         sys.path_importer_cache.pop(archive, None)
         for name in ("zipped_mod_a", "zipped_mod_b"):
             sys.modules.pop(name, None)
+
+
+def test_default_master_is_the_cpus_this_process_may_run_on(monkeypatch):
+    """Without a master or $SPARK_GRAFT_CPUS, make_session runs one task
+    slot per CPU this process may run on. Resolved without starting a
+    session: getOrCreate hands back the builder itself."""
+    from pyspark.sql import SparkSession
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
+    options = make_session()._options
+    cpus = len(os.sched_getaffinity(0))
+    assert options["spark.master"] == f"local[{cpus}]"
+    assert options["spark.sql.shuffle.partitions"] == str(max(cpus, 16))
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert make_session()._options["spark.master"] == "local[3]"
