@@ -1,8 +1,7 @@
 """The registry itself and the Spark-side building blocks that entries of
 several families share: `QUERIES`/`register`, the idempotent staging
-helpers, the md5-prefix SQL idiom, the 3-shingle minhash signature and
-its band-bucket pair expansion. (The word split every family shares is
-`mit_spark.functions.textstats.tokens_col`.)"""
+helpers, the md5-prefix SQL idiom, the documents' word split, the
+3-shingle minhash signature and its band-bucket pair expansion."""
 
 from __future__ import annotations
 
@@ -11,6 +10,9 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
+
+from mit_spark.functions.textstats import tokens_col
+from mit_spark.sources.docs_source import read_table
 
 
 QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {}
@@ -22,112 +24,6 @@ def register(name: str, sql: str):
         return fn
 
     return deco
-
-
-def _h_sql(s: str) -> str:
-    """First 4 bytes of md5(s) as a big-endian int — the SQL twin of
-    synth._h/_ints (both engines agree bit-for-bit on md5 hex)."""
-    return f"('0x'||substr(md5({s}),1,8))::BIGINT"
-
-
-_MH_LANES = 6  # minhash lanes: 5-hex-char slices of ONE md5 per shingle
-_MH_BANDS = ((0, 1), (2, 3), (4, 5))  # LSH bands as groups of lanes
-
-
-def _mh_lane(digest, j: int) -> Column:
-    """Minhash lane j of a shingle's md5 digest: its j-th 5-hex-char slice.
-    Lane width and count are load-bearing against the SQL oracles'
-    `min(d[5j+1:5j+5])`."""
-    return F.substring(digest, 5 * j + 1, 5)
-
-
-def _band_key(lanes) -> Column:
-    """An LSH band key: the concatenation of its lanes' minima."""
-    return F.concat(*[F.col(f"mh{j}") for j in lanes])
-
-
-def _lsh_bands() -> Column:
-    """The 3 two-lane bands of a signature row, exploded into `band`."""
-    return F.explode(F.array(*[_band_key(g) for g in _MH_BANDS])).alias("band")
-
-
-def _minhash_signature(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The 3-shingle -> md5 -> six-lane minhash signature, built ROWS-WISE
-    (posexplode + window lead + hash-aggregate min) rather than with array
-    higher-order functions: HOF lambdas are interpreted per element while
-    window/agg expressions are codegen'd — 6x faster at sf0.1 for identical
-    output. Input (doc_id, words); returns (dg, sigs): dg is (doc_id, d),
-    one md5 per 3-word shingle, and sigs is (doc_id, mh0..mh5)."""
-    tok = corpus.select("doc_id", F.posexplode("words").alias("pos", "w"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    sh = tok.select(
-        "doc_id",
-        F.concat_ws(" ", "w", F.lead("w", 1).over(win), F.lead("w", 2).over(win)).alias(
-            "shingle"
-        ),
-        F.lead("w", 2).over(win).alias("w2"),
-    ).filter(F.col("w2").isNotNull())
-    dg = sh.select("doc_id", F.md5("shingle").alias("d"))
-    sigs = dg.groupBy("doc_id").agg(
-        *[F.min(_mh_lane("d", j)).alias(f"mh{j}") for j in range(_MH_LANES)]
-    )
-    return dg, sigs
-
-
-def _bucket_pairs(bands: DataFrame, *keys: str) -> DataFrame:
-    """Distinct (*keys, doc_a, doc_b) pairs, doc_a < doc_b, of docs sharing
-    a `band` bucket — WITHOUT a self-join (a join would recompute the whole
-    shingle->minhash lineage for both sides): group docs per (*keys, band),
-    expand sorted pairwise combinations via posexplode + slice + explode
-    (no HOF lambdas — those are interpreted per element, never codegen'd)."""
-    buckets = (
-        bands.groupBy(*keys, "band")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
-        .filter(F.size("docs") > 1)
-    )
-    return (
-        buckets.select(*keys, "docs", F.posexplode("docs").alias("i", "doc_a"))
-        .select(
-            *keys,
-            "doc_a",
-            F.explode(
-                F.slice("docs", F.col("i") + F.lit(2), F.size("docs"))
-            ).alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
-def _shingle_bands(docs: DataFrame, extra: tuple = ()) -> DataFrame:
-    """The minhash signature formed ARRAY-SIDE, for the LSH consumers that
-    verify inline on the band join (incremental_dedup,
-    corpus_curation_report): 3-gram md5 shingle digests in one codegen
-    projection (slice over sequence, no posexplode, no per-doc window
-    sort), the same lanes and bands as `_minhash_signature`, and the
-    distinct shingle set riding ALONG the band explode so the exact-Jaccard
-    verify downstream is an inline filter on the band join. Input needs
-    (doc_id, words, *extra); output is (doc_id, *extra, ds, band)."""
-    n_words = F.size("words")
-    digests = F.when(
-        n_words >= 3,  # sequence(1, n-2) would DESCEND for n < 3
-        F.transform(
-            F.sequence(F.lit(1), n_words - 2),
-            lambda i: F.md5(F.concat_ws(" ", F.slice("words", i, 3))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    docs_dg = docs.select("doc_id", *extra, digests.alias("dg")).filter(
-        F.size("dg") > 0
-    )
-    sigs = docs_dg.select(
-        "doc_id",
-        *extra,
-        F.array_distinct("dg").alias("ds"),
-        *[
-            F.array_min(F.transform("dg", lambda x: _mh_lane(x, j))).alias(f"mh{j}")
-            for j in range(_MH_LANES)
-        ],
-    )
-    return sigs.select("doc_id", *extra, "ds", _lsh_bands())
 
 
 # idempotent staging (shared by the streaming entries and the dedup pair
@@ -184,3 +80,119 @@ def _staged(base: str, build) -> None:
                 fh.write("ok")
         finally:
             fcntl.flock(lk, fcntl.LOCK_UN)
+
+
+def _h_sql(s: str) -> str:
+    """First 4 bytes of md5(s) as a big-endian int — the SQL twin of
+    synth._h/_ints (both engines agree bit-for-bit on md5 hex)."""
+    return f"('0x'||substr(md5({s}),1,8))::BIGINT"
+
+
+def _doc_words(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """(*keys, words): the documents table, each text split into words."""
+    return read_table(spark, sf_dir, "documents").select(
+        *keys, tokens_col("text").alias("words")
+    )
+
+
+_MH_LANES = 6  # minhash lanes: 5-hex-char slices of ONE md5 per shingle
+_MH_BANDS = ((0, 1), (2, 3), (4, 5))  # LSH bands as groups of lanes
+
+
+def _shingle_md5(*words) -> Column:
+    """A shingle's digest: md5 of its words joined by single spaces."""
+    return F.md5(F.concat_ws(" ", *words))
+
+
+def _mh_lane(digest, j: int) -> Column:
+    """Minhash lane j of a shingle's md5 digest: its j-th 5-hex-char slice.
+    Lane width and count are load-bearing against the SQL oracles'
+    `min(d[5j+1:5j+5])`."""
+    return F.substring(digest, 5 * j + 1, 5)
+
+
+def _band_key(lanes) -> Column:
+    """An LSH band key: the concatenation of its lanes' minima."""
+    return F.concat(*[F.col(f"mh{j}") for j in lanes])
+
+
+def _lsh_bands() -> Column:
+    """The 3 two-lane bands of a signature row, exploded into `band`."""
+    return F.explode(F.array(*[_band_key(g) for g in _MH_BANDS])).alias("band")
+
+
+def _shingle_digests(corpus: DataFrame) -> DataFrame:
+    """(doc_id, words) -> (doc_id, d): one md5 per 3-word shingle, built
+    ROWS-WISE (posexplode + window lead) rather than with array
+    higher-order functions: HOF lambdas are interpreted per element while
+    window/agg expressions are codegen'd — 6x faster at sf0.1 for
+    identical output."""
+    tok = corpus.select("doc_id", F.posexplode("words").alias("pos", "w"))
+    win = Window.partitionBy("doc_id").orderBy("pos")
+    w1, w2 = F.lead("w", 1).over(win), F.lead("w", 2).over(win)
+    sh = tok.select("doc_id", _shingle_md5("w", w1, w2).alias("d"), w2.alias("w2"))
+    return sh.filter(F.col("w2").isNotNull()).select("doc_id", "d")
+
+
+def _minhash_signature(dg: DataFrame) -> DataFrame:
+    """(doc_id, d) shingle digests -> (doc_id, mh0..mh5): each lane's
+    minimum over the doc's shingles, one hash-aggregate."""
+    return dg.groupBy("doc_id").agg(
+        *[F.min(_mh_lane("d", j)).alias(f"mh{j}") for j in range(_MH_LANES)]
+    )
+
+
+def _bucket_pairs(bands: DataFrame, *keys: str) -> DataFrame:
+    """Distinct (*keys, doc_a, doc_b) pairs, doc_a < doc_b, of docs sharing
+    a `band` bucket — WITHOUT a self-join (a join would recompute the whole
+    shingle->minhash lineage for both sides): group docs per (*keys, band),
+    expand sorted pairwise combinations via posexplode + slice + explode
+    (no HOF lambdas — those are interpreted per element, never codegen'd)."""
+    buckets = (
+        bands.groupBy(*keys, "band")
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
+        .filter(F.size("docs") > 1)
+    )
+    return (
+        buckets.select(*keys, "docs", F.posexplode("docs").alias("i", "doc_a"))
+        .select(
+            *keys,
+            "doc_a",
+            F.explode(
+                F.slice("docs", F.col("i") + F.lit(2), F.size("docs"))
+            ).alias("doc_b"),
+        )
+        .distinct()
+    )
+
+
+def _shingle_bands(docs: DataFrame, extra: tuple = ()) -> DataFrame:
+    """The minhash signature formed ARRAY-SIDE, for the LSH consumers that
+    verify inline on the band join (incremental_dedup,
+    corpus_curation_report): 3-gram md5 shingle digests in one codegen
+    projection (slice over sequence, no posexplode, no per-doc window
+    sort), the same lanes and bands as `_minhash_signature`, and the
+    distinct shingle set riding ALONG the band explode so the exact-Jaccard
+    verify downstream is an inline filter on the band join. Input needs
+    (doc_id, words, *extra); output is (doc_id, *extra, ds, band)."""
+    n_words = F.size("words")
+    digests = F.when(
+        n_words >= 3,  # sequence(1, n-2) would DESCEND for n < 3
+        F.transform(
+            F.sequence(F.lit(1), n_words - 2),
+            lambda i: _shingle_md5(F.slice("words", i, 3)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    docs_dg = docs.select("doc_id", *extra, digests.alias("dg")).filter(
+        F.size("dg") > 0
+    )
+    sigs = docs_dg.select(
+        "doc_id",
+        *extra,
+        F.array_distinct("dg").alias("ds"),
+        *[
+            F.array_min(F.transform("dg", lambda x: _mh_lane(x, j))).alias(f"mh{j}")
+            for j in range(_MH_LANES)
+        ],
+    )
+    return sigs.select("doc_id", *extra, "ds", _lsh_bands())

@@ -10,7 +10,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from mit_spark.functions.textstats import tokens_col
-from mit_spark.queries.core import _shingle_bands, _staged, _staging_dir, register
+from mit_spark.queries.core import _doc_words, _shingle_bands, _staged, _staging_dir, register
 from mit_spark.queries.dedup import (
     _dedup_clusters_sql,
     _minhash_verify_sql,
@@ -126,9 +126,7 @@ def corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     barrier (measured on incremental_dedup, where persist cost 2-3 s);
     at 100 TB a nightly run stages the tokenized corpus once and points
     all five subtrees at it — the _substr_chunks discipline."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     d = d.repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
     content = F.md5(F.concat_ws(" ", "words"))
     hashes = d.select("doc_id", content.alias("h"))
@@ -210,11 +208,7 @@ def corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch sketch-eval entry) and streaming_histogram_merge (its streaming
 # twin) — ONE definition so the two entries and their oracles cannot drift
 _QSK_BINW = 8  # histogram bin width (tokens)
-
-
 _QSK_BINS = 64  # bins 0..63; values past the range clamp into the last bin
-
-
 _QSK_QS = (50, 90, 99)  # evaluated quantiles (percent)
 
 
@@ -480,11 +474,7 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KMV_K = 64  # sketch size: keep the K smallest hashes per group
-
-
 _KMV_W = 48  # hash width in bits (12 md5 hex chars — fits BIGINT with headroom)
-
-
 _KMV_NUM = (_KMV_K - 1) << _KMV_W  # (K-1) * 2^W, the estimator numerator
 
 
@@ -557,9 +547,7 @@ def cardinality_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact_distinct column is what you'd drop first; it's retained here
     because measuring the estimator against truth is the point of the
     entry. Estimator sanity is property-tested in tests/test_sketches.py."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "source", "doc_id")
     sh = _source_shingles(d)
     ds = sh.select("source", "shingle").distinct()
     nh = ds.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("exact_distinct"))
@@ -591,14 +579,8 @@ def cardinality_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HLL_M = 64  # registers (p = 6 bucket bits)
-
-
 _HLL_VBITS = 42  # hash bits left after the bucket split (48 - 6)
-
-
 _HLL_CAP = 20  # register cap for the exact power-of-two scaled sum
-
-
 _HLL_RHO_MAX = _HLL_VBITS + 1  # rho when the 42 value bits are all zero
 
 
@@ -674,9 +656,7 @@ def cardinality_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-distinct branch exists only because measuring the estimator is
     the point. Registers stay exact under ANSI mode (max sum 64 * 2^20).
     """
-    d = read_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "source", "doc_id")
     sh = _source_shingles(d)
     hv = sh.select(
         "source",
@@ -725,11 +705,7 @@ def cardinality_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CMS_D = 4  # depth: independent hash rows
-
-
 _CMS_W = 256  # width: buckets per row
-
-
 _CMS_TOPK = 20
 
 
@@ -796,9 +772,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts 20 rows against the 1024-row counter table. The exact
     column is the eval harness, not the production path — at corpus scale
     the sketch is what you keep."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     tok = d.select("doc_id", F.posexplode("words").alias("pos", "w"))
     win = Window.partitionBy("doc_id").orderBy("pos")
     sh = tok.select(

@@ -14,8 +14,10 @@ from mit_spark.functions.textstats import tokens_col
 from mit_spark.queries.core import (
     _band_key,
     _bucket_pairs,
+    _doc_words,
     _lsh_bands,
     _minhash_signature,
+    _shingle_digests,
     _shingle_bands,
     _staged,
     _staging_dir,
@@ -48,9 +50,7 @@ def _perturbed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, words): documents UNION a perturbed copy (last word dropped,
     doc_id + 100000), so true near-dup pairs exist — the corpus of every
     shingle-based dedup entry and of its oracle's `corpus` CTE."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     perturbed = d.select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.slice("words", 1, F.size("words") - 1).alias("words"),
@@ -100,8 +100,8 @@ def _minhash_sql() -> str:
 def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidates: shingle -> minhash -> band ->
     bucket pair expansion (SURVEY/prompt dedup operator #2), over the
-    shared row-wise signature (`_minhash_signature`)."""
-    _, sigs = _minhash_signature(_perturbed_corpus(spark, sf_dir))
+    shared row-wise signature (`_shingle_digests`, `_minhash_signature`)."""
+    sigs = _minhash_signature(_shingle_digests(_perturbed_corpus(spark, sf_dir)))
     bands = sigs.select("doc_id", _lsh_bands())
     return _bucket_pairs(bands).orderBy("doc_a", "doc_b")
 
@@ -181,11 +181,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SH_NIBBLES = 15  # 60-bit fingerprint: 15 md5 nibbles x 4 bits (fits BIGINT)
-
-
 _SH_BANDS = 4  # pigeonhole: hamming <= 3 => at least one of 4 bands equal
-
-
 _SH_HAM = 3
 
 
@@ -368,14 +364,8 @@ def _minhash_verify_sql() -> str:
 
 
 _WIN_K = 4  # winnowing k-gram size (tokens)
-
-
 _WIN_W = 5  # winnowing window (hash positions)
-
-
 _WIN_T = 8  # report pairs sharing >= T fingerprints (MOSS-style cutoff)
-
-
 _WIN_RADIX = 1 << 20  # position radix for the (hash, rightmost-pos) encoding
 
 
@@ -608,7 +598,8 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-deterministic). The 0.5-Jaccard verify is the integer
     cross-multiply 3*|intersect| >= |x|+|y| — no float in the decision;
     the two output doubles are int/int ratios, 6dp."""
-    dg, sigs = _minhash_signature(_perturbed_corpus(spark, sf_dir))
+    dg = _shingle_digests(_perturbed_corpus(spark, sf_dir))
+    sigs = _minhash_signature(dg)
     entries = []
     for b, groups in _LSH_SWEEP.items():
         for g in groups:
@@ -663,7 +654,8 @@ def minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpora. In-bucket pair expansion is posexplode + slice +
     explode (no interpreted HOF lambdas). Ratio computed over exact
     integer set sizes, so the 0.5 threshold is engine-deterministic."""
-    dg, sigs = _minhash_signature(_perturbed_corpus(spark, sf_dir))
+    dg = _shingle_digests(_perturbed_corpus(spark, sf_dir))
+    sigs = _minhash_signature(dg)
     cand = _bucket_pairs(sigs.select("doc_id", _lsh_bands()))
     sets = _digest_sets(dg)
     x, y = sets.alias("x"), sets.alias("y")
@@ -1023,11 +1015,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PR_SCALE = 1_000_000  # rank unit: millionths (r0 = 1.0)
-
-
 _PR_BASE = 150_000  # (1 - d) * SCALE with damping d = 0.85
-
-
 _PR_ITERS = 3
 
 
@@ -1160,8 +1148,6 @@ def _incdedup_batch(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame
 
 
 _BLOOM_M = 4096  # bit-array size; sized small so false positives APPEAR
-
-
 _BLOOM_K = 3  # hash lanes
 
 
@@ -1227,9 +1213,7 @@ def bloom_dedup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic and the screen semantics are unchanged; only the set-bit
     representation densifies. No corpus-side shuffle at probe time at all —
     the filter is built once and reused across batches."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     batch = _incdedup_batch(spark, sf_dir, d)
     content = F.md5(F.concat_ws(" ", "words"))
 
@@ -1343,7 +1327,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stage 2 (near): the batch is shingled; LSH band join restricted to
     batch↔corpus (probe side is the small batch, never corpus×corpus), then
     exact shingle-set Jaccard >= 0.5 verify on candidates — identical
-    recall/precision split as minhash_verified_dups (queries.py).
+    recall/precision split as minhash_verified_dups.
     Priority exact > near > kept, so whether stage-2 also sees exact dups
     is output-invariant: a high-re-post crawl would anti-join them out
     first; here the anti-join's serial barrier costs more than the spared
@@ -1354,9 +1338,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming batch IS a materialized table, and deriving it lazily here
     made every downstream branch re-scan documents (~90 scans in the
     un-staged plan vs ~6 after)."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     # spread the corpus BEFORE the md5/shingle projections: at bench scale
     # the documents parquet is one small file, so the scan yields ~4 input
     # splits and the CPU-bound digest pass runs 4-wide on 32 cores (this

@@ -10,8 +10,41 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from mit_spark.functions.textstats import tokens_col
-from mit_spark.queries.core import _staged, _staging_dir, register
+from mit_spark.queries.core import _doc_words, _shingle_digests, _staged, _staging_dir, register
 from mit_spark.sources.docs_source import read_table
+
+
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e): the embeddings table with its vectors as array<double>."""
+    return read_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+
+
+def _dot_fold(x: Column, y: Column) -> Column:
+    """Index-order dot-product fold — JVM-side zip_with + aggregate, no UDF."""
+    return F.aggregate(
+        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
+def _sign_lsh_bucket() -> Column:
+    """Sign-LSH bucket of column `e`: the sign bits of its projections on 4
+    md5-derived +/-1 hyperplanes (plane `hid`, dim d: md5('hid:d')[0] >= '8')."""
+
+    def proj(hid: int) -> Column:
+        weighted = F.transform(
+            "e",
+            lambda x, i: x
+            * F.when(
+                F.substring(F.md5(F.concat(F.lit(f"{hid}:"), (i + 1).cast("string"))), 1, 1)
+                >= "8",
+                F.lit(1.0),
+            ).otherwise(F.lit(-1.0)),
+        )
+        return F.aggregate(weighted, F.lit(0.0), lambda acc, v: acc + v)
+
+    return F.concat(*[F.when(proj(h) > 0, "1").otherwise("0") for h in range(4)])
 
 
 @register(
@@ -32,19 +65,12 @@ from mit_spark.sources.docs_source import read_table
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (similarity-search baseline): broadcast the
     query side, JVM-side zip_with/aggregate dot products — no UDF."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     q = F.broadcast(emb.filter(F.col("vec_id") < 8).alias("q"))
     c = emb.alias("c")
 
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-        )
-
     qe, ce = F.col("q.e"), F.col("c.e")
-    cos = dot(qe, ce) / (F.sqrt(dot(qe, qe)) * F.sqrt(dot(ce, ce)))
+    cos = _dot_fold(qe, ce) / (F.sqrt(_dot_fold(qe, qe)) * F.sqrt(_dot_fold(ce, ce)))
     joined = q.join(c, F.col("q.vec_id") != F.col("c.vec_id")).select(
         F.col("q.vec_id").alias("q_id"),
         F.col("c.vec_id").alias("n_id"),
@@ -72,11 +98,8 @@ def embedding_label_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").select(
         "label", F.col("embedding").cast("array<double>").alias("e")
     )
-    dot = F.aggregate(
-        F.zip_with("e", "e", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
     return (
-        emb.select("label", F.sqrt(dot).alias("norm"))
+        emb.select("label", F.sqrt(_dot_fold(F.col("e"), F.col("e"))).alias("norm"))
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.round(F.avg("norm"), 4).alias("avg_norm"))
         .orderBy("label")
@@ -103,27 +126,10 @@ def _lsh_sql() -> str:
 def embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucketing (the ANN scale path): 4 md5-derived hyperplanes,
     bucket = sign bits of the projections — pure Catalyst expressions."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
 
-    def proj(hid: int):
-        weighted = F.transform(
-            "e",
-            lambda x, i: x
-            * F.when(
-                F.substring(F.md5(F.concat(F.lit(f"{hid}:"), (i + 1).cast("string"))), 1, 1)
-                >= "8",
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
-        )
-        return F.aggregate(weighted, F.lit(0.0), lambda acc, v: acc + v)
-
-    bucket = F.concat(
-        *[F.when(proj(h) > 0, "1").otherwise("0") for h in range(4)]
-    ).alias("bucket")
     return (
-        emb.select("vec_id", bucket)
+        emb.select("vec_id", _sign_lsh_bucket().alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.min("vec_id").alias("min_vec"))
         .orderBy("bucket")
@@ -173,33 +179,16 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplanes -> 16 buckets), then exact cosine >= 0.30 filters the
     candidates. At 100 TB the bucket equi-join replaces the quadratic
     cross-join: candidate count scales with bucket occupancy, not n^2."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-
-    def proj(hid: int):
-        weighted = F.transform(
-            "e",
-            lambda x, i: x
-            * F.when(
-                F.substring(F.md5(F.concat(F.lit(f"{hid}:"), (i + 1).cast("string"))), 1, 1)
-                >= "8",
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
-        )
-        return F.aggregate(weighted, F.lit(0.0), lambda acc, v: acc + v)
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
+    emb = _vectors(spark, sf_dir)
 
     # norm computed ONCE per vector before the pair join (the join expands
     # to ~n^2/buckets rows; folding norms per pair would triple the
     # higher-order-function work, the dominant cost of this query)
-    bucket = F.concat(*[F.when(proj(h) > 0, "1").otherwise("0") for h in range(4)])
     b = emb.select(
-        "vec_id", "e", F.sqrt(dot(F.col("e"), F.col("e"))).alias("nrm"), bucket.alias("bucket")
+        "vec_id",
+        "e",
+        F.sqrt(_dot_fold(F.col("e"), F.col("e"))).alias("nrm"),
+        _sign_lsh_bucket().alias("bucket"),
     )
 
     # parallelism: the table arrives as ONE parquet split, so without a
@@ -212,7 +201,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # volume per bucket, never n^2, is the scaling quantity either way).
     a = b.repartition(spark.sparkContext.defaultParallelism, "vec_id").alias("a")
     c = F.broadcast(b).alias("b")
-    cos = dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
+    cos = _dot_fold(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(c, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .withColumn("cos_raw", cos)
@@ -350,8 +339,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RECALL_K = 3
-
-
 _RECALL_N_QUERIES = 32  # query panel: vec_id < 32
 
 
@@ -359,9 +346,7 @@ def _exact_panel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k ground truth for the recall-eval panel: broadcast the
     bounded query panel into one nested-loop pass over all vectors (cost
     n x |panel|, linear in the corpus). Returns (q_id, n_id)."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     qv = emb.filter(F.col("vec_id") < _RECALL_N_QUERIES).alias("q")
     nv = emb.alias("n")
     pairs = (
@@ -584,8 +569,6 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _QUANT_BITS = 8
-
-
 _QUANT_LEVELS = 255  # codes in [0, 255]
 
 
@@ -645,9 +628,7 @@ def embedding_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids), and quantized distances are pure BIGINT folds, so the
     ranking is bit-exact with ties broken by n_id. Output is one row of
     integer counts + one int/int division."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     stats = (
         emb.select(F.posexplode("e").alias("p", "val"))
         .groupBy("p")
@@ -719,8 +700,6 @@ _KW_QUERIES = [
     (2, ("customer", "table")),
     (3, ("dup", "vector")),  # one rare + one common term: selective postings
 ]
-
-
 _KW_TOPK = 5
 
 
@@ -732,9 +711,7 @@ def _kw_postings(spark: SparkSession, sf_dir: str):
     terms = [(qid, t) for qid, ts in _KW_QUERIES for t in ts]
     q = spark.createDataFrame(terms, "query_id long, term string")
     allowed = sorted({t for _, t in terms})
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     tok = d.select(
         "doc_id", F.explode(F.filter("words", lambda w: w.isin(*allowed))).alias("term")
     )
@@ -826,11 +803,7 @@ def keyword_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RRF_C = 60  # the standard RRF constant (Cormack et al. 2009)
-
-
 _RRF_LIST = 20  # per-modality candidate list depth
-
-
 _RRF_TOPK = 5
 
 
@@ -914,9 +887,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "r")
     )
 
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     seeds = q.select("query_id").distinct()
     qv = (
         F.broadcast(seeds)
@@ -966,8 +937,6 @@ _PHRASE_QUERIES = [
     (2, ("fast", "spark")),
     (3, ("window", "join")),
 ]
-
-
 _PHRASE_TOPK = 5
 
 
@@ -1127,16 +1096,7 @@ def semantic_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ids, "doc_id", "leftsemi")
         .select("doc_id", tokens_col("text").alias("words"))
     )
-    tok = d.select("doc_id", F.posexplode("words").alias("pos", "w"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    sh = tok.select(
-        "doc_id",
-        F.concat_ws(" ", "w", F.lead("w", 1).over(win), F.lead("w", 2).over(win)).alias(
-            "shingle"
-        ),
-        F.lead("w", 2).over(win).alias("w2"),
-    ).filter(F.col("w2").isNotNull())
-    sets = sh.groupBy("doc_id").agg(F.collect_set(F.md5("shingle")).alias("ds"))
+    sets = _shingle_digests(d).groupBy("doc_id").agg(F.collect_set("d").alias("ds"))
     x, y = sets.alias("x"), sets.alias("y")
     inter = F.size(F.array_intersect(F.col("x.ds"), F.col("y.ds")))
     union = F.size(F.col("x.ds")) + F.size(F.col("y.ds")) - inter
@@ -1151,8 +1111,6 @@ def semantic_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KMEANS_K = 8
-
-
 _KMEANS_ROUNDS = 3  # assignment rounds; centroids update between them
 
 
@@ -1244,9 +1202,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``else cent[j]`` fallback below, the oracle via LEFT JOIN + COALESCE in
     its update CTE — ADVICE r3), so a data change that empties a cluster
     stays a matching result instead of an opaque hash mismatch."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     cent = {
         int(r["vec_id"]): list(r["e"])
         for r in emb.filter(F.col("vec_id") < _KMEANS_K).collect()
@@ -1256,11 +1212,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         structs = []
         for j in sorted(cent):
             carr = F.array(*[F.lit(float(x)) for x in cent[j]])
-            d = F.aggregate(
-                F.zip_with("e", carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
+            d = _l2_fold(F.col("e"), carr)
             structs.append(F.struct(d.alias("d"), F.lit(j).alias("cid")))
         return F.array_min(F.array(*structs))
 
@@ -1477,9 +1429,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans assignment margin is ~7e-6 (measured) — nine orders above
     cross-engine float noise."""
     km = _kmeans_labels(spark, sf_dir).select("vec_id", "cluster")
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     lab = emb.join(km, "vec_id")
     q = lab.filter(F.col("vec_id") < _RECALL_N_QUERIES).alias("q")
     n = lab.alias("n")

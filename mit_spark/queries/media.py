@@ -351,21 +351,16 @@ def _media_stats_sql(images_only: bool = False) -> str:
     )
 
 
-@register("media_channel_stats", _media_stats_sql())
-def media_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode media binaries (MITB container) and aggregate per-source-kind
-    channel statistics over every frame — the multimodal feature-extraction
-    plumbing end-to-end (frame_sample is exercised separately in
-    tests/test_multimodal.py). The doc slice is a DETERMINISTIC doc_id range
-    (not ``limit``, whose row choice depends on parquet file order). The
-    oracle re-derives every decoded pixel histogram in CLOSED FORM from the
-    generator geometry (see _media_stats_sql) — the multimodal decode path
-    is value-checked by SQL, not just row-counted."""
-    from mit_spark.operators.multimodal import channel_stats, media_table
+def _channel_summary(spark: SparkSession, sf_dir: str, table, **frames) -> DataFrame:
+    """Per-channel means of `channel_stats` over the media spans of the
+    first 120 documents — a DETERMINISTIC doc_id range (not ``limit``,
+    whose row choice depends on parquet file order). ``table`` builds the
+    payload table from the docs; ``frames`` picks the decoder."""
+    from mit_spark.operators.multimodal import channel_stats
     from mit_spark.sources.docs_source import load_docs
 
     docs = load_docs(spark, sf_dir, max_doc_no=120)
-    stats = channel_stats(media_table(spark, docs))
+    stats = channel_stats(table(spark, docs), **frames)
     return (
         stats.groupBy("channel")
         .agg(
@@ -376,6 +371,20 @@ def media_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("channel")
     )
+
+
+@register("media_channel_stats", _media_stats_sql())
+def media_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decode media binaries (MITB container) and aggregate per-source-kind
+    channel statistics over every frame — the multimodal feature-extraction
+    plumbing end-to-end (frame_sample is exercised separately in
+    tests/test_multimodal.py). The oracle re-derives every decoded pixel
+    histogram in CLOSED FORM from the generator geometry (see
+    _media_stats_sql) — the multimodal decode path is value-checked by SQL,
+    not just row-counted."""
+    from mit_spark.operators.multimodal import media_table
+
+    return _channel_summary(spark, sf_dir, media_table)
 
 
 @register(
@@ -442,25 +451,9 @@ def media_channel_stats_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same closed-form pixel-histogram oracle that gates the MITB path.
     Videos are excluded (PNG is single-image); the oracle is restricted to
     n_frames = 1 accordingly."""
-    from mit_spark.operators.multimodal import (
-        _frames_png,
-        channel_stats,
-        media_table_png,
-    )
-    from mit_spark.sources.docs_source import load_docs
+    from mit_spark.operators.multimodal import _frames_png, media_table_png
 
-    docs = load_docs(spark, sf_dir, max_doc_no=120)
-    stats = channel_stats(media_table_png(spark, docs), frames_of=_frames_png)
-    return (
-        stats.groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.round(F.avg("mean"), 3).alias("avg_mean"),
-            F.round(F.avg("std"), 3).alias("avg_std"),
-            F.sum("n_frames").alias("total_frames"),
-        )
-        .orderBy("channel")
-    )
+    return _channel_summary(spark, sf_dir, media_table_png, frames_of=_frames_png)
 
 
 def _media_stats_jpeg_sql() -> str:
@@ -521,25 +514,9 @@ def media_channel_stats_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     _media_stats_jpeg_sql), so this entry is VALUE-gated end-to-end; the
     codec's lossy/AC paths are golden-tested in tests/test_jpeg_codec.py.
     Videos and sub-MCU pages are excluded on both sides."""
-    from mit_spark.operators.multimodal import (
-        _frames_jpeg,
-        channel_stats,
-        media_table_jpeg,
-    )
-    from mit_spark.sources.docs_source import load_docs
+    from mit_spark.operators.multimodal import _frames_jpeg, media_table_jpeg
 
-    docs = load_docs(spark, sf_dir, max_doc_no=120)
-    stats = channel_stats(media_table_jpeg(spark, docs), frames_of=_frames_jpeg)
-    return (
-        stats.groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.round(F.avg("mean"), 3).alias("avg_mean"),
-            F.round(F.avg("std"), 3).alias("avg_std"),
-            F.sum("n_frames").alias("total_frames"),
-        )
-        .orderBy("channel")
-    )
+    return _channel_summary(spark, sf_dir, media_table_jpeg, frames_of=_frames_jpeg)
 
 
 def _video_stats_sql() -> str:
@@ -600,25 +577,9 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     MJPEG-AVI video. Intraframe-only compression is also the scale story:
     frames decode independently, so a 2-hour video splits across
     executors without state."""
-    from mit_spark.operators.multimodal import (
-        _frames_avi,
-        channel_stats,
-        video_table,
-    )
-    from mit_spark.sources.docs_source import load_docs
+    from mit_spark.operators.multimodal import _frames_avi, video_table
 
-    docs = load_docs(spark, sf_dir, max_doc_no=120)
-    stats = channel_stats(video_table(spark, docs), frames_of=_frames_avi)
-    return (
-        stats.groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.round(F.avg("mean"), 3).alias("avg_mean"),
-            F.round(F.avg("std"), 3).alias("avg_std"),
-            F.sum("n_frames").alias("total_frames"),
-        )
-        .orderBy("channel")
-    )
+    return _channel_summary(spark, sf_dir, video_table, frames_of=_frames_avi)
 
 
 def _audio_stats_sql() -> str:

@@ -11,7 +11,7 @@ from pyspark.sql.window import Window
 from mit_spark.functions import textstats as TS
 from mit_spark.functions.textclean import clean_text_col, clean_text_sql
 from mit_spark.functions.textstats import tokens_col
-from mit_spark.queries.core import register
+from mit_spark.queries.core import _doc_words, register
 from mit_spark.sources.docs_source import read_table
 
 
@@ -124,9 +124,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from ONE array-side codegen projection over the split text (no
     explode, no per-token shuffle — the r3 plan lesson), followed by a
     single map-side-combinable groupBy on the low-cardinality source key."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "source", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "source")
     n_words = F.size("words")
     total_chars = F.aggregate(
         F.transform("words", F.length), F.lit(0), lambda acc, x: acc + x
@@ -163,8 +161,6 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _GOPHER_TOP = {2: 0.20, 3: 0.18, 4: 0.16}  # Rae et al. 2021 Table A1
-
-
 _GOPHER_DUP = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
@@ -657,8 +653,6 @@ def rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _COLL_MIN_COUNT = 5
-
-
 _COLL_TOPK = 20
 
 
@@ -714,9 +708,7 @@ def collocation_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     web scale — 'the' is in every bigram); the two corpus totals ride as
     1-row broadcast frames, and the top-k window sees only pairs past the
     count floor, never the corpus."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     tok = d.select("doc_id", F.posexplode("words").alias("pos", "w"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
     n_uni = uni.agg(F.sum("c").cast("long").alias("n_uni"))
@@ -896,9 +888,7 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     Architecture is the one that scales: the HOLDOUT side's distinct grams
     are tiny (benchmarks are small) and broadcast, so the training corpus
     streams map-side through a hash probe — no shuffle of the 100 TB side."""
-    d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("words")
-    )
+    d = _doc_words(spark, sf_dir, "doc_id")
     tok = d.select("doc_id", F.posexplode("words").alias("pos", "w"))
     win = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("w")] + [F.lead("w", i).over(win) for i in range(1, 4)]
@@ -919,8 +909,6 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EMAIL_RE = "[a-z0-9.]+@[a-z0-9.]+\\.[a-z]{2,}"
-
-
 _PHONE_RE = "\\+1 555-[0-9]{4}"
 
 
