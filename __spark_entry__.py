@@ -12,7 +12,7 @@ oracle_sql()  — DuckDB-equivalent SQL for each query (identical column
                 reading-order ranks. The numpy golden-equality suite in
                 tests/ is the second, independent gate.
 
-queries() returns entries in registration (source) order;
+The order of queries() carries no meaning;
 tests/test_queries_oracle.py checks every entry against its oracle.
 """
 

@@ -147,7 +147,7 @@ def extract_media_spans_batched(
                 else:
                     db_j, mask_j = heads[j]
                 quads, mask2d = infer_post(db_j, mask_j, ctx, opts)
-                quads, _ = detect_post(quads, mask2d, add_border, pre_eff, img_h)
+                quads, _m = detect_post(quads, mask2d, add_border, pre_eff, img_h)
                 out[idx] = _span_rows(spans[idx], img, quads)
             except Exception as e:  # noqa: BLE001 — poison isolation
                 out[idx] = _error_row(spans[idx], e)
@@ -161,7 +161,7 @@ def extract_media_spans_batched(
             img = render_media(ref)
             work, add_border, img_h = detect_pre(img, pre_eff)
             if should_rearrange(work, opts.detect_size):
-                quads, _ = detect(img, forward, opts, pre_eff)
+                quads, _mask = detect(img, forward, opts, pre_eff)
                 out[idx] = _span_rows(span, img, quads)
                 continue
             tensor, ctx = infer_pre(work, opts)
