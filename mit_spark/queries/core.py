@@ -99,11 +99,6 @@ _MH_LANES = 6  # minhash lanes: 5-hex-char slices of ONE md5 per shingle
 _MH_BANDS = ((0, 1), (2, 3), (4, 5))  # LSH bands as groups of lanes
 
 
-def _shingle_md5(*words) -> Column:
-    """A shingle's digest: md5 of its words joined by single spaces."""
-    return F.md5(F.concat_ws(" ", *words))
-
-
 def _mh_lane(digest, j: int) -> Column:
     """Minhash lane j of a shingle's md5 digest: its j-th 5-hex-char slice.
     Lane width and count are load-bearing against the SQL oracles'
@@ -121,17 +116,24 @@ def _lsh_bands() -> Column:
     return F.explode(F.array(*[_band_key(g) for g in _MH_BANDS])).alias("band")
 
 
-def _shingle_digests(corpus: DataFrame) -> DataFrame:
-    """(doc_id, words) -> (doc_id, d): one md5 per 3-word shingle, built
-    ROWS-WISE (posexplode + window lead) rather than with array
-    higher-order functions: HOF lambdas are interpreted per element while
-    window/agg expressions are codegen'd — 6x faster at sf0.1 for
+def _shingles(corpus: DataFrame, *keys: str) -> DataFrame:
+    """(doc_id, *keys, words) -> (doc_id, *keys, shingle): every 3-word
+    shingle, built ROWS-WISE (posexplode + window lead) rather than with
+    array higher-order functions: HOF lambdas are interpreted per element
+    while window/agg expressions are codegen'd — 6x faster at sf0.1 for
     identical output."""
-    tok = corpus.select("doc_id", F.posexplode("words").alias("pos", "w"))
+    tok = corpus.select("doc_id", *keys, F.posexplode("words").alias("pos", "w"))
     win = Window.partitionBy("doc_id").orderBy("pos")
     w1, w2 = F.lead("w", 1).over(win), F.lead("w", 2).over(win)
-    sh = tok.select("doc_id", _shingle_md5("w", w1, w2).alias("d"), w2.alias("w2"))
-    return sh.filter(F.col("w2").isNotNull()).select("doc_id", "d")
+    sh = tok.select(
+        "doc_id", *keys, F.concat_ws(" ", "w", w1, w2).alias("shingle"), w2.alias("w2")
+    )
+    return sh.filter(F.col("w2").isNotNull()).drop("w2")
+
+
+def _shingle_digests(corpus: DataFrame) -> DataFrame:
+    """(doc_id, words) -> (doc_id, d): one md5 per 3-word shingle."""
+    return _shingles(corpus).select("doc_id", F.md5("shingle").alias("d"))
 
 
 def _minhash_signature(dg: DataFrame) -> DataFrame:
@@ -180,7 +182,7 @@ def _shingle_bands(docs: DataFrame, extra: tuple = ()) -> DataFrame:
         n_words >= 3,  # sequence(1, n-2) would DESCEND for n < 3
         F.transform(
             F.sequence(F.lit(1), n_words - 2),
-            lambda i: _shingle_md5(F.slice("words", i, 3)),
+            lambda i: F.md5(F.concat_ws(" ", F.slice("words", i, 3))),
         ),
     ).otherwise(F.array().cast("array<string>"))
     docs_dg = docs.select("doc_id", *extra, digests.alias("dg")).filter(

@@ -10,7 +10,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from mit_spark.functions.textstats import tokens_col
-from mit_spark.queries.core import _doc_words, _shingle_bands, _staged, _staging_dir, register
+from mit_spark.queries.core import (
+    _doc_words,
+    _shingle_bands,
+    _shingles,
+    _staged,
+    _staging_dir,
+    register,
+)
 from mit_spark.queries.dedup import (
     _dedup_clusters_sql,
     _minhash_verify_sql,
@@ -428,6 +435,23 @@ def sequence_pack(
     )
 
 
+def _mixture_weights(g: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, n_docs, n_tokens) domain rows -> the same rows with each
+    domain's token share and its sqrt(n_tokens)-tempered mixture weight,
+    both normalized over all domains and rounded to 6dp."""
+    everything = Window.partitionBy()
+    share = F.col("n_tokens") / F.sum("n_tokens").over(everything).cast("double")
+    w_raw = F.sqrt(F.col("n_tokens").cast("double"))
+    weight = w_raw / F.sum(w_raw).over(everything)
+    return g.select(
+        *keys,
+        "n_docs",
+        "n_tokens",
+        F.round(share, 6).alias("token_share"),
+        F.round(weight, 6).alias("mixture_weight"),
+    ).orderBy(*keys)
+
+
 @register(
     "domain_mixture_weights",
     """
@@ -459,38 +483,12 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(tokens_col("text"))).cast("long").alias("n_tokens"),
     )
-    everything = Window.partitionBy()
-    share = F.col("n_tokens") / F.sum("n_tokens").over(everything).cast("double")
-    w_raw = F.sqrt(F.col("n_tokens").cast("double"))
-    weight = w_raw / F.sum(w_raw).over(everything)
-    return g.select(
-        "source",
-        "lang",
-        "n_docs",
-        "n_tokens",
-        F.round(share, 6).alias("token_share"),
-        F.round(weight, 6).alias("mixture_weight"),
-    ).orderBy("source", "lang")
+    return _mixture_weights(g, "source", "lang")
 
 
 _KMV_K = 64  # sketch size: keep the K smallest hashes per group
 _KMV_W = 48  # hash width in bits (12 md5 hex chars — fits BIGINT with headroom)
 _KMV_NUM = (_KMV_K - 1) << _KMV_W  # (K-1) * 2^W, the estimator numerator
-
-
-def _source_shingles(d: DataFrame) -> DataFrame:
-    """Per-source 3-gram word shingles (with the trailing-window null
-    column w2 for boundary filtering) shared by the cardinality-sketch
-    entries; `d` carries (source, doc_id, words)."""
-    tok = d.select("source", "doc_id", F.posexplode("words").alias("pos", "w"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    return tok.select(
-        "source",
-        F.concat_ws(" ", "w", F.lead("w", 1).over(win), F.lead("w", 2).over(win)).alias(
-            "shingle"
-        ),
-        F.lead("w", 2).over(win).alias("w2"),
-    ).filter(F.col("w2").isNotNull())
 
 
 def _kmv_sql() -> str:
@@ -548,7 +546,7 @@ def cardinality_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     because measuring the estimator against truth is the point of the
     entry. Estimator sanity is property-tested in tests/test_sketches.py."""
     d = _doc_words(spark, sf_dir, "source", "doc_id")
-    sh = _source_shingles(d)
+    sh = _shingles(d, "source")
     ds = sh.select("source", "shingle").distinct()
     nh = ds.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("exact_distinct"))
     dh = ds.select(
@@ -657,7 +655,7 @@ def cardinality_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the point. Registers stay exact under ANSI mode (max sum 64 * 2^20).
     """
     d = _doc_words(spark, sf_dir, "source", "doc_id")
-    sh = _source_shingles(d)
+    sh = _shingles(d, "source")
     hv = sh.select(
         "source",
         F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10).cast("long").alias("h"),
@@ -772,15 +770,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts 20 rows against the 1024-row counter table. The exact
     column is the eval harness, not the production path — at corpus scale
     the sketch is what you keep."""
-    d = _doc_words(spark, sf_dir, "doc_id")
-    tok = d.select("doc_id", F.posexplode("words").alias("pos", "w"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    sh = tok.select(
-        F.concat_ws(" ", "w", F.lead("w", 1).over(win), F.lead("w", 2).over(win)).alias(
-            "shingle"
-        ),
-        F.lead("w", 2).over(win).alias("w2"),
-    ).filter(F.col("w2").isNotNull())
+    sh = _shingles(_doc_words(spark, sf_dir, "doc_id"))
     exact = sh.groupBy("shingle").agg(F.count(F.lit(1)).cast("long").alias("exact_count"))
 
     def bucket(j, col="shingle"):
@@ -1007,17 +997,7 @@ def semantic_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").cast("long").alias("n_tokens"),
         )
     )
-    everything = Window.partitionBy()
-    share = F.col("n_tokens") / F.sum("n_tokens").over(everything).cast("double")
-    w_raw = F.sqrt(F.col("n_tokens").cast("double"))
-    weight = w_raw / F.sum(w_raw).over(everything)
-    return g.select(
-        "cluster",
-        "n_docs",
-        "n_tokens",
-        F.round(share, 6).alias("token_share"),
-        F.round(weight, 6).alias("mixture_weight"),
-    ).orderBy("cluster")
+    return _mixture_weights(g, "cluster")
 
 
 def _cluster_balanced_sql() -> str:
