@@ -10,15 +10,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from mit_spark.functions import textstats as TS
-from mit_spark.functions.textstats import tokens_col
 from mit_spark.queries.core import (
     _band_key,
     _bucket_pairs,
     _doc_words,
     _lsh_bands,
     _minhash_signature,
-    _shingle_digests,
     _shingle_bands,
+    _shingle_digests,
     _staged,
     _staging_dir,
     register,
@@ -123,7 +122,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", F.array_distinct(tokens_col("text")).alias("words")
+        "doc_id", F.array_distinct(TS.tokens_col("text")).alias("words")
     )
     a, b = d.alias("a"), d.alias("b")
     inter = F.size(F.array_intersect(F.col("a.words"), F.col("b.words")))
@@ -164,7 +163,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex digit >= '8' contributes +1 to the bit, else -1)."""
     d = read_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens_col("text"))).alias("w")
+        "doc_id", F.explode(F.array_distinct(TS.tokens_col("text"))).alias("w")
     ).withColumn("h", F.md5("w"))
     bits = [
         F.when(
@@ -258,7 +257,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 4.3 vs 3.4 s warm at sf0.1)."""
     d = read_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens_col("text"))).alias("w")
+        "doc_id", F.explode(F.array_distinct(TS.tokens_col("text"))).alias("w")
     ).select(
         "doc_id",
         F.conv(F.substring(F.md5("w"), 1, _SH_NIBBLES), 16, 10).cast("long").alias("hn"),
@@ -1457,7 +1456,7 @@ def cross_doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "          c -> md5(concat_ws(' ', slice(ws, c * 8 + 1, 8))))"
     )
     chunks = d.select(
-        "doc_id", tokens_col("text").alias("ws")
+        "doc_id", TS.tokens_col("text").alias("ws")
     ).select("doc_id", F.explode(chunk_arr).alias("chunk_hash"))
     df = chunks.groupBy("chunk_hash").agg(
         F.countDistinct("doc_id").alias("doc_freq")
@@ -1505,7 +1504,7 @@ def _substr_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "             least(8, size(ws) - c * 8) AS n_tok))"
         )
         chunks = (
-            d.select("doc_id", tokens_col("text").alias("ws"))
+            d.select("doc_id", TS.tokens_col("text").alias("ws"))
             .select("doc_id", F.explode(chunk_arr).alias("c"))
             .select(
                 "doc_id",

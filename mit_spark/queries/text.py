@@ -10,7 +10,6 @@ from pyspark.sql.window import Window
 
 from mit_spark.functions import textstats as TS
 from mit_spark.functions.textclean import clean_text_col, clean_text_sql
-from mit_spark.functions.textstats import tokens_col
 from mit_spark.queries.core import _doc_words, register
 from mit_spark.sources.docs_source import read_table
 
@@ -287,7 +286,7 @@ def gopher_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's repetition — no corpus-global hot key."""
     d = read_table(spark, sf_dir, "documents").select(
         "doc_id",
-        tokens_col("text").alias("ws"),
+        TS.tokens_col("text").alias("ws"),
         F.length(F.trim("text")).cast("long").alias("total"),
     )
     toks = d.select("doc_id", F.posexplode("ws").alias("i", "w"))
@@ -407,7 +406,7 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoffs on a Wikipedia sample — the cutoff is a MODEL PARAMETER, not
     part of the scored data path."""
     d = read_table(spark, sf_dir, "documents").select(
-        "doc_id", tokens_col("text").alias("toks")
+        "doc_id", TS.tokens_col("text").alias("toks")
     )
     tok = d.select("doc_id", F.explode("toks").alias("t"))
     lm = tok.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -520,7 +519,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram_arr = F.expr(
         "transform(slice(ws, 1, size(ws) - 1), (w, i) -> concat(w, ' ', ws[i + 1]))"
     )
-    grams = d.select("doc_id", "lang", tokens_col("text").alias("ws")).select(
+    grams = d.select("doc_id", "lang", TS.tokens_col("text").alias("ws")).select(
         "doc_id", "lang", F.explode(gram_arr).alias("gram")
     )
     bkt = grams.select(
@@ -622,7 +621,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.expr(f"regexp_extract_all(text, '{_BPE_PAT}', 0)"))
         .cast("long")
         .alias("n_bpe_tokens"),
-        F.size(tokens_col("text")).cast("long").alias("n_ws_tokens"),
+        F.size(TS.tokens_col("text")).cast("long").alias("n_ws_tokens"),
     ).orderBy("doc_id")
 
 
@@ -645,7 +644,7 @@ def rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     0*131 + k0 = k0)."""
     d = read_table(spark, sf_dir, "documents")
     keys = F.transform(
-        tokens_col("text"),
+        TS.tokens_col("text"),
         lambda w: (F.ascii(w) * 31 + F.length(w) * 7).cast("long"),
     )
     fp = F.aggregate(keys, F.lit(0).cast("long"), lambda acc, k: (acc * 131 + k) % 1000000007)
@@ -811,7 +810,7 @@ def language_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (langs x 8 rows) is broadcast, so classification is map-side —
     no shuffle of the corpus beyond the per-doc word count."""
     d = read_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens_col("text")).alias("word"))
+    tok = d.select("doc_id", "lang", F.explode(TS.tokens_col("text")).alias("word"))
 
     seed = tok.filter(F.col("doc_id") % 5 == 0)
     lw = seed.groupBy("lang", "word").agg(F.count(F.lit(1)).alias("cnt_lw"))
@@ -979,7 +978,7 @@ def token_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the per-group sort cost is bounded by group size, and the
     approx sketch is the documented swap-in when exactness can yield."""
     d = read_table(spark, sf_dir, "documents").select(
-        "lang", F.size(tokens_col("text")).alias("n_tok")
+        "lang", F.size(TS.tokens_col("text")).alias("n_tok")
     )
     return (
         d.groupBy("lang")
@@ -1029,7 +1028,7 @@ def quality_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines, so the boolean is engine-deterministic."""
     d = read_table(spark, sf_dir, "documents")
     words = d.select(
-        "doc_id", F.explode(tokens_col("text")).alias("word")
+        "doc_id", F.explode(TS.tokens_col("text")).alias("word")
     ).filter(F.col("word") != "")
     wc = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c"))
     per = wc.groupBy("doc_id").agg(
@@ -1084,7 +1083,7 @@ def corpus_topk_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram_arr = F.expr(
         "transform(slice(ws, 1, size(ws) - 1), (w, i) -> concat(w, ' ', ws[i + 1]))"
     )
-    grams = d.select("doc_id", tokens_col("text").alias("ws")).select(
+    grams = d.select("doc_id", TS.tokens_col("text").alias("ws")).select(
         "doc_id", F.explode(gram_arr).alias("gram")
     )
     return (
@@ -1134,7 +1133,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on the pair-census table (bounded by vocab x max word length),
     not on anything corpus-sized. All-integer output, bit-exact."""
     d = read_table(spark, sf_dir, "documents")
-    words = d.select(F.explode(tokens_col("text")).alias("w")).filter(
+    words = d.select(F.explode(TS.tokens_col("text")).alias("w")).filter(
         F.length("w") >= 2
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1196,7 +1195,7 @@ def tfidf_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops)."""
     d = read_table(spark, sf_dir, "documents")
     n_docs = d.count()
-    tok = d.select("doc_id", F.explode(tokens_col("text")).alias("w"))
+    tok = d.select("doc_id", F.explode(TS.tokens_col("text")).alias("w"))
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).cast("long").alias("tf"))
     df = tf.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("df"))
     s = tf.join(df, "w").select(
@@ -1270,7 +1269,7 @@ def kgram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(slice(ws, 1, greatest(size(ws) - 2, 0)),"
         " (w, i) -> concat(w, ' ', ws[i + 1], ' ', ws[i + 2]))"
     )
-    grams = d.select("doc_id", tokens_col("text").alias("ws")).select(
+    grams = d.select("doc_id", TS.tokens_col("text").alias("ws")).select(
         "doc_id", F.explode(F.array_distinct(gram_arr)).alias("gram")
     )
     owner = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
@@ -1336,7 +1335,7 @@ def rare_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every doc appears (split yields >= 1 token, even for empty text —
     both engines)."""
     d = read_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens_col("text")).alias("w"))
+    tok = d.select("doc_id", F.explode(TS.tokens_col("text")).alias("w"))
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     per_doc = (
         tok.join(freq, "w")
