@@ -1,7 +1,6 @@
 """Registry timer — runs every registry entry except ``flagship_extract`` at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) in one session on
-`make_session`'s default master (local[$SPARK_GRAFT_CPUS], else every CPU
-this process may run on) and prints two JSON lines:
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
+in one session and prints two JSON lines:
 
     line 1: {"metric": "bench_suite_wall_sec", "value": N, "unit": "sec",
              "entries": N, "errors": N, "sf": ..., "cpus": N,
@@ -12,6 +11,8 @@ Each entry is timed best-of-2 (the first hit pays operator JIT and a cold
 page cache); its plan is forced with the noop sink (no collect, no disk
 cost). An entry that raises is recorded in "errors" and the suite goes on.
 The flagship ``extract()`` is measured and checked by ``perfbench/run.py``.
+Without $SPARK_GRAFT_CPUS the session has one slot per CPU this process may
+run on (``make_session``'s default), and "cpus" reports it.
 """
 
 from __future__ import annotations

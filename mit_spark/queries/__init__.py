@@ -1,7 +1,7 @@
 """Query registry — every SURVEY.md §2 operator family expressed as a
-(spark_builder, duckdb_oracle_sql) pair over the driver's testdata tables.
+(spark_builder, duckdb_oracle_sql) pair over the testdata tables.
 
-Registry contract (driver __spark_entry__):
+Registry contract (`__spark_entry__`):
   * builder(spark, sf_dir) -> DataFrame, all computed columns aliased;
   * oracle_sql: equivalent ANSI SQL for DuckDB over pre-registered views
     (region nation customer supplier part orders lineitem events documents

@@ -53,7 +53,7 @@ def _staging_dir(sf_dir: str, tag: str, version: str) -> str:
 
 def _staged(base: str, build) -> None:
     """Run ``build()`` exactly once per staging dir, safe across concurrent
-    processes sharing the per-user staging root (e.g. the driver gate and a
+    processes sharing the per-user staging root (e.g. the oracle tests and a
     bench run): an exclusive fcntl lock on a SIBLING lockfile serializes the
     marker-check/build, so a second process either sees the finished marker
     or blocks until the first finishes — it can never read a half-built dir
