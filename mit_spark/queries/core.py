@@ -99,13 +99,6 @@ _MH_LANES = 6  # minhash lanes: 5-hex-char slices of ONE md5 per shingle
 _MH_BANDS = ((0, 1), (2, 3), (4, 5))  # LSH bands as groups of lanes
 
 
-def _mh_lane(digest, j: int) -> Column:
-    """Minhash lane j of a shingle's md5 digest: its j-th 5-hex-char slice.
-    Lane width and count are load-bearing against the SQL oracles'
-    `min(d[5j+1:5j+5])`."""
-    return F.substring(digest, 5 * j + 1, 5)
-
-
 def _band_key(lanes) -> Column:
     """An LSH band key: the concatenation of its lanes' minima."""
     return F.concat(*[F.col(f"mh{j}") for j in lanes])
@@ -123,7 +116,7 @@ def _shingles(corpus: DataFrame, *keys: str) -> DataFrame:
     while window/agg expressions are codegen'd — 6x faster at sf0.1 for
     identical output."""
     tok = corpus.select("doc_id", *keys, F.posexplode("words").alias("pos", "w"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
+    win = Window.partitionBy("doc_id", *keys).orderBy("pos")
     w1, w2 = F.lead("w", 1).over(win), F.lead("w", 2).over(win)
     sh = tok.select(
         "doc_id", *keys, F.concat_ws(" ", "w", w1, w2).alias("shingle"), w2.alias("w2")
@@ -131,16 +124,22 @@ def _shingles(corpus: DataFrame, *keys: str) -> DataFrame:
     return sh.filter(F.col("w2").isNotNull()).drop("w2")
 
 
-def _shingle_digests(corpus: DataFrame) -> DataFrame:
-    """(doc_id, words) -> (doc_id, d): one md5 per 3-word shingle."""
-    return _shingles(corpus).select("doc_id", F.md5("shingle").alias("d"))
+def _shingle_digests(corpus: DataFrame, *keys: str) -> DataFrame:
+    """(doc_id, *keys, words) -> (doc_id, *keys, d): one md5 per 3-word
+    shingle."""
+    return _shingles(corpus, *keys).select("doc_id", *keys, F.md5("shingle").alias("d"))
 
 
-def _minhash_signature(dg: DataFrame) -> DataFrame:
-    """(doc_id, d) shingle digests -> (doc_id, mh0..mh5): each lane's
-    minimum over the doc's shingles, one hash-aggregate."""
-    return dg.groupBy("doc_id").agg(
-        *[F.min(_mh_lane("d", j)).alias(f"mh{j}") for j in range(_MH_LANES)]
+def _minhash_signature(dg: DataFrame, *keys: str) -> DataFrame:
+    """(doc_id, *keys, d) shingle digests -> (doc_id, *keys, ds, mh0..mh5):
+    the doc's distinct digest set and each lane's minimum, one
+    hash-aggregate. Lane j is the j-th 5-hex-char slice of each digest —
+    width and count are load-bearing against the SQL oracles'
+    `min(d[5j+1:5j+5])`. A consumer that never reads `ds` does not pay for
+    it: Catalyst prunes unreferenced aggregates."""
+    return dg.groupBy("doc_id", *keys).agg(
+        F.collect_set("d").alias("ds"),
+        *[F.min(F.substring("d", 5 * j + 1, 5)).alias(f"mh{j}") for j in range(_MH_LANES)],
     )
 
 
@@ -169,32 +168,9 @@ def _bucket_pairs(bands: DataFrame, *keys: str) -> DataFrame:
 
 
 def _shingle_bands(docs: DataFrame, extra: tuple = ()) -> DataFrame:
-    """The minhash signature formed ARRAY-SIDE, for the LSH consumers that
-    verify inline on the band join (incremental_dedup,
-    corpus_curation_report): 3-gram md5 shingle digests in one codegen
-    projection (slice over sequence, no posexplode, no per-doc window
-    sort), the same lanes and bands as `_minhash_signature`, and the
-    distinct shingle set riding ALONG the band explode so the exact-Jaccard
-    verify downstream is an inline filter on the band join. Input needs
-    (doc_id, words, *extra); output is (doc_id, *extra, ds, band)."""
-    n_words = F.size("words")
-    digests = F.when(
-        n_words >= 3,  # sequence(1, n-2) would DESCEND for n < 3
-        F.transform(
-            F.sequence(F.lit(1), n_words - 2),
-            lambda i: F.md5(F.concat_ws(" ", F.slice("words", i, 3))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    docs_dg = docs.select("doc_id", *extra, digests.alias("dg")).filter(
-        F.size("dg") > 0
-    )
-    sigs = docs_dg.select(
-        "doc_id",
-        *extra,
-        F.array_distinct("dg").alias("ds"),
-        *[
-            F.array_min(F.transform("dg", lambda x: _mh_lane(x, j))).alias(f"mh{j}")
-            for j in range(_MH_LANES)
-        ],
-    )
+    """(doc_id, *extra, words) -> (doc_id, *extra, ds, band): the signature's
+    bands with the distinct shingle set riding ALONG the band explode, so
+    an exact-Jaccard verify downstream is an inline filter on the band join
+    (incremental_dedup, corpus_curation_report)."""
+    sigs = _minhash_signature(_shingle_digests(docs, *extra), *extra)
     return sigs.select("doc_id", *extra, "ds", _lsh_bands())

@@ -1373,16 +1373,13 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_docs = batch.withColumn("is_batch", F.lit(1)).unionByName(
         d.withColumn("is_batch", F.lit(0))
     )
-    # the shared band builder (_shingle_bands) keeps the shingle digests
-    # and minhash lanes in one codegen projection (VERDICT r3 #5; the
-    # cross_doc_chunk_dedup lesson), and the distinct shingle set rides
-    # ALONG the band explode into the band join, so the exact-Jaccard
-    # verify is an inline FILTER on the band join itself: the r4 shape
-    # re-derived the sets in a second corpus-wide digest pass and
-    # re-joined them twice (the 2.9 -> 4.1 s bench regression); this
+    # the shared band builder (_shingle_bands) carries the distinct
+    # shingle set ALONG the band explode into the band join, so the
+    # exact-Jaccard verify is an inline FILTER on the band join itself:
+    # the r4 shape re-derived the sets in a second corpus-wide digest pass
+    # and re-joined them twice (the 2.9 -> 4.1 s bench regression); this
     # shape's one trade is shuffling each set bands-per-sig (3) times
-    # instead of once — a small constant — and the band join is the ONLY
-    # corpus-wide shuffle left
+    # instead of once — a small constant
     bands = _shingle_bands(all_docs, extra=("is_batch",))
     a = bands.filter(F.col("is_batch") == 1).select(
         F.col("doc_id").alias("bid"), "band", F.col("ds").alias("ds_x")
