@@ -12,6 +12,7 @@ Both run warmup + best-of-2; the comparison metric is media-spans/sec
 corpora so raw spans/sec would not be apples-to-apples).
 
 Run:  python BENCH/skew.py [n_skewed_docs] [cpus]
+(without cpus: make_session's default, the CPUs this process may run on)
 """
 
 from __future__ import annotations
@@ -79,8 +80,8 @@ def main() -> int:
     from mit_spark.session import make_session
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
-    cpus = sys.argv[2] if len(sys.argv) > 2 else "16"
-    spark = make_session(master=f"local[{cpus}]", app_name="mit-skew")
+    master = f"local[{sys.argv[2]}]" if len(sys.argv) > 2 else None
+    spark = make_session(master=master, app_name="mit-skew")
     spark.sparkContext.setLogLevel("ERROR")
     cfg = PipelineConfig(detector=DetectorOptions(detect_size=512))
 
@@ -90,7 +91,7 @@ def main() -> int:
     res = {
         "skewed": measure(spark, build(spark, skewed_numbers), cfg),
         "uniform": measure(spark, build(spark, uniform_numbers), cfg),
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     res["media_rate_ratio_skewed_vs_uniform"] = round(
         res["skewed"]["media_per_sec"] / res["uniform"]["media_per_sec"], 3

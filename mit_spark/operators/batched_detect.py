@@ -50,6 +50,7 @@ from mit_spark.operators.detector import (
     detect,
     detect_post,
     detect_pre,
+    effective_pre,
     infer_post,
     infer_pre,
 )
@@ -58,20 +59,6 @@ from mit_spark.operators.ocr import decode_quads
 from mit_spark.operators.ordering import SPAN_STRIDE, reading_order, span_order
 from mit_spark.operators.rearrange import should_rearrange
 from mit_spark.synth import render_media
-
-
-def effective_pre(pre: PreprocessorOptions) -> PreprocessorOptions:
-    """The preprocessor flags the (always-firing) auto-rotate rerun actually
-    runs with — auto_rotate stripped, everything else kept
-    (detectors/mod.rs:59-67)."""
-    if not pre.auto_rotate:
-        return pre
-    return PreprocessorOptions(
-        invert=pre.invert,
-        gamma_correct=pre.gamma_correct,
-        rotate=pre.rotate,
-        auto_rotate=False,
-    )
 
 
 def _error_row(span: tuple, e: Exception) -> list[tuple]:

@@ -16,6 +16,8 @@ oracle (mit_spark.oracle) imports the exact same code.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 
 from mit_spark.config import DetectorOptions, PreprocessorOptions
@@ -137,6 +139,13 @@ def detect_post(
     return quads, mask
 
 
+def effective_pre(pre: PreprocessorOptions) -> PreprocessorOptions:
+    """The preprocessor flags the (always-firing) auto-rotate rerun actually
+    runs with — auto_rotate stripped, everything else kept
+    (detectors/mod.rs:59-67)."""
+    return replace(pre, auto_rotate=False)
+
+
 def detect(
     img: np.ndarray,
     forward: ForwardFn,
@@ -156,21 +165,9 @@ def detect(
         # common.rs:40-44: `textlines.iter().map(|v| ...).count()` counts ALL
         # elements (map does not filter), so `len*2 >= len` is always true and
         # the empty case is true too -> the rerun ALWAYS fires exactly once,
-        # with auto_rotate stripped (detectors/mod.rs:59-67). Preserved as-is.
-        rerun = True
-        if rerun:
-            return detect(
-                img,
-                forward,
-                opts,
-                PreprocessorOptions(
-                    invert=pre.invert,
-                    gamma_correct=pre.gamma_correct,
-                    rotate=pre.rotate,
-                    auto_rotate=False,
-                ),
-                infer_fn,
-            )
+        # with auto_rotate stripped (detectors/mod.rs:59-67). Preserved as-is:
+        # the first pass above is discarded.
+        return detect(img, forward, opts, effective_pre(pre), infer_fn)
 
     return detect_post(quads, mask, add_border, pre, img_h)
 

@@ -5,6 +5,9 @@ helpers, the md5-prefix SQL idiom, the documents' word split, the
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
 from typing import Callable
 
@@ -26,17 +29,27 @@ def register(name: str, sql: str):
     return deco
 
 
-# idempotent staging (shared by the streaming entries and the dedup pair
-# cache): a deterministic per-(sf_dir, tag) scratch dir behind a _STAGED
-# marker. Scoped per-user under a mode-0700 base (multi-user hosts must not
-# share or collide on staged state), and keyed by the pipeline spec version
-# so a staged dir from an older build can never satisfy a newer marker.
-def _staging_dir(sf_dir: str, tag: str, version: str) -> str:
-    import getpass
-    import hashlib as _hl
-    import tempfile
+# idempotent staging (shared by the streaming entries and the staged
+# tables below): a deterministic per-(sf_dir, tag) scratch dir behind a
+# _STAGED marker. Scoped per-user under a mode-0700 base (multi-user hosts
+# must not share or collide on staged state), and keyed by a digest of the
+# package's own source, so a staged dir is reused only by the build that
+# wrote it: an edit to any builder (or to anything it calls) moves every key.
+@functools.cache
+def _code_digest(pkg_dir: str = os.path.dirname(os.path.dirname(__file__))) -> str:
+    """md5 over every ``.py`` file under ``pkg_dir`` (relative path and
+    bytes, in sorted relative-path order); computed once per process."""
+    h = hashlib.md5()
+    for path in sorted(glob.glob("**/*.py", root_dir=pkg_dir, recursive=True)):
+        h.update(path.encode() + b"\0")
+        with open(os.path.join(pkg_dir, path), "rb") as fh:
+            h.update(fh.read() + b"\0")
+    return h.hexdigest()
 
-    from mit_spark.config import PIPELINE_SPEC_VERSION
+
+def _staging_dir(sf_dir: str, tag: str) -> str:
+    import getpass
+    import tempfile
 
     try:
         user = getpass.getuser()
@@ -45,8 +58,8 @@ def _staging_dir(sf_dir: str, tag: str, version: str) -> str:
     root = os.path.join(tempfile.gettempdir(), f"mit_stage_{user}")
     os.makedirs(root, exist_ok=True)
     os.chmod(root, 0o700)
-    key = _hl.md5(
-        f"{os.path.abspath(sf_dir)}:{tag}:{version}:{PIPELINE_SPEC_VERSION}".encode()
+    key = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}:{tag}:{_code_digest()}".encode()
     ).hexdigest()[:12]
     return os.path.join(root, f"{tag}_{key}")
 
@@ -80,6 +93,17 @@ def _staged(base: str, build) -> None:
                 fh.write("ok")
         finally:
             fcntl.flock(lk, fcntl.LOCK_UN)
+
+
+def _staged_table(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()``'s frame written to parquet once per sf_dir and build
+    (behind ``_staged``), then read back; every call returns the read."""
+    base = _staging_dir(sf_dir, tag)
+    path = os.path.join(base, "table")
+    _staged(base, lambda: build().write.parquet(path))
+    return spark.read.parquet(path)
 
 
 def _h_sql(s: str) -> str:

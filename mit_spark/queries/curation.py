@@ -4,8 +4,6 @@ packing, and the cardinality, heavy-hitter and quantile sketches."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -14,8 +12,7 @@ from mit_spark.queries.core import (
     _doc_words,
     _shingle_bands,
     _shingles,
-    _staged,
-    _staging_dir,
+    _staged_table,
     register,
 )
 from mit_spark.queries.dedup import (
@@ -221,18 +218,12 @@ _QSK_QS = (50, 90, 99)  # evaluated quantiles (percent)
 
 def _staged_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_clusters' (doc_id, cluster_id) labels as a staged parquet
-    artifact: the iterative fixpoint runs at most once per sf_dir; every
-    downstream consumer (split_leakage_audit) reads the materialized
-    table — the same discipline as the kmeans labels staging."""
-    base = _staging_dir(sf_dir, "dedup_labels", "v1")
-    labels_path = os.path.join(base, "labels")
-    _staged(
-        base,
-        lambda: dedup_clusters(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(labels_path),
+    artifact: the iterative fixpoint runs at most once per sf_dir and
+    build; every downstream consumer (split_leakage_audit) reads the
+    materialized table — the same discipline as the kmeans labels staging."""
+    return _staged_table(
+        spark, sf_dir, "dedup_labels", lambda: dedup_clusters(spark, sf_dir)
     )
-    return spark.read.parquet(labels_path)
 
 
 def _split_leakage_sql() -> str:
@@ -284,13 +275,13 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit PROVES the cluster-aware split is safe rather than asserting
     it. Scale shape: pure composition of two staged artifacts — the
     verified-pairs parquet (the SAME staging dedup_clusters reads, built
-    at most once per sf_dir) and the staged cluster labels (the fixpoint
-    also runs at most once per sf_dir) — so the audit itself is two
-    pair-graph-sized joins plus counts, never a corpus-wide pass;
+    at most once per sf_dir and build) and the staged cluster labels (the
+    fixpoint also runs at most once per sf_dir and build) — so the audit
+    itself is two pair-graph-sized joins plus counts, never a corpus-wide pass;
     md5-split assignment is deterministic and coordination-free (any
     worker can re-derive any doc's side). Output is integer counts + one
     int/int division, bit-exact cross-engine."""
-    pairs, _ = _staged_pairs(spark, sf_dir)
+    pairs = _staged_pairs(spark, sf_dir)
     cl = _staged_cluster_labels(spark, sf_dir)
 
     def split_of(c: Column) -> Column:

@@ -4,13 +4,11 @@ keyword, phrase and hybrid retrieval."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from mit_spark.functions.textstats import tokens_col
-from mit_spark.queries.core import _doc_words, _shingle_digests, _staged, _staging_dir, register
+from mit_spark.queries.core import _doc_words, _shingle_digests, _staged_table, register
 from mit_spark.sources.docs_source import read_table
 
 
@@ -364,23 +362,17 @@ def _exact_panel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_exact_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact ground-truth top-k for the recall panel as a staged parquet
-    artifact — built at most once per sf_dir (the brute-force pass folds an
-    interpreted L2 over |panel| x n pairs, the dominant cost of every
-    recall eval) and read by all three consumers (`ann_recall_eval`,
-    `ann_multiprobe_recall`, `embedding_quant_recall`). Same staging
-    discipline as the dedup pair list and the kmeans labels: at 100 TB the
-    ground-truth panel is an expensive shared artifact you materialize
-    once, not a subquery each eval recomputes. The oracles are unchanged —
-    they re-derive the exact side from the raw table in SQL."""
-    base = _staging_dir(sf_dir, "exact_panel", "v1")
-    path = os.path.join(base, "topk")
-    _staged(
-        base,
-        lambda: _exact_panel_topk(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(path),
+    artifact — built at most once per sf_dir and build (the brute-force
+    pass folds an interpreted L2 over |panel| x n pairs, the dominant cost
+    of every recall eval) and read by all three consumers
+    (`ann_recall_eval`, `ann_multiprobe_recall`, `embedding_quant_recall`).
+    Same staging discipline as the dedup pair list and the kmeans labels:
+    at 100 TB the ground-truth panel is an expensive shared artifact you
+    materialize once, not a subquery each eval recomputes. The oracles are
+    unchanged — they re-derive the exact side from the raw table in SQL."""
+    return _staged_table(
+        spark, sf_dir, "exact_panel", lambda: _exact_panel_topk(spark, sf_dir)
     )
-    return spark.read.parquet(path)
 
 
 def _recall_agg(exact: DataFrame, approx: DataFrame) -> DataFrame:
@@ -1245,18 +1237,12 @@ def _kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is a materialized upstream table' shape every composing
     consumer (mixture weights, outlier prune, balanced sampling) would read
     at production scale instead of re-running Lloyd's per query. Built once
-    per sf_dir behind the _STAGED marker (same discipline as the dedup pair
-    cache); bit-identical to a live embedding_kmeans run by construction."""
-    base = _staging_dir(sf_dir, "kmeans_labels", "v1")
-    path = os.path.join(base, "labels")
-    _staged(
-        base,
-        lambda: embedding_kmeans(spark, sf_dir)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(path),
+    per sf_dir and build behind the _STAGED marker (same discipline as the
+    dedup pair cache); bit-identical to a live embedding_kmeans run by
+    construction."""
+    return _staged_table(
+        spark, sf_dir, "kmeans_labels", lambda: embedding_kmeans(spark, sf_dir).coalesce(4)
     )
-    return spark.read.parquet(path)
 
 
 def _semantic_outlier_sql() -> str:

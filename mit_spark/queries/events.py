@@ -341,7 +341,7 @@ def streaming_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped doc, or a missed detection all flip the hash.
 
     IDEMPOTENT builder: the staging dir is derived deterministically from
-    sf_dir (no mkdtemp; per-user, spec-versioned — see _staging_dir),
+    sf_dir and this build's code (no mkdtemp; per-user — see _staging_dir),
     arrival-file setup runs once behind a _STAGED marker, and re-invocations
     only re-drain the already-checkpointed stream (a no-op append) — calling
     the builder N times yields identical output and writes no new files
@@ -351,9 +351,7 @@ def streaming_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_spark.streaming.micro_batch import run_stream
 
     cfg = PipelineConfig(detector=DetectorOptions(detect_size=512))
-    # "v2" = generator/content version — bump if synth output changes so a
-    # stale staged dir from an older build can never satisfy the marker
-    base = _staging_dir(sf_dir, "stream", "v2")
+    base = _staging_dir(sf_dir, "stream")
     inp, out, ckp = f"{base}/in", f"{base}/out", f"{base}/ckp"
 
     def _build():
@@ -434,7 +432,7 @@ def _stage_arrival_files(spark: SparkSession, sf_dir: str, name: str, slices):
     arrival sequence. Returns (base, input_dir)."""
     import glob
 
-    base = _staging_dir(sf_dir, name, "v1")
+    base = _staging_dir(sf_dir, name)
     inp = f"{base}/in"
 
     def _build() -> None:
@@ -523,13 +521,13 @@ def streaming_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_events(sf_dir: str) -> str:
     """The events table staged as a directory of parquet files — the file
-    stream source requires a DIRECTORY; built once per sf_dir behind a
-    marker (same idempotent pattern as streaming_drain) and shared by
-    every streaming entry that reads the event stream."""
+    stream source requires a DIRECTORY; built once per sf_dir and build
+    behind a marker (same idempotent pattern as streaming_drain) and shared
+    by every streaming entry that reads the event stream."""
     import shutil
 
     src = f"{sf_dir}/events.parquet"
-    base = _staging_dir(sf_dir, "events", "v1")
+    base = _staging_dir(sf_dir, "events")
 
     def _build():
         if os.path.isdir(src):

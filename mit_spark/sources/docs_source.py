@@ -19,13 +19,12 @@ from mit_spark.schema import DOCS
 
 
 def load_doc_ids(spark: SparkSession, sf_dir: str, limit: int | None = None) -> DataFrame:
-    ids = (
-        read_table(spark, sf_dir, "documents")
-        .select(F.format_string("doc-%08d", F.col("doc_id")).alias("doc_id"))
-    )
+    """The documents' ids as "doc-%08d" strings; ``limit`` keeps the
+    smallest ``limit`` ids, whatever the file and partition order."""
+    ids = read_table(spark, sf_dir, "documents").select("doc_id")
     if limit:
-        ids = ids.limit(limit)
-    return ids
+        ids = ids.orderBy("doc_id").limit(limit)
+    return ids.select(F.format_string("doc-%08d", F.col("doc_id")).alias("doc_id"))
 
 
 def load_docs(
@@ -41,10 +40,9 @@ def load_docs(
     knob): copy r gets doc_ids "doc<r>-%08d", which hash to fresh span
     layouts through the same generator.
 
-    ``max_doc_no`` keeps doc_ids below "doc-%08d" % max_doc_no — a
-    DETERMINISTIC slice (unlike ``limit`` on an unordered frame, whose row
-    choice depends on file/partition order); the predicate is applied to the
-    ids scan, before generation, so pruning reaches the parquet read."""
+    ``max_doc_no`` keeps doc_ids below "doc-%08d" % max_doc_no; the
+    predicate is applied to the ids scan, before generation, so pruning
+    reaches the parquet read."""
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd

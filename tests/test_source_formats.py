@@ -78,3 +78,20 @@ def test_csv_needs_and_honors_schema(spark, tmp_path):
     assert _rows(back.select("doc_id", "n_chars")) == _rows(
         docs.select("doc_id", "n_chars")
     )
+
+
+def test_limit_takes_the_smallest_doc_ids(spark, tmp_path):
+    """``load_doc_ids(limit=n)`` keeps the n smallest ids of a multi-file
+    source, not the first rows of whichever file Spark happens to read
+    first. The file with the large ids is the biggest one, so split packing
+    (largest file first) would put it ahead of the small ids."""
+    from mit_spark.sources.docs_source import load_doc_ids
+
+    src = str(tmp_path / "documents.parquet")
+    for lo, hi in ((900, 1100), (0, 10), (500, 520)):
+        spark.range(lo, hi).withColumnRenamed("id", "doc_id").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    got = [r.doc_id for r in load_doc_ids(spark, str(tmp_path), limit=15).collect()]
+    want = [f"doc-{i:08d}" for i in [*range(10), *range(500, 505)]]
+    assert sorted(got) == want

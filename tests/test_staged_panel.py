@@ -3,7 +3,8 @@ artifact `_staged_exact_panel` serves to every recall eval must be row-equal
 to the live brute-force pass `_exact_panel_topk` it materializes — staging
 may never change WHAT the evals compare against, only how often it is paid.
 Also pins the idempotence contract: a second call must be a pure read (the
-_STAGED marker short-circuits the build)."""
+_STAGED marker short-circuits the build), and only within one build of the
+code: an edit to the package moves the staging key and builds again."""
 
 import os
 
@@ -23,9 +24,48 @@ def test_staged_panel_equals_live(spark):
     assert len(staged) > 0
 
     # second call reads the marker-complete dir without rebuilding
-    base = _staging_dir(SF_DIR, "exact_panel", "v1")
+    base = _staging_dir(SF_DIR, "exact_panel")
     marker = os.path.join(base, "_STAGED")
     mtime = os.path.getmtime(marker)
     again = _rows(_staged_exact_panel(spark, SF_DIR))
     assert again == staged
     assert os.path.getmtime(marker) == mtime
+
+
+def test_a_code_edit_moves_the_staging_key_and_builds_again(spark, tmp_path, monkeypatch):
+    import shutil
+    import tempfile
+
+    import mit_spark
+    from mit_spark.queries import core
+
+    # the digest sees a one-byte edit anywhere in the package, and only that
+    copies = [str(tmp_path / name) for name in ("same", "edited")]
+    for copy in copies:
+        shutil.copytree(
+            os.path.dirname(mit_spark.__file__), copy,
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+    with open(os.path.join(copies[1], "config.py"), "ab") as fh:
+        fh.write(b"#")
+    assert core._code_digest(copies[0]) == core._code_digest()
+    edited = core._code_digest(copies[1])
+    assert edited != core._code_digest()
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    sf_dir = str(tmp_path / "sf")
+    before = core._staging_dir(sf_dir, "probe")
+    for _ in range(2):
+        assert core._staged_table(spark, sf_dir, "probe", build).count() == 3
+    assert len(builds) == 1
+
+    monkeypatch.setattr(core, "_code_digest", lambda: edited)
+    assert core._staging_dir(sf_dir, "probe") != before
+    assert core._staged_table(spark, sf_dir, "probe", build).count() == 3
+    assert len(builds) == 2
