@@ -30,7 +30,7 @@ def synthetic_forward(batch: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
     Ink = every channel within [INK_LO, INK_HI] (glyph BASE/MARK band after
     bilinear resampling); db prob P_INK on ink, P_BG elsewhere; mask head at
-    half resolution (2x2 mean pool), mirroring the real model's half-res
+    half resolution (2x2 mean pool, odd last row/column dropped), mirroring the real model's half-res
     mask that infer() upscales by 2 (dbnet/src/lib.rs:209-218).
     """
     b, h, w, _ = batch.shape
@@ -42,12 +42,28 @@ def synthetic_forward(batch: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     ink = (batch[..., 0] - lo) <= d
     ink &= (batch[..., 1] - lo) <= d
     ink &= (batch[..., 2] - lo) <= d
-    prob = np.where(ink, P_INK, P_BG).astype(np.float32)
+    # float32 scalars: np.where builds the head in float32 directly (the
+    # same values as a float64 where cast down, without the float64 temp)
+    prob = np.where(ink, np.float32(P_INK), np.float32(P_BG))
     # single-channel heads: the representer slices channel 0 (dbnet.rs:76)
     # and our mask consumer is optional — smaller Arrow/numpy traffic
     db = prob[:, None, :, :]
+    # 2x2 mean pool as pair sums over the four stride-2 views, in the order
+    # numpy's float32 reshape(b, h2, 2, w2, 2).mean(axis=(2, 4)) adds them:
+    # (top-left + top-right) + (bottom-left + bottom-right), then / 4. Bit
+    # for bit against that definition: tests/test_property_kernel_oracles.py
+    # test_synthetic_forward_equals_its_definition (tests/scalar_oracles.py
+    # synthetic_heads).
     h2, w2 = h // 2, w // 2
-    pooled = prob[:, : h2 * 2, : w2 * 2].reshape(b, h2, 2, w2, 2).mean(axis=(2, 4))
+    p = prob[:, : h2 * 2, : w2 * 2]
+    if w2 == 1:
+        # one output column: numpy merges the two pooled axes into one run of
+        # four and adds it left to right, so keep its mean for this shape
+        # (detector tensors are padded to multiples of 32 and never hit it)
+        pooled = p.reshape(b, h2, 2, w2, 2).mean(axis=(2, 4))
+    else:
+        pooled = (p[:, 0::2, 0::2] + p[:, 0::2, 1::2]) + (p[:, 1::2, 0::2] + p[:, 1::2, 1::2])
+        pooled /= np.float32(4)
     mask = pooled[:, None, :, :]
     return db, mask
 

@@ -25,6 +25,7 @@ BENCH/BASELINE.md):
 from __future__ import annotations
 
 import os
+import re
 import sys
 import zipimport
 
@@ -37,6 +38,16 @@ WORKER_ENV = {
 }
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _master_slots(master: str) -> int:
+    """Task slots a master names, for the shuffle-partition default:
+    ``local[N]`` and ``local[N,F]`` give N, bare ``local`` gives 1; ``local[*]``,
+    cluster masters (``spark://``, ``yarn``, ...) and other forms give 32."""
+    if master == "local":
+        return 1
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master)
+    return (int(m.group(1)) if m else 0) or 32
 
 
 def apply_worker_env() -> None:
@@ -84,7 +95,7 @@ def make_session(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
     )
-    n_shuffle = shuffle_partitions or int(master[master.find("[") + 1 : -1].replace("*", "0") or 0) or 32
+    n_shuffle = shuffle_partitions or _master_slots(master)
     builder = builder.config("spark.sql.shuffle.partitions", str(max(n_shuffle, 16)))
     for k, v in WORKER_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)

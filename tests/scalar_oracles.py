@@ -14,6 +14,9 @@ array kernel in ``mit_spark.operators`` must reproduce bit for bit:
                           (ocr.decode_quad)
   * fill_polys_mask       paddle's quad scanline fill, one python iteration
                           per row and edge (detector.fill_polys_mask)
+  * synthetic_heads       the stand-in forward's db and mask heads: a float64
+                          np.where cast to float32 and a reshape-mean 2x2
+                          pool (forward.synthetic_forward)
 
 They are slow on purpose: each is the definition, not an implementation.
 """
@@ -22,6 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from mit_spark.operators.forward import INK_HI, INK_LO, P_BG, P_INK
 from mit_spark.synth import ALPHABET, CELL, MARK
 
 
@@ -185,3 +189,16 @@ def fill_polys_mask(quads: list, width: int, height: int) -> np.ndarray:
                 hi = min(max(xs[k + 1], 0), width - 1)
                 mask[y, lo : hi + 1] = 255
     return mask
+
+
+def synthetic_heads(batch: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The stand-in forward's heads for a (B, H, W, 3) uint8 batch: ink is
+    every channel within [INK_LO, INK_HI]; db is P_INK on ink and P_BG
+    elsewhere, built in float64 and cast to float32; mask is the float32 2x2
+    mean of db over the even-sized top-left crop."""
+    b, h, w, _ = batch.shape
+    ink = ((batch >= INK_LO) & (batch <= INK_HI)).all(axis=-1)
+    prob = np.where(ink, P_INK, P_BG).astype(np.float32)
+    h2, w2 = h // 2, w // 2
+    pooled = prob[:, : h2 * 2, : w2 * 2].reshape(b, h2, 2, w2, 2).mean(axis=(2, 4))
+    return prob[:, None, :, :], pooled[:, None, :, :]

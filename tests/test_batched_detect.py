@@ -60,6 +60,16 @@ def test_rows_equal_and_fewer_forward_calls():
     assert calls["n"] >= -(-len(spans) // OPTS.max_batch_size)
 
 
+def test_rows_equal_the_oracle_at_the_cli_default_detect_size():
+    """main.py's default detect_size 2048: 2048-wide tensors through the
+    packed forward and DBNet post give the per-span oracle's rows."""
+    opts = DetectorOptions(detect_size=2048)
+    spans = _spans()[:8]
+    got = extract_media_spans_batched(spans, opts, PRE)
+    assert len(got) > len(spans) and all(text for _doc, _kind, text, *_ in got)
+    assert got == _per_span_rows(spans, opts, PRE)
+
+
 @pytest.mark.parametrize("fallback", [False, True])
 def test_rows_never_build_the_inpainting_mask(monkeypatch, fallback):
     """The rows carry quads only, so emit_mask=True must give the rows of

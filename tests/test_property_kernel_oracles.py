@@ -5,7 +5,9 @@ box_score_fast, offset_polygon_round (through unclip too) and decode_quad
 are hot per-candidate code in the detect/OCR path; each is written as a few
 array operations and must give exactly what the per-row / per-vertex /
 per-cell loop gives: np.array_equal and ==, never approx. row_extremes_hull
-must give convex_hull of all the row extremes it prefilters. Inputs: random
+must give convex_hull of all the row extremes it prefilters; the synthetic
+forward's db and mask heads must give the bytes of their where-and-mean
+definition. Inputs: random
 convex polygons (integer, float, out of frame, degenerate, both
 orientations), the hulls and unclipped boxes of real candidates from the
 synthetic detector, random quads over random and rendered rasters.
@@ -20,6 +22,9 @@ hyp = pytest.importorskip("hypothesis")
 from hypothesis import given, settings, strategies as st  # noqa: E402
 from scalar_oracles import box_score, decode_quad as decode_quad_def  # noqa: E402
 from scalar_oracles import offset_polygon_round as offset_def  # noqa: E402
+from scalar_oracles import synthetic_heads  # noqa: E402
+
+from mit_spark.config import DetectorOptions  # noqa: E402
 
 from mit_spark.operators.contours import (  # noqa: E402
     component_row_extremes,
@@ -28,6 +33,7 @@ from mit_spark.operators.contours import (  # noqa: E402
     row_extremes_hull,
 )
 from mit_spark.operators.dbnet_post import binarize, box_score_fast, get_mini_boxes, unclip  # noqa: E402
+from mit_spark.operators.forward import INK_HI, INK_LO, synthetic_forward  # noqa: E402
 from mit_spark.operators.geometry import Quad, convex_hull, polygon_area  # noqa: E402
 from mit_spark.operators.ocr import decode_quad  # noqa: E402
 from mit_spark.synth import BASE, BG, MARK, media_ref_for, render_media  # noqa: E402
@@ -114,18 +120,21 @@ def test_row_extremes_hull_equals_hull_of_all_extremes(h, w, seed, density):
         assert np.array_equal(row_extremes_hull(ext), convex_hull(ext.astype(np.float64)))
 
 
+def _real_tensors():
+    """The detector input tensors ((H, W, 3) uint8) of a few rendered pages
+    at detect_size 512."""
+    from mit_spark.operators.detector import infer_pre
+
+    opts = DetectorOptions(detect_size=512)
+    return [infer_pre(render_media(media_ref_for(f"doc-{k:08d}", 3)), opts)[0] for k in range(6)]
+
+
 def _real_candidates():
     """Hulls and unclip inputs of every candidate of the synthetic detector
     over a few rendered pages: the shapes boxes_from_bitmap really sees."""
-    from mit_spark.config import DetectorOptions
-    from mit_spark.operators.detector import infer_pre
-    from mit_spark.operators.forward import synthetic_forward
-
     opts = DetectorOptions(detect_size=512)
     out = []
-    for k in range(6):
-        img = render_media(media_ref_for(f"doc-{k:08d}", 3))
-        tensor, _ctx = infer_pre(img, opts)
+    for tensor in _real_tensors():
         db, _mask = synthetic_forward(tensor[None])
         pred = db[0, 0]
         for comp in component_row_extremes(binarize(pred, opts.text_threshold)):
@@ -144,6 +153,38 @@ def test_real_candidates_match_their_definitions():
             if perim > 0:
                 want = offset_def(box, polygon_area(box) * ratio / perim)
                 assert np.array_equal(unclip(box, ratio), want)
+
+
+def _ink_mixed_batch(seed: int, b: int, h: int, w: int) -> np.ndarray:
+    """Random uint8 pixels, about half of them drawn from one below to one
+    above the ink band in every channel, so both heads see ink, background
+    and the band's edges."""
+    rng = np.random.RandomState(seed)
+    batch = rng.randint(0, 256, size=(b, h, w, 3)).astype(np.uint8)
+    near = rng.rand(b, h, w) < 0.5
+    batch[near] = rng.randint(INK_LO - 1, INK_HI + 2, size=(int(near.sum()), 3))
+    return batch
+
+
+def _forward_batches():
+    for b in (1, 4):
+        for h, w in ((512, 512), (511, 385), (2, 2), (385, 2), (1, 3)):
+            yield f"random-b{b}-{h}x{w}", _ink_mixed_batch(b * 1000 + h + w, b, h, w)
+    yield "all-ink", np.full((2, 64, 96, 3), (INK_LO + INK_HI) // 2, dtype=np.uint8)
+    yield "no-ink", np.full((2, 64, 96, 3), INK_HI + 1, dtype=np.uint8)
+    yield "real-pages", np.stack(_real_tensors())
+
+
+def test_synthetic_forward_equals_its_definition():
+    """db and mask of synthetic_forward against scalar_oracles.synthetic_heads:
+    same shape, dtype and bytes. The golden digests cannot see a one-ulp
+    drift of the mask head: the media rows never read it and the detect
+    digest sees it only after uint8 quantisation."""
+    for name, batch in _forward_batches():
+        got, want = synthetic_forward(batch), synthetic_heads(batch)
+        for head, g, x in zip(("db", "mask"), got, want):
+            assert g.shape == x.shape and g.dtype == x.dtype == np.float32, (name, head)
+            assert g.tobytes() == x.tobytes(), (name, head)
 
 
 PALETTE = np.array([0, BASE, 100, MARK - 16, MARK - 15, MARK, MARK + 15, MARK + 16,

@@ -5,6 +5,8 @@ import sys
 import zipfile
 import zipimport
 
+import pytest
+
 from mit_spark.session import drop_zip_importers, make_session
 
 
@@ -49,3 +51,28 @@ def test_default_master_is_the_cpus_this_process_may_run_on(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert make_session()._options["spark.master"] == "local[3]"
+
+
+@pytest.mark.parametrize(
+    "master, partitions",
+    [
+        ("local", "16"),
+        ("local[4]", "16"),
+        ("local[40]", "40"),
+        ("local[40,3]", "40"),
+        ("local[4,2]", "16"),
+        ("local[*]", "32"),
+        ("spark://h:7077", "32"),
+        ("yarn", "32"),
+    ],
+)
+def test_shuffle_partitions_follow_the_master(monkeypatch, master, partitions):
+    """The shuffle-partition default is the master's local slot count,
+    floored at 16; bare local is one slot, and local[*] and cluster masters
+    fall back to 32. Every master form gets its session options."""
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
+    options = make_session(master=master)._options
+    assert options["spark.master"] == master
+    assert options["spark.sql.shuffle.partitions"] == partitions
