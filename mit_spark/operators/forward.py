@@ -30,8 +30,9 @@ def synthetic_forward(batch: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
     Ink = every channel within [INK_LO, INK_HI] (glyph BASE/MARK band after
     bilinear resampling); db prob P_INK on ink, P_BG elsewhere; mask head at
-    half resolution (2x2 mean pool, odd last row/column dropped), mirroring the real model's half-res
-    mask that infer() upscales by 2 (dbnet/src/lib.rs:209-218).
+    half resolution (2x2 mean pool, an odd last row or column dropped),
+    mirroring the real model's half-res mask that infer() upscales by 2
+    (dbnet/src/lib.rs:209-218).
     """
     b, h, w, _ = batch.shape
     # uint8 wraparound trick: x in [LO, HI] <=> (x - LO) <= (HI - LO) in u8;
@@ -42,8 +43,7 @@ def synthetic_forward(batch: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     ink = (batch[..., 0] - lo) <= d
     ink &= (batch[..., 1] - lo) <= d
     ink &= (batch[..., 2] - lo) <= d
-    # float32 scalars: np.where builds the head in float32 directly (the
-    # same values as a float64 where cast down, without the float64 temp)
+    # float32 scalars: the head is built in float32, with no float64 temp
     prob = np.where(ink, np.float32(P_INK), np.float32(P_BG))
     # single-channel heads: the representer slices channel 0 (dbnet.rs:76)
     # and our mask consumer is optional — smaller Arrow/numpy traffic

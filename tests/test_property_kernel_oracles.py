@@ -5,12 +5,12 @@ box_score_fast, offset_polygon_round (through unclip too) and decode_quad
 are hot per-candidate code in the detect/OCR path; each is written as a few
 array operations and must give exactly what the per-row / per-vertex /
 per-cell loop gives: np.array_equal and ==, never approx. row_extremes_hull
-must give convex_hull of all the row extremes it prefilters; the synthetic
-forward's db and mask heads must give the bytes of their where-and-mean
-definition. Inputs: random
-convex polygons (integer, float, out of frame, degenerate, both
-orientations), the hulls and unclipped boxes of real candidates from the
-synthetic detector, random quads over random and rendered rasters.
+must give convex_hull of all the row extremes it prefilters, and the
+synthetic forward's db and mask heads the bytes of their where-and-mean
+definition. Inputs: random convex polygons (integer, float, out of frame,
+degenerate, both orientations), the hulls and unclipped boxes of real
+candidates from the synthetic detector, random quads over random and
+rendered rasters, random and real detector batches.
 """
 
 from __future__ import annotations
