@@ -95,3 +95,41 @@ def test_channel_stats_matches_numpy(spark):
             assert s.mean == pytest.approx(round(float(flat.mean(axis=0)[ch]), 4))
             assert s.std == pytest.approx(round(float(flat.std(axis=0)[ch]), 4))
     media.unpersist()
+
+
+def _payload_digest(df) -> str:
+    """sha256 over (media_ref, content, meta) of every row, sorted by ref."""
+    import hashlib
+
+    h = hashlib.sha256()
+    rows = df.select("media_ref", "content", "meta").collect()
+    for r in sorted(rows, key=lambda r: r.media_ref):
+        content = bytes(r.content)
+        h.update(r.media_ref.encode())
+        h.update(len(content).to_bytes(8, "little") + content)
+        h.update(repr(tuple(r.meta)).encode())
+    return h.hexdigest()
+
+
+# Payload bytes and meta of each table over load_docs(sf0.001, max_doc_no=40):
+# the oracles see only aggregates, so these pin the bytes themselves.
+PAYLOAD_DIGESTS = {
+    "media_table": "d4a421a472e85ad07ddd67371dfffda4a56c98b38c43417f0a64abc4bf1d6bfa",
+    "media_table_png": "fdf7bf76f852464379950cc1b7885d6c69d55a4810d3614fb4c93899ff9a3efc",
+    "media_table_jpeg": "f28b95092aef289c070c202cb506b685b027d5753cfd9a3962ab803ccdc65019",
+    "video_table": "2ad08875c607e189542c1ab6da3b718a3b44609505ddd0fd72f06df741ea738c",
+    "audio_table": "dda6d48320a76041dc42b5557ba2639ec8c7343ce7b0edf8825974d42f73a864",
+}
+
+
+@pytest.mark.parametrize(
+    "table",
+    ["media_table", "media_table_png", "media_table_jpeg", "video_table", "audio_table"],
+)
+def test_golden_payload_digest(spark, table):
+    from mit_spark.operators import multimodal
+    from mit_spark.sources.docs_source import load_docs
+
+    docs = load_docs(spark, "/root/testdata/sf0.001", max_doc_no=40)
+    got = _payload_digest(getattr(multimodal, table)(spark, docs))
+    assert got == PAYLOAD_DIGESTS[table]
