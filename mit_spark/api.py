@@ -12,10 +12,7 @@ Differences, all deliberate:
   * the "none" detector returns an all-zero mask instead of the
     reference's dims-only empty Mask (which its own binding cannot
     convert to numpy — Array2::from_shape_vec fails on empty data,
-    py-bindings lib.rs:231-234);
-  * PyImage(path) decodes only this container's MITB format (PIL/cv2 are
-    absent — operators.multimodal.decode_external is the real-codec
-    seam); PyImage.from_numpy is complete.
+    py-bindings lib.rs:231-234).
 """
 
 from __future__ import annotations
@@ -70,11 +67,13 @@ class PyImage:
     """lib.rs:128-169 — RawImage wrapper: packed RGB u8 (H, W, 3)."""
 
     def __init__(self, path: str):
-        from mit_spark.operators.multimodal import decode_media
+        """Load a PNG, baseline JPEG or MITB file, as RawImage::new loads an
+        image file (crates/interface/src/image/mod.rs:155-177)."""
+        from mit_spark.operators.multimodal import decode_frames
 
         with open(path, "rb") as f:
-            _, frames = decode_media(f.read())
-        # decode_media yields read-only frombuffer views; the reference
+            frames = decode_frames(f.read())
+        # MITB decodes to read-only frombuffer views; the reference
         # binding's to_numpy gives a writable array (lib.rs:160-166), and
         # user scripts mutate it in place — explicit copy (ascontiguousarray
         # would return the same read-only view for contiguous input)

@@ -351,16 +351,17 @@ def _media_stats_sql(images_only: bool = False) -> str:
     )
 
 
-def _channel_summary(spark: SparkSession, sf_dir: str, table, **frames) -> DataFrame:
+def _channel_summary(spark: SparkSession, sf_dir: str, table) -> DataFrame:
     """Per-channel means of `channel_stats` over the media spans of the
     first 120 documents — a DETERMINISTIC doc_id range (not ``limit``,
     whose row choice depends on parquet file order). ``table`` builds the
-    payload table from the docs; ``frames`` picks the decoder."""
+    payload table from the docs; channel_stats reads its format from the
+    payload bytes."""
     from mit_spark.operators.multimodal import channel_stats
     from mit_spark.sources.docs_source import load_docs
 
     docs = load_docs(spark, sf_dir, max_doc_no=120)
-    stats = channel_stats(table(spark, docs), **frames)
+    stats = channel_stats(table(spark, docs))
     return (
         stats.groupBy("channel")
         .agg(
@@ -448,12 +449,12 @@ def media_channel_stats_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decoded through the decode_external seam — the format the reference
     itself reads (RawImage::new, crates/interface/src/image/mod.rs:155-177)
     — so a wrong zlib stream, filter reconstruction, or channel order flips
-    the same closed-form pixel-histogram oracle that gates the MITB path.
+    the same closed-form pixel-histogram oracle as media_channel_stats.
     Videos are excluded (PNG is single-image); the oracle is restricted to
     n_frames = 1 accordingly."""
-    from mit_spark.operators.multimodal import _frames_png, media_table_png
+    from mit_spark.operators.multimodal import media_table_png
 
-    return _channel_summary(spark, sf_dir, media_table_png, frames_of=_frames_png)
+    return _channel_summary(spark, sf_dir, media_table_png)
 
 
 def _media_stats_jpeg_sql() -> str:
@@ -514,9 +515,9 @@ def media_channel_stats_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     _media_stats_jpeg_sql), so this entry is VALUE-gated end-to-end; the
     codec's lossy/AC paths are golden-tested in tests/test_jpeg_codec.py.
     Videos and sub-MCU pages are excluded on both sides."""
-    from mit_spark.operators.multimodal import _frames_jpeg, media_table_jpeg
+    from mit_spark.operators.multimodal import media_table_jpeg
 
-    return _channel_summary(spark, sf_dir, media_table_jpeg, frames_of=_frames_jpeg)
+    return _channel_summary(spark, sf_dir, media_table_jpeg)
 
 
 def _video_stats_sql() -> str:
@@ -571,15 +572,15 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """media_channel_stats over REAL VIDEO payloads: video spans carry
     Motion-JPEG AVI files — a RIFF container whose every frame runs
     through the stdlib JPEG codec — decoded frame-by-frame inside the same
-    Arrow-batched stats plan (channel_stats with frames_of=_frames_avi).
+    Arrow-batched stats plan as the image entries (channel_stats).
     With this entry all three media modalities flow through REAL formats
     end-to-end under SQL value oracles: PNG/JPEG images, WAV audio,
     MJPEG-AVI video. Intraframe-only compression is also the scale story:
     frames decode independently, so a 2-hour video splits across
     executors without state."""
-    from mit_spark.operators.multimodal import _frames_avi, video_table
+    from mit_spark.operators.multimodal import video_table
 
-    return _channel_summary(spark, sf_dir, video_table, frames_of=_frames_avi)
+    return _channel_summary(spark, sf_dir, video_table)
 
 
 def _audio_stats_sql() -> str:

@@ -44,11 +44,16 @@ def test_session_provider_validation():
 
 def test_pyimage_roundtrip_and_mitb(tmp_path):
     from mit_spark.operators.multimodal import encode_media
+    from mit_spark.operators.png_codec import encode_png
 
     arr = render_media(media_ref_for("doc-00000003", 2))
     assert np.array_equal(PyImage.from_numpy(arr).to_numpy(), arr)
     path = tmp_path / "img.mitb"
     path.write_bytes(encode_media(arr, "image"))
+    assert np.array_equal(PyImage(str(path)).to_numpy(), arr)
+    # a PNG file on disk loads like RawImage::new (image/mod.rs:155-177)
+    path = tmp_path / "img.png"
+    path.write_bytes(encode_png(arr, filter_type=1))
     assert np.array_equal(PyImage(str(path)).to_numpy(), arr)
 
 

@@ -1,4 +1,4 @@
-"""Multimodal binary-column operators: codec roundtrip, decode stub,
+"""Multimodal binary-column operators: codec roundtrip, payload decoding,
 frame sampling, resize, channel stats — numpy golden equality plus the
 Spark plumbing at small scale."""
 
@@ -8,6 +8,7 @@ import pytest
 from mit_spark.operators.multimodal import (
     channel_stats,
     decode_external,
+    decode_frames,
     decode_media,
     encode_media,
     frame_sample,
@@ -36,6 +37,65 @@ def test_codec_roundtrip_video():
 def test_decode_external_is_stubbed():
     with pytest.raises(NotImplementedError):
         decode_external("webm", b"\x00\x01")
+
+
+def _want_frames(fmt, content):
+    """What each format's own decoder gives, as (F, H, W, C)."""
+    if fmt == "mitb":
+        return decode_media(content)[1]
+    if fmt in ("png", "jpeg"):
+        return decode_external(fmt, content)[None]
+    from mit_spark.operators.avi_codec import decode_avi_mjpg
+
+    frames = decode_avi_mjpg(content)
+    assert all(f.ndim == 2 for f in frames)  # gray tiles
+    return np.stack([np.repeat(f[:, :, None], 3, axis=2) for f in frames])
+
+
+def _first_refs():
+    from mit_spark.operators.multimodal import _is_video
+    from mit_spark.synth import gen_doc
+
+    refs = [
+        s["media_ref"]
+        for d in range(40)
+        for s in gen_doc(f"doc-{d:08d}")
+        if s["kind"] == "media"
+    ]
+    return (
+        next(r for r in refs if not _is_video(r)),
+        next(r for r in refs if _is_video(r)),
+    )
+
+
+@pytest.mark.parametrize(
+    "fmt, payload, video",
+    [
+        ("mitb", "synth_media_bytes", False),
+        ("mitb", "synth_media_bytes", True),
+        ("png", "_png_payload", False),
+        ("jpeg", "_jpeg_payload", False),
+        ("avi", "_avi_payload", True),
+        ("wav", "_wav_payload", False),
+        ("junk", None, False),
+    ],
+)
+def test_decode_frames_reads_every_table_payload(fmt, payload, video):
+    from mit_spark.operators import multimodal
+
+    ref = _first_refs()[video]
+    if payload is None:
+        content = b"\x00\x01not a payload" * 4
+    else:
+        content, meta = getattr(multimodal, payload)(ref)
+    if fmt in ("wav", "junk"):
+        with pytest.raises(ValueError):
+            decode_frames(content)
+        return
+    got = decode_frames(content)
+    np.testing.assert_array_equal(got, _want_frames(fmt, content))
+    assert got.dtype == np.uint8
+    assert got.shape == (meta["n_frames"], meta["height"], meta["width"], meta["channels"])
 
 
 def test_synth_media_deterministic():
@@ -79,9 +139,10 @@ def test_resize_media_dims(spark):
     media = _media_df(spark)
     out = resize_media(media, 40, 24).collect()
     for r in out:
-        _, frames = decode_media(bytes(r.content))
+        kind, frames = decode_media(bytes(r.content))
         assert frames.shape[1:3] == (24, 40)
         assert (r.meta.width, r.meta.height) == (40, 24)
+        assert r.meta.mime == f"x-mit/{kind}"
 
 
 def test_channel_stats_matches_numpy(spark):
