@@ -514,7 +514,7 @@ def media_channel_stats_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants. The payload construction keeps the decode bit-exact (see
     _media_stats_jpeg_sql), so this entry is VALUE-gated end-to-end; the
     codec's lossy/AC paths are golden-tested in tests/test_jpeg_codec.py.
-    Videos and sub-MCU pages are excluded on both sides."""
+    Videos are excluded on both sides."""
     from mit_spark.operators.multimodal import media_table_jpeg
 
     return _channel_summary(spark, sf_dir, media_table_jpeg)
