@@ -107,11 +107,11 @@ def test_synth_media_deterministic():
     assert frames.shape[1] == m1["height"] and frames.shape[2] == m1["width"]
 
 
-def _media_df(spark, n_docs=6):
+def _media_df(spark, n_docs=6, table=media_table):
     from mit_spark.sources.docs_source import load_docs
 
     docs = load_docs(spark, "/root/testdata/sf0.001", limit=n_docs)
-    return media_table(spark, docs)
+    return table(spark, docs)
 
 
 def test_media_table_schema_and_meta(spark):
@@ -172,8 +172,9 @@ def _payload_digest(df) -> str:
     return h.hexdigest()
 
 
-# Payload bytes and meta of each table over load_docs(sf0.001, max_doc_no=40):
-# the oracles see only aggregates, so these pin the bytes themselves.
+# Payload bytes and meta of each table over the first 40 documents of sf0.001
+# (94 media refs, 15 of them videos): the oracles see only aggregates, so
+# these pin the bytes themselves.
 PAYLOAD_DIGESTS = {
     "media_table": "d4a421a472e85ad07ddd67371dfffda4a56c98b38c43417f0a64abc4bf1d6bfa",
     "media_table_png": "fdf7bf76f852464379950cc1b7885d6c69d55a4810d3614fb4c93899ff9a3efc",
@@ -189,8 +190,6 @@ PAYLOAD_DIGESTS = {
 )
 def test_golden_payload_digest(spark, table):
     from mit_spark.operators import multimodal
-    from mit_spark.sources.docs_source import load_docs
 
-    docs = load_docs(spark, "/root/testdata/sf0.001", max_doc_no=40)
-    got = _payload_digest(getattr(multimodal, table)(spark, docs))
+    got = _payload_digest(_media_df(spark, 40, getattr(multimodal, table)))
     assert got == PAYLOAD_DIGESTS[table]
