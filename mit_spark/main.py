@@ -26,13 +26,20 @@ if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="sf dir with documents.parquet")
     p.add_argument("--output", required=True)
-    p.add_argument("--buckets", type=int, default=64)
+    p.add_argument("--buckets", type=_positive_int, default=64)
     p.add_argument("--detect-size", type=int, default=2048)
-    p.add_argument("--limit", type=int, default=None)
+    p.add_argument("--limit", type=_positive_int, default=None)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)

@@ -1,14 +1,17 @@
 """The registry itself and the Spark-side building blocks that entries of
 several families share: `QUERIES`/`register`, the idempotent staging
-helpers, the md5-prefix SQL idiom, the documents' word split, the
-3-shingle minhash signature and its band-bucket pair expansion."""
+helpers (one temporary root per driver process), the md5-prefix SQL
+idiom, the documents' word split, the 3-shingle minhash signature and its
+band-bucket pair expansion."""
 
 from __future__ import annotations
 
+import atexit
 import functools
-import glob
 import hashlib
 import os
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -31,75 +34,50 @@ def register(name: str, sql: str):
 
 # idempotent staging (shared by the streaming entries and the staged
 # tables below): a deterministic per-(sf_dir, tag) scratch dir behind a
-# _STAGED marker. Scoped per-user under a mode-0700 base (multi-user hosts
-# must not share or collide on staged state), and keyed by a digest of the
-# package's own source, so a staged dir is reused only by the build that
-# wrote it: an edit to any builder (or to anything it calls) moves every key.
+# _STAGED marker, under one mkdtemp root per driver process. Every staged
+# dir is therefore built by the code this process runs, and the root goes
+# away when the process exits.
 @functools.cache
-def _code_digest(pkg_dir: str = os.path.dirname(os.path.dirname(__file__))) -> str:
-    """md5 over every ``.py`` file under ``pkg_dir`` (relative path and
-    bytes, in sorted relative-path order); computed once per process."""
-    h = hashlib.md5()
-    for path in sorted(glob.glob("**/*.py", root_dir=pkg_dir, recursive=True)):
-        h.update(path.encode() + b"\0")
-        with open(os.path.join(pkg_dir, path), "rb") as fh:
-            h.update(fh.read() + b"\0")
-    return h.hexdigest()
+def _stage_root() -> str:
+    """This process's staging root, made on first use and removed at exit
+    by the process that made it (a forked child inherits the handler but
+    not the right to delete its parent's root)."""
+    root = tempfile.mkdtemp(prefix="mit_stage_")
+    owner = os.getpid()
+
+    def _remove() -> None:
+        if os.getpid() == owner:
+            shutil.rmtree(root, ignore_errors=True)
+
+    atexit.register(_remove)
+    return root
 
 
 def _staging_dir(sf_dir: str, tag: str) -> str:
-    import getpass
-    import tempfile
-
-    try:
-        user = getpass.getuser()
-    except Exception:  # no passwd entry for the uid
-        user = str(os.getuid()) if hasattr(os, "getuid") else "u"
-    root = os.path.join(tempfile.gettempdir(), f"mit_stage_{user}")
-    os.makedirs(root, exist_ok=True)
-    os.chmod(root, 0o700)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{tag}:{_code_digest()}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(root, f"{tag}_{key}")
+    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    return os.path.join(_stage_root(), f"{tag}_{key}")
 
 
 def _staged(base: str, build) -> None:
-    """Run ``build()`` exactly once per staging dir, safe across concurrent
-    processes sharing the per-user staging root (e.g. the oracle tests and a
-    bench run): an exclusive fcntl lock on a SIBLING lockfile serializes the
-    marker-check/build, so a second process either sees the finished marker
-    or blocks until the first finishes — it can never read a half-built dir
-    or rmtree one mid-build (ADVICE r3). The lockfile sits beside the dir
-    (not inside it) because the clean-start rmtree must not delete the very
-    inode the lock is held on. No marker means any partial state is from a
-    crashed setup, so start clean; the marker is written only after build()
-    returns, while the lock is still held."""
-    import fcntl
-    import shutil
-
+    """Run ``build()`` once per staging dir. The marker is written only
+    after build() returns, so a dir without it holds what a build that
+    raised left behind: wipe it and build again."""
     marker = os.path.join(base, "_STAGED")
-    if os.path.exists(marker):  # fast path: a marked dir is complete + immutable
+    if os.path.exists(marker):  # a marked dir is complete and immutable
         return
-    with open(base + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(marker):  # another process built it while we waited
-                return
-            shutil.rmtree(base, ignore_errors=True)
-            os.makedirs(base, exist_ok=True)
-            build()
-            with open(marker, "w") as fh:
-                fh.write("ok")
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+    build()
+    with open(marker, "w") as fh:
+        fh.write("ok")
 
 
 def _staged_table(
     spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    """``build()``'s frame written to parquet once per sf_dir and build
-    (behind ``_staged``), then read back; every call returns the read."""
+    """``build()``'s frame written to parquet once per sf_dir in this
+    process (behind ``_staged``), then read back; every call returns the
+    read."""
     base = _staging_dir(sf_dir, tag)
     path = os.path.join(base, "table")
     _staged(base, lambda: build().write.parquet(path))

@@ -219,7 +219,7 @@ _QSK_QS = (50, 90, 99)  # evaluated quantiles (percent)
 def _staged_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_clusters' (doc_id, cluster_id) labels as a staged parquet
     artifact: the iterative fixpoint runs at most once per sf_dir and
-    build; every downstream consumer (split_leakage_audit) reads the
+    process; every downstream consumer (split_leakage_audit) reads the
     materialized table — the same discipline as the kmeans labels staging."""
     return _staged_table(
         spark, sf_dir, "dedup_labels", lambda: dedup_clusters(spark, sf_dir)
@@ -275,8 +275,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit PROVES the cluster-aware split is safe rather than asserting
     it. Scale shape: pure composition of two staged artifacts — the
     verified-pairs parquet (the SAME staging dedup_clusters reads, built
-    at most once per sf_dir and build) and the staged cluster labels (the
-    fixpoint also runs at most once per sf_dir and build) — so the audit
+    at most once per sf_dir and process) and the staged cluster labels (the
+    fixpoint also runs at most once per sf_dir and process) — so the audit
     itself is two pair-graph-sized joins plus counts, never a corpus-wide pass;
     md5-split assignment is deterministic and coordination-free (any
     worker can re-derive any doc's side). Output is integer counts + one

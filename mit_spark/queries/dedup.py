@@ -673,7 +673,7 @@ def minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified near-dup pair list (doc_a, doc_b) as a staged parquet
-    artifact — built at most once per sf_dir and build (the expensive
+    artifact — built at most once per sf_dir and process (the expensive
     minhash->verify pipeline) and read by every consumer (dedup_clusters,
     split_leakage_audit)."""
     return _staged_table(
@@ -732,7 +732,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence accounting.
 
     The verified-pairs input (the expensive minhash->verify pipeline) is
-    STAGED to parquet once per sf_dir and build behind a _STAGED marker —
+    STAGED to parquet once per sf_dir and process behind a _STAGED marker —
     repeated invocations (the bench's best-of-2, gate + bench in one
     session) read the staged pair list instead of recomputing the candidate
     generation; at production scale this is the "verified pairs are a
@@ -975,7 +975,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     least/greatest-ordered so each unordered pair lands in one cell.
 
     Scale shape: pure composition over the STAGED verified-pair parquet
-    (built at most once per sf_dir and build — the audit never recomputes
+    (built at most once per sf_dir and process — the audit never recomputes
     minhash) — two id-keyed equi-joins attach source metadata
     (pair-graph-sized; broadcast at this sf, SMJ on bucketed doc_id at
     scale), then ONE map-side-combinable groupBy down to at most
@@ -1071,7 +1071,7 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude smaller than the corpus (candidates were LSH-restricted,
     then Jaccard-verified), and it is read from the staged pair parquet
     (same artifact dedup_clusters consumes — built once per sf_dir and
-    build). Each iteration is one equi-join of edges with the rank table
+    process). Each iteration is one equi-join of edges with the rank table
     (both keyed on node — co-partitionable, AQE can broadcast the rank side
     for small components) and one combinable sum keyed on dst. Degrees ride with the
     rank state so no per-iteration re-join against a degree table. No
@@ -1112,7 +1112,7 @@ def _incdedup_batch(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame
     """The synthetic incoming-batch table (doc_id, words) shared by
     incremental_dedup and bloom_dedup_screen: exact re-posts (%10==3),
     near re-crawls (%10==7, last word dropped), fresh docs (%10==5,
-    reversed). STAGED to parquet once per sf_dir and build — in production
+    reversed). STAGED to parquet once per sf_dir and process — in production
     the batch IS a materialized table, and deriving it lazily made every
     downstream branch re-scan documents (~90 scans unstaged vs ~6)."""
 
@@ -1324,7 +1324,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first; here the anti-join's serial barrier costs more than the spared
     shingling (A/B'd at sf0.1), so both stages run as independent chains.
 
-    The synthetic batch is STAGED to parquet once per sf_dir and build (same
+    The synthetic batch is STAGED to parquet once per sf_dir and process (same
     idempotent-marker discipline as streaming_drain): in production the
     incoming batch IS a materialized table, and deriving it lazily here
     made every downstream branch re-scan documents (~90 scans in the

@@ -362,7 +362,7 @@ def _exact_panel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_exact_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact ground-truth top-k for the recall panel as a staged parquet
-    artifact — built at most once per sf_dir and build (the brute-force
+    artifact — built at most once per sf_dir and process (the brute-force
     pass folds an interpreted L2 over |panel| x n pairs, the dominant cost
     of every recall eval) and read by all three consumers
     (`ann_recall_eval`, `ann_multiprobe_recall`, `embedding_quant_recall`).
@@ -1237,7 +1237,7 @@ def _kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is a materialized upstream table' shape every composing
     consumer (mixture weights, outlier prune, balanced sampling) would read
     at production scale instead of re-running Lloyd's per query. Built once
-    per sf_dir and build behind the _STAGED marker (same discipline as the
+    per sf_dir and process behind the _STAGED marker (same discipline as the
     dedup pair cache); bit-identical to a live embedding_kmeans run by
     construction."""
     return _staged_table(

@@ -341,11 +341,11 @@ def streaming_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped doc, or a missed detection all flip the hash.
 
     IDEMPOTENT builder: the staging dir is derived deterministically from
-    sf_dir and this build's code (no mkdtemp; per-user — see _staging_dir),
+    sf_dir under this process's staging root (see _staging_dir),
     arrival-file setup runs once behind a _STAGED marker, and re-invocations
     only re-drain the already-checkpointed stream (a no-op append) — calling
-    the builder N times yields identical output and writes no new files
-    after the first call."""
+    the builder N times in one process yields identical output and writes
+    no new files after the first call."""
     from mit_spark.config import DetectorOptions, PipelineConfig
     from mit_spark.sources.docs_source import load_docs
     from mit_spark.streaming.micro_batch import run_stream
@@ -521,7 +521,7 @@ def streaming_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_events(sf_dir: str) -> str:
     """The events table staged as a directory of parquet files — the file
-    stream source requires a DIRECTORY; built once per sf_dir and build
+    stream source requires a DIRECTORY; built once per sf_dir and process
     behind a marker (same idempotent pattern as streaming_drain) and shared
     by every streaming entry that reads the event stream."""
     import shutil

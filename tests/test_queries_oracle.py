@@ -169,14 +169,12 @@ def test_sequence_pack_scales_shards(spark, ddb):
 
 def test_incremental_dedup_staging_idempotent(spark, tmp_path, monkeypatch):
     """The staged batch table must be built exactly once per sf_dir and
-    repeated invocations must return identical statuses even when the
-    staging root starts empty (fresh host) or already populated."""
+    repeated invocations must return identical statuses whether the staging
+    root starts empty or already holds the batch."""
     import mit_spark.queries as q
+    from mit_spark.queries import core
 
-    monkeypatch.setenv("TMPDIR", str(tmp_path))
-    import tempfile
-
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(core, "_stage_root", lambda: str(tmp_path))
     r1 = q.incremental_dedup(spark, SF_DIR).collect()
     r2 = q.incremental_dedup(spark, SF_DIR).collect()
     assert r1 == r2

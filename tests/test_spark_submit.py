@@ -132,3 +132,17 @@ def test_cli_exits_1_when_a_bucket_fails(tmp_path):
     metrics = json.loads(run.stdout.strip().splitlines()[-1])
     assert metrics["buckets_failed"] == 4
     assert metrics["buckets_processed"] == 0
+
+
+@pytest.mark.parametrize("flag", ["--buckets", "--limit"])
+@pytest.mark.parametrize("value", ["0", "-3"])
+def test_cli_rejects_a_count_below_one(flag, value, tmp_path, capsys):
+    """`--buckets 0` would run no bucket and `--limit 0` the whole corpus;
+    argparse refuses both before any Spark session starts."""
+    from mit_spark.main import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", SF_DIR, "--output", str(tmp_path / "out"), flag, value])
+    assert exc.value.code == 2
+    assert f"argument {flag}: must be at least 1" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()

@@ -40,18 +40,15 @@ def test_streaming_drain_builder_idempotent(spark):
     (as a hashing gate may) yields identical rows and re-stages nothing —
     the arrival files live behind a deterministic _STAGED marker."""
     import glob
-    import hashlib
-    import os
-    import tempfile
 
-    from mit_spark.queries import QUERIES
+    from mit_spark.queries import QUERIES, _staging_dir
 
     builder, _ = QUERIES["streaming_drain"]
     sf_dir = "/root/testdata/sf0.001"
     r1 = sorted(tuple(r) for r in builder(spark, sf_dir).collect())
-    key = hashlib.md5((os.path.abspath(sf_dir) + ":v2").encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"mit_stream_{key}")
+    base = _staging_dir(sf_dir, "stream")
     files_before = sorted(glob.glob(f"{base}/in/*.parquet"))
+    assert files_before
     r2 = sorted(tuple(r) for r in builder(spark, sf_dir).collect())
     assert r1 == r2
     assert sorted(glob.glob(f"{base}/in/*.parquet")) == files_before
